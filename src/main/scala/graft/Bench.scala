@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR
@@ -66,20 +65,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // parsed once: empty, overflowing or `*` values stay strings
+    val cpusN = scala.util.Try(cpus.toInt).toOption
     val nSamples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "3").toInt.max(1)
     // queries measuring under this on every sample so far skip later
     // passes (single-sample mode); 0 disables the skip entirely
     val fastCutoff = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_FAST_CUTOFF", "0.5").toDouble
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(cpus, cpus, "WARN")
     // Absorb JVM/codegen/session warm-up outside the measured loop so
     // the alphabetically-first query doesn't carry it (r1: the first
     // query absorbed ~10s of warm-up). The warm-up must include a real
@@ -418,7 +411,7 @@ object Bench {
     val mref = math.rint(microRef * 10000) / 10000
     // cpus as a JSON number when numeric (the driver's shape), quoted
     // otherwise (local[*]-style experiments must not break the line)
-    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
+    val cpusJson = cpusN.fold("\"" + cpus + "\"")(_.toString)
     val fullLine =
       s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qs,"queries_norm":$qsNorm,"samples":$samplesJson,"micros":$microsJson,"n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"fast_cutoff":$fastCutoff,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"families":$familiesJson,"sf":"$sfDir"}"""
     // only full runs refresh the committed artifact — an args-filtered
@@ -430,10 +423,8 @@ object Bench {
     // samples were lost to the repo. `cpus` in the line itself keeps
     // every artifact self-describing either way.
     val hostCores = Runtime.getRuntime.availableProcessors
-    val artifactName =
-      if (cpus.forall(_.isDigit) && cpus.toInt < hostCores)
-        s"bench_queries_c$cpus.json"
-      else "bench_queries.json"
+    val artifactName = cpusN.filter(_ < hostCores)
+      .fold("bench_queries.json")(n => s"bench_queries_c$n.json")
     if (only.isEmpty) java.nio.file.Files.write(
       java.nio.file.Paths.get(artifactName),
       (fullLine + "\n").getBytes("UTF-8"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: print the formatted physical plan of named queries
   * (all when no names given). Usage:
@@ -9,15 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).toSet
-    val spark = SessionTuning(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionTuning.local("4", "4", "ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {
         println(s"\n===== $name =====")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic ×K scale smoke for the bench-floor families (graph,
@@ -36,15 +36,7 @@ object ScaleSmoke {
     // fixed partition count — the knob a real cluster turns with data
     // volume. Overridable so the smoke can DEMONSTRATE the knob.
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(cpus, shuffleParts, "WARN")
     val shift = 1000000000L
 
     def reps(df: DataFrame): DataFrame =

@@ -34,6 +34,27 @@ import org.apache.spark.sql.SparkSession
   * recommended production baseline.
   */
 object SessionTuning {
+  /** The session every runner main builds: master `local[cpus]`
+    * (`local[*]` accepted), the given shuffle-partition count (`*` =
+    * the host's cores), the shared UTC / no-UI / nanos-as-long / AQE
+    * configs, [[apply]]'s join tuning, and the log level. */
+  def local(cpus: String, shufflePartitions: String,
+      logLevel: String): SparkSession = {
+    val parts =
+      if (shufflePartitions != "*") shufflePartitions
+      else Runtime.getRuntime.availableProcessors.toString
+    val spark = apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", parts)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val preferSmj =
       sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")

@@ -1,10 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry of the suite's memoized SHARED-BUILD artifacts (the
-  * co-purchase edge frame, the triangle bundle, the BM25 run, the
-  * unigram-LM training run, the Lloyd k-means bundle).
+  * co-purchase edge frame, the triangle bundle, the Brandes bundle,
+  * the near-dup clusters, the BM25 run, the unigram-LM training run,
+  * the Lloyd k-means bundle).
   *
   * Why this exists (r12 advice): a memoized bundle built lazily inside
   * the first consuming query makes the bench artifact dishonest — the
@@ -18,12 +22,34 @@ import org.apache.spark.sql.SparkSession
   * while consuming queries keep measuring exactly their compose-only
   * cost.
   *
+  * The memo contract ([[memo]]), stated once for every build:
+  *   - Held per (session, fixture dir). Sessions key a `WeakHashMap`
+  *     by object IDENTITY: a stopped session's frames — and the
+  *     checkpoint blocks they pin — become collectable with it, a
+  *     recycled identity hash never aliases a dead session's frames,
+  *     and `spark.newSession()` gets frames of its own.
+  *   - One map per build. A builder may look up another memo (the
+  *     triangle and Brandes bundles read the co-purchase frame); a
+  *     single shared map would re-enter its own `computeIfAbsent`,
+  *     which throws "Recursive update" or deadlocks.
+  *   - Bench hygiene only: every consumer's answer is identical to
+  *     rebuilding inline, and each oracle still derives the artifact
+  *     independently.
+  *   - `clear` releases what the memo owned: each held frame whose
+  *     logical plan is a single `LogicalRDD` leaf (the checkpoint the
+  *     builder made itself, via `localCheckpoint(true)` or
+  *     `localCheckpointFreshStats`) has that RDD unpersisted,
+  *     blocking, so its storage is free on return instead of whenever
+  *     a JVM GC lets the ContextCleaner run. Held frames that are
+  *     still lazy plans are only dropped — their leaves may belong to
+  *     someone else.
+  *
   * Registration happens in each query pack's object initializer, which
   * `SparkEntry.queries` forces before any bench/verify loop runs.
   */
 object SharedBuilds {
 
-  /** One memoized artifact: `clear` drops the given session's cached
+  /** One memoized artifact: `clear` releases the given session's held
     * frames (so `force` rebuilds from scratch); `force(session, dir)`
     * builds and MATERIALIZES the artifact for a fixture dir (the
     * builders end in eager `localCheckpoint(true)`, so returning is
@@ -32,12 +58,37 @@ object SharedBuilds {
       clear: SparkSession => Unit,
       force: (SparkSession, String) => Unit)
 
-  private val reg =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  private val reg = new ConcurrentHashMap[String, Entry]()
 
-  def register(name: String)(clear: SparkSession => Unit)(
-      force: (SparkSession, String) => Unit): Unit =
-    reg.put(name, Entry(name, clear, force))
+  /** Memoize `build` under `name` (see the contract above) and register
+    * it; returns the memoized lookup. `T` is a frame or a tuple of
+    * frames. */
+  def memo[T](name: String)(
+      build: (SparkSession, String) => T): (SparkSession, String) => T = {
+    val held = new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, T]]()
+    val lookup = (s: SparkSession, d: String) =>
+      held.synchronized {
+        held.computeIfAbsent(s, _ => new ConcurrentHashMap())
+      }.computeIfAbsent(d, _ => build(s, d))
+    val clear = (s: SparkSession) =>
+      held.synchronized(Option(held.get(s))).foreach { byDir =>
+        byDir.keySet.asScala.foreach(d =>
+          Option(byDir.remove(d)).foreach(release))
+      }
+    reg.put(name, Entry(name, clear, (s, d) => { lookup(s, d); () }))
+    lookup
+  }
+
+  /** Unpersist every checkpoint leaf among a held value's frames. */
+  private def release(held: Any): Unit = held match {
+    case df: Dataset[_] => df.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
+      case _ =>
+    }
+    case frames: Product => frames.productIterator.foreach(release)
+    case _ =>
+  }
 
   /** All registered artifacts, name-sorted — dependency order is by
     * NAME (e.g. `copurchase_edges` sorts before `tri_bundle`), so a

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions.expr
   * Mirrors the reference's fixed-schema warehouse discipline (explicit
   * DDL everywhere — /root/reference/ddl/hive/crypto_raw/candles_day.ddl:3-31):
   * tables are loaded by name with their on-disk schema, never inferred
-  * from samples, and registered as temp views so the SQL surface matches
-  * the DataFrame surface.
+  * from samples.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -38,8 +37,4 @@ object Tables {
       }
     else df
   }
-
-  /** Register every fixture table as a temp view named after itself. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

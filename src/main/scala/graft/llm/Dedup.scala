@@ -1271,6 +1271,12 @@ object Dedup {
     * already folded into the prior labels, or involves a new doc and
     * rides the delta), while the iterated frame tracks new-batch
     * fan-out instead of accumulated corpus size.
+    *
+    * `isNewId` must be a pure function of the id column it is passed:
+    * it is applied to `doc_id` and to both pair endpoints, and the
+    * old×old / involving-new split is exact only when every
+    * application to the same id agrees (no randomness, no
+    * non-deterministic expression, no other column).
     */
   def dupClustersDelta(docs: DataFrame, isNewId: Column => Column,
       maxHamming: Int = 3, maxIters: Int = 50,

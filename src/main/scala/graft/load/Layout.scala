@@ -58,18 +58,6 @@ object Layout {
       .drop("mn_a", "mx_a", "mn_b", "mx_b")
   }
 
-  /** The layout pass: Z-key the frame, then range-partition and sort
-    * by the key so downstream file writes get rectangle-clustered
-    * min/max stats on BOTH dimensions. */
-  def zOrderBy(df: DataFrame, colA: String, colB: String, bits: Int = 10,
-      partitions: Int = 0): DataFrame = {
-    val keyed = withZKey(df, colA, colB, bits)
-    val ranged =
-      if (partitions > 0) keyed.repartitionByRange(partitions, col("zkey"))
-      else keyed.repartitionByRange(col("zkey"))
-    ranged.sortWithinPartitions(col("zkey"))
-  }
-
   /** Append a HILBERT-curve key over two long/int columns — the
     * better-locality sibling of [[withZKey]]: consecutive Hilbert
     * keys are always grid neighbors, where the Z curve jumps across
