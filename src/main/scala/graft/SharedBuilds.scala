@@ -2,8 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Dataset, GraftSqlShims, SparkSession}
 
 /** Registry of the suite's memoized SHARED-BUILD artifacts (the
   * co-purchase edge frame, the triangle bundle, the Brandes bundle,
@@ -82,10 +81,7 @@ object SharedBuilds {
 
   /** Unpersist every checkpoint leaf among a held value's frames. */
   private def release(held: Any): Unit = held match {
-    case df: Dataset[_] => df.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
-      case _ =>
-    }
+    case df: Dataset[_] => GraftSqlShims.releaseCheckpoint(df)
     case frames: Product => frames.productIterator.foreach(release)
     case _ =>
   }

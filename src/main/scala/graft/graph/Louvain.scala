@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** One-level Louvain modularity ascent (Blondel et al. 2008, phase 1)
@@ -36,13 +37,23 @@ import org.apache.spark.sql.functions._
   * result — rounds are bit-identical cross-engine (the [[LabelProp]]
   * determinism contract) and the oracle unrolls them exactly.
   *
-  * Scale shape per round: one src-keyed equi-join for the
-  * node→community edge counts, two bounded (|communities|-row) degree
-  * aggregates, the candidate assembly as hash equi-joins on id/
-  * community, and two argmin hash aggregates (per node, then per
-  * community) — no window sorts, shuffle volume O(|E|) on the join
-  * keys. Labels eagerly localCheckpointed per round (Pregel
-  * discipline).
+  * Scale shape per round: the edge frame is checkpointed once,
+  * hash-partitioned on `src`, with each node's strength on its rows
+  * and one (i, i, 0) marker row per node; one node-state checkpoint
+  * `(id, c, k, dc)` carries each node's community, strength and
+  * community degree sum (a window column). The state joins the edges
+  * ONCE, on `dst`, with no broadcast hint — the marker's join brings
+  * the node's own state — and its measured checkpoint size lets the
+  * planner broadcast it while it is small; a state too big to
+  * broadcast is shuffle-joined instead (the edges shuffle on `dst`,
+  * then once more on `src` for the aggregates). The per-(node,
+  * community) weights and each node's best move are two `src`-keyed
+  * aggregates with no exchange between them; the handshake is one
+  * aggregate of at most |communities| rows, whose winners are counted
+  * and applied in one id-keyed aggregate over state ∪ winners; the
+  * window's shuffle on c closes the round. 5 Spark jobs a round under
+  * AQE at bench scale. Each round releases the state it replaces, and
+  * the edge checkpoint is released on return.
   */
 object Louvain {
 
@@ -77,7 +88,7 @@ object Louvain {
       .select(col("id"), col("c").as("community"), col("csize"))
   }
 
-  /** Bare final labels of [[oneLevelW]] — (id, c, k), checkpointed
+  /** Bare final labels of [[oneLevelW]] — (id, c, k, dc), checkpointed
     * when `checkpoint` — for composed callers ([[twoLevel]]) that do
     * not need the size decoration: the terminal groupBy + join (and
     * one more checkpoint of their output) is skipped (r17, guide
@@ -85,90 +96,90 @@ object Louvain {
     */
   private[graft] def oneLevelLabelsW(edges: DataFrame, rounds: Int = 4,
       checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
+    def cp(df: DataFrame, leaf: DataFrame => DataFrame =
+        GraftSqlShims.localCheckpointFreshStats): DataFrame =
+      if (checkpoint) leaf(df) else df
+    // edges hash-partitioned on src ONCE (an explicit count, so AQE
+    // cannot coalesce it away): every src-keyed step below reads the
+    // checkpoint in place. Each row carries its src's strength k;
+    // self-loops are then dropped (a loop only adds to k) and each
+    // node's first row also emits an (i, i, 0) MARKER, whose dst-side
+    // join brings the node's own state to its src partition.
+    val bySrc = Window.partitionBy(col("src")).orderBy(col("dst"))
     val e = cp(edges.select(col("a").as("src"), col("b").as("dst"),
-      col("w")))
-    // labels CARRY the node strength k (guide §2.4 — two operations
-    // keyed the same way share one pass): dc and the candidate
-    // assembly used to re-join the separate degree table every round
-    val m = cp(e.agg(sum(col("w")).as("m"))) // 1 row, aggregated ONCE
-    var lbl = cp(e.groupBy(col("src").as("id"))
-      .agg(sum(col("w")).as("k"))
-      .select(col("id"), col("id").as("c"), col("k")))
-    var round = 1
+        col("w").cast("long").as("w"))
+      .repartition(edges.sparkSession.conf
+        .get("spark.sql.shuffle.partitions").toInt, col("src"))
+      .select(col("src"), col("dst"), col("w"),
+        sum(col("w")).over(bySrc.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("k"),
+        row_number().over(bySrc).as("rn"))
+      .select(col("src"), col("k"), explode(array(
+        struct(col("dst"), col("w"), (col("src") =!= col("dst")).as("keep")),
+        struct(col("src").as("dst"), lit(0L).as("w"),
+          (col("rn") === 1).as("keep")))).as("x"))
+      .where(col("x.keep")).select("src", "k", "x.dst", "x.w"),
+      GraftSqlShims.localCheckpointPartitioned)
+    val nodes = e.where(col("src") === col("dst"))
+    val m = nodes.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
+    // node state (id, c, k, dc): community c, strength k, and the
+    // community's degree sum dc — singletons start with dc = k
+    var st = cp(nodes.select(col("src").as("id"), col("src").as("c"),
+      col("k"), col("k").as("dc")))
     var converged = false
-    while (round <= rounds && !converged) {
-      // community degree sums under the current labels — off lbl's own
-      // k, no join
-      val dc = lbl.groupBy(col("c")).agg(sum(col("k")).as("dc"))
-      // k_{i,c}: the node's edge weight into each neighboring community
-      // (self-loops excluded — they move with the node), annotated with
-      // the mover's own (c, k) in ONE join; feeds candidates AND the
-      // ka lookup — checkpoint the fan-out
-      val kcl = cp(e.where(col("src") =!= col("dst"))
-        .join(lbl.select(col("id").as("dst"), col("c").as("cn")), "dst")
-        .groupBy(col("src").as("id"), col("cn"))
-        .agg(sum(col("w")).as("kc"))
-        .join(lbl, "id"))
-      val ka = kcl.where(col("cn") === col("c"))
-        .select(col("id"), col("kc").as("ka"))
-      val cand = kcl.where(col("cn") =!= col("c"))
-        .select(col("id"), col("c").as("a"), col("cn").as("b"),
-          col("kc").as("kb"), col("k"))
-        .join(dc.select(col("c").as("a"), col("dc").as("da")), "a")
-        .join(dc.select(col("c").as("b"), col("dc").as("db")), "b")
-        .join(ka, Seq("id"), "left").na.fill(0L, Seq("ka"))
-        .crossJoin(broadcast(m))
-        .select(col("id"), col("a"), col("b"),
-          (lit(2) * (col("m") * (col("kb") - col("ka")) -
-            col("k") * (col("db") - col("da") + col("k")))).as("dq"))
+    for (_ <- 1 to rounds if !converged) {
+      // k_{i,b} per (node, community b of a neighbor) with b's degree
+      // sum d_b; the marker's group is the node's own community a
+      // (its kc is k_{i,a\i}). Then each node's best move: ΔQ(b) =
+      // 2(M·k_{i,b} − k_i·d_b) + a per-node constant, so the argmax
+      // ranks by that term alone (ties to the smallest b) and the
+      // exact ΔQ is formed for the winner only. One join, and two
+      // src-keyed aggregates with no exchange between them.
+      val kc = e.join(st.select(col("id").as("dst"), col("c").as("cn"),
+          col("dc").as("db")), "dst")
+        .groupBy(col("src"), col("k"), col("cn"), col("db"))
+        .agg(sum(col("w")).as("kc"),
+          max(col("src") === col("dst")).as("own"))
+      val nb = kc.groupBy(col("src").as("id"), col("k"))
+        .agg(max(when(col("own"), struct(col("cn").as("a"),
+            col("db").as("da"), col("kc").as("ka")))).as("o"),
+          min(when(!col("own"), struct(
+            (col("k") * col("db") - lit(m) * col("kc")).as("r"),
+            col("cn").as("b"), col("kc").as("kb"), col("db")))).as("mv"))
+        .select(col("id"), col("o.a"), col("mv.b"),
+          (lit(2) * (lit(m) * (col("mv.kb") - col("o.ka")) - col("k") *
+            (col("mv.db") - col("o.da") + col("k")))).as("dq"))
         .where(col("dq") > 0)
-      // each node's best move: argmax ΔQ, ties to the smallest target
-      val nb = cand
-        .groupBy(col("id"), col("a"))
-        .agg(min(struct((-col("dq")).as("nd"), col("b"))).as("mv"))
-        .select(col("id"), col("a"), col("mv.b").as("b"),
-          (-col("mv.nd")).as("dq"))
-      // community handshake: a move applies iff it ranks first among
-      // all moves touching its source AND its target community
-      val touches = nb.select(col("a").as("comm"), col("id"), col("b"),
-          col("dq"))
-        .unionByName(nb.select(col("b").as("comm"), col("id"),
-          col("b"), col("dq")))
-      val best = touches.groupBy(col("comm"))
-        .agg(min(struct((-col("dq")).as("nd"), col("id"), col("b")))
-          .as("w"))
-        .select(col("comm"), col("w.id").as("wid"), col("w.b").as("wb"))
-      val movers = nb
-        .join(best, col("a") === col("comm") &&
-          col("id") === col("wid") && col("b") === col("wb"))
-        .drop("comm", "wid", "wb")
-        .join(best, col("b") === col("comm") &&
-          col("id") === col("wid") && col("b") === col("wb"))
-        .select(col("id"), col("b").as("newc"))
-      // ONE checkpoint per round (r17, guide §1.2): the applied-move
-      // update rides the label checkpoint as a `moved` flag instead of
-      // movers getting its own eager materialization first — the
-      // fixpoint test then reads the already-materialized frame. The
-      // flag is internal only (projected away at every exit).
-      val nextLbl = cp(lbl.join(movers, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newc"), col("c")).as("c"),
-          col("k"), col("newc").isNotNull.as("moved")))
-      // FIXPOINT EARLY EXIT (pure savings, identical output): no
-      // applied moves ⇒ labels unchanged ⇒ dc/kc/cand identical next
-      // round ⇒ every remaining round is a no-op — exactly the rounds
-      // the oracle unrolls as label-preserving steps. On the no-move
-      // round the PREVIOUS label frame stays current (nextLbl is a
-      // row-identical copy), so lbl is deliberately not replaced.
-      if (checkpoint && nextLbl.where(col("moved")).isEmpty)
-        converged = true
-      else lbl = nextLbl.drop("moved")
-      round += 1
+      // community handshake: each touched community's winner is its
+      // first move by (ΔQ desc, id, b); a move applies iff it wins both
+      // its source and its target community — counted, and applied, by
+      // one id-keyed aggregate over the state and the winners
+      val best = nb.select(explode(array(col("a"), col("b"))).as("comm"),
+          col("id"), col("b"), col("dq")).groupBy(col("comm"))
+        .agg(min(struct((-col("dq")).as("nd"), col("id"), col("b"))).as("w"))
+      val wins = sum(col("win"))
+      val next = st.select(col("id"), col("c"), col("k"), lit(0).as("win"))
+        .unionByName(best.select(col("w.id").as("id"), col("w.b").as("c"),
+          lit(null).cast("long").as("k"), lit(1).as("win")))
+        .groupBy(col("id"))
+        .agg(max(col("k")).as("k"), (wins === 2).as("moved"),
+          when(wins === 2, max_by(col("c"), col("win")))
+            .otherwise(min_by(col("c"), col("win"))).as("c"))
+      // FIXPOINT EARLY EXIT (identical output): no applied moves ⇒ the
+      // state is unchanged ⇒ every remaining round is a no-op. The
+      // move count rides the state checkpoint as an observed metric.
+      val obs = Observation()
+      val nextSt = cp((if (checkpoint)
+          next.observe(obs, count(when(col("moved"), 1)).as("moves"))
+        else next)
+        .select(col("id"), col("c"), col("k"),
+          sum(col("k")).over(Window.partitionBy(col("c"))).as("dc")))
+      GraftSqlShims.releaseCheckpoint(st)
+      st = nextSt
+      converged = checkpoint && obs.get("moves") == 0L
     }
-    lbl
+    GraftSqlShims.releaseCheckpoint(e)
+    st
   }
 
   /** MULTI-LEVEL Louvain (Blondel et al. 2008, the full algorithm):
@@ -182,7 +193,7 @@ object Louvain {
     * degree sums, and the intra masses, modularity of the level-2
     * labeling ON THE ORIGINAL GRAPH is exactly the contracted graph's
     * modularity — so Q(level 2) ≥ Q(level 1) by the same per-round
-    * ascent guarantee (pinned in Round13OpsSpec via [[Modularity]]).
+    * ascent guarantee (pinned in LouvainSpec via [[Modularity]]).
     *
     * Scale shape: level 1 is [[oneLevel]] (O(|E|)-shuffle rounds); the
     * contraction is ONE groupBy on the label-annotated edge list
@@ -197,9 +208,7 @@ object Louvain {
   def twoLevel(pairs: DataFrame, rounds1: Int = 4, rounds2: Int = 4,
       checkpoint: Boolean = true): DataFrame = {
     def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
+      if (checkpoint) GraftSqlShims.localCheckpointFreshStats(df) else df
     // the level-1 label frame is already checkpointed by the ascent
     // loop — read it bare instead of decorating it with sizes and
     // re-checkpointing the projection (r17, guide §1.2: the old form

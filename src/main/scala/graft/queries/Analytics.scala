@@ -297,7 +297,7 @@ object Analytics extends QueryPack {
     // second WEIGHTED handshake ascent on the contracted graph. The
     // contraction preserves M/degree-sums/intra masses, so
     // Q(level 2) ≥ Q(level 1) on the original graph (pinned in
-    // Round13OpsSpec); the level-2 graph is orders of magnitude
+    // LouvainSpec); the level-2 graph is orders of magnitude
     // smaller — the step that makes Louvain tractable at billions of
     // edges.
     "q324_louvain_multilevel" -> ((s, d) =>

@@ -52,48 +52,6 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(direct == per)
   }
 
-  test("louvain: hand-walked moves, Q(Louvain) >= Q(LPA)") {
-    import spark.implicits._
-    def sym(es: Seq[(Long, Long)]) =
-      (es ++ es.map(_.swap)).toDF("a", "b")
-    def qMod(edges: org.apache.spark.sql.DataFrame,
-        labels: org.apache.spark.sql.DataFrame): Float =
-      graft.graph.Modularity.byPartition(edges, labels)
-        .select("q_mod").head().getFloat(0)
-    // star 10-{7,8,9}: LPA (1 round) separates hub from leaves
-    // (Q = -0.5); Louvain's handshake merges one leaf per round until
-    // all four share a community (Q = 0) — hand-walked: r1 moves 7
-    // into {10} (the id-ranked winner of the 4-way dq=6 tie), r2 adds
-    // 8 (dq=4), r3 adds 9 (dq=2), r4 idle.
-    // NOTE: Louvain keeps its default checkpointing here — each round
-    // references the label frame ~6 times, so an uncheckpointed
-    // 4-round lineage grows ~6^r and stalls Catalyst analysis
-    val star = sym(Seq((10L, 7L), (10L, 8L), (10L, 9L)))
-    val louv = graft.graph.Louvain.oneLevel(star, rounds = 4)
-    assert(louv.select("community").distinct().count() == 1)
-    val lpaStar = graft.graph.LabelProp.run(star, rounds = 1,
-        checkpoint = false)
-      .select(col("id"), col("lbl").as("community"))
-    val louvStar = louv.select(col("id"), col("community"))
-    assert(qMod(star, louvStar) == 0.0f)
-    assert(qMod(star, lpaStar) == -0.5f)
-    // barbell: both find the two triangles — equality at the optimum.
-    // Louvain hand-walk: r1 pairs (1,2) and (5,6); r2 pulls 3 into
-    // {1,2} and 4 into {5,6} (dq=32 each); r3/r4 idle.
-    val barbell = sym(Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)))
-    val louvB = graft.graph.Louvain.oneLevel(barbell, rounds = 4)
-      .select(col("id"), col("community"))
-    val got = louvB.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Set(got(1L), got(2L), got(3L)).size == 1)
-    assert(Set(got(4L), got(5L), got(6L)).size == 1)
-    assert(got(1L) != got(4L))
-    val lpaB = graft.graph.LabelProp.run(barbell, rounds = 4,
-        checkpoint = false)
-      .select(col("id"), col("lbl").as("community"))
-    assert(qMod(barbell, louvB) >= qMod(barbell, lpaB))
-  }
-
   test("tCloseness: hand-computed EMD over a three-value domain") {
     import spark.implicits._
     // global: values 1/2/3 three times each (q = 1/3 each, m = 3);

@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.concurrent.Eventually._
@@ -44,39 +42,16 @@ class SharedBuildsSpec extends AnyFunSuite {
   private def stored(id: Int): Boolean =
     spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
 
-  /** Spark jobs `f` starts: listener-counted up to a marker job, which
-    * the listener bus delivers after every earlier job start. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription("shared-builds-spec-marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
-          .getOrElse(fail("marker job never reached the listener")))
-        .takeWhile(_ != "shared-builds-spec-marker").size
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a second lookup returns the same frame and starts no Spark job") {
     val s = spark.newSession()
     val first = base(s, dir)
     val n = baseBuilds.get()
     var second: DataFrame = null
-    assert(jobsDuring { second = base(s, dir) } == 0)
+    assert(TestSpark.jobsDuring { second = base(s, dir) } == 0)
     assert(second eq first)
     assert(baseBuilds.get() == n)
     // the probe itself does see jobs: a fresh build is one
-    assert(jobsDuring(base(spark.newSession(), dir)) > 0)
+    assert(TestSpark.jobsDuring(base(spark.newSession(), dir)) > 0)
   }
 
   test("after clear the next lookup rebuilds") {

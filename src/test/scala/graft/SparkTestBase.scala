@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites. */
@@ -14,5 +16,29 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs `f` starts: listener-counted up to a marker job, which
+    * the listener bus delivers after every earlier job start. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription("test-spark-jobs-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+          .getOrElse(throw new AssertionError(
+            "marker job never reached the listener")))
+        .takeWhile(_ != "test-spark-jobs-marker").size
+    } finally sc.removeSparkListener(listener)
   }
 }
