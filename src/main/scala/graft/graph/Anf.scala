@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Approximate Neighborhood Function — the ACTUAL sketched algorithm
@@ -31,9 +31,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: init is a pure map over the node list; each round is
   * one src-keyed equi-join (|E|·≤m rows) + one (id, reg) groupBy with
-  * map-side max-combine, eagerly localCheckpointed (Pregel
-  * discipline); each hop readout is one map-side-combined per-id
-  * aggregate → one exact-long global sum. Nothing quadratic, no
+  * map-side max-combine, checkpointed per round with fresh statistics
+  * — by hand, not through [[graft.Rounds]], because every round's
+  * frame feeds the union of hop readouts materialized after the last
+  * round (the frames are released once it is); each hop readout is one
+  * map-side-combined per-id aggregate → one exact-long global sum. Nothing quadratic, no
   * window over data-sized frames.
   */
 object Anf {
@@ -106,17 +108,16 @@ object Anf {
   def neighborhood(nodes: DataFrame, edges: DataFrame,
       rounds: Int = 4): DataFrame = {
     val e = edges.select(col("a"), col("b")).localCheckpoint(true)
-    var frame = init(nodes).localCheckpoint(true)
-    var hops = Seq.empty[DataFrame]
-    for (h <- 0 to rounds) {
-      if (h > 0) frame = org.apache.spark.sql.GraftSqlShims
-        .localCheckpointFreshStats(round(frame, e))
-      hops = hops :+ estimateC(frame)
-        .agg(count(lit(1)).as("n_nodes"), sum(col("est_c")).as("anf_c"))
-        .select(lit(h).as("hop"), col("n_nodes"), col("anf_c"))
-    }
-    val per = hops.reduce(_ unionByName _)
+    var frames = Seq(init(nodes).localCheckpoint(true))
+    for (_ <- 1 to rounds) frames = frames :+
+      GraftSqlShims.localCheckpointFreshStats(round(frames.last, e))
+    val per = frames.zipWithIndex.map { case (frame, h) =>
+        estimateC(frame)
+          .agg(count(lit(1)).as("n_nodes"), sum(col("est_c")).as("anf_c"))
+          .select(lit(h).as("hop"), col("n_nodes"), col("anf_c"))
+      }.reduce(_ unionByName _)
       .localCheckpoint(true) // feeds the total row AND the output
+    (e +: frames).foreach(GraftSqlShims.releaseCheckpoint)
     val tot = broadcast(per.where(col("hop") === rounds)
       .select(col("anf_c").as("tot")))
     val cum = per.crossJoin(tot)

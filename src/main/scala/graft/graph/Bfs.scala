@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * (nodes first reached at r−1) against the edge list, then left-anti
   * subtracts everything already labeled — so per-round shuffle cost
   * tracks the frontier × degree fan-out, not the accumulated labeled
-  * set, and rounds are hash-partitioned equi-joins end to end. Labels
-  * are eagerly `localCheckpoint`ed per round (the repo's iterative
-  * discipline: the un-executed lineage would double per round).
+  * set, and rounds are hash-partitioned equi-joins end to end. The
+  * labeled set is the [[graft.Rounds]] state; the frontier is its rows
+  * of the previous hop.
   *
   * Hop distances are small exact integers — bit-identical in any
   * engine, no float anywhere — and the algorithm is
@@ -34,20 +35,17 @@ object Bfs {
   def hops(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-    var labeled = seeds.select(col("id")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(true)
-    var frontier = labeled
-    for (r <- 1 to rounds if !frontier.isEmpty) {
-      val next = e.join(frontier.select(col("id").as("a")), "a")
+    // the labeled set grows by round r's frontier; it stops growing
+    // once a frontier is empty
+    val labeled = Rounds.iterate(seeds.select(col("id")).distinct()
+        .withColumn("hop", lit(0)), rounds) { (labeled, r) =>
+      labeled.unionByName(e
+        .join(labeled.where(col("hop") === r - 1)
+          .select(col("id").as("a")), "a")
         .select(col("b").as("id")).distinct()
         .join(labeled.select("id"), Seq("id"), "left_anti")
-        .withColumn("hop", lit(r))
-        .transform(org.apache.spark.sql.GraftSqlShims
-          .localCheckpointFreshStats)
-      labeled = org.apache.spark.sql.GraftSqlShims
-        .localCheckpointFreshStats(labeled.unionByName(next))
-      frontier = next
-    }
+        .withColumn("hop", lit(r)))
+    }(Rounds.until(count(lit(1)))((prev, n) => prev.contains(n)))
     nodes.select(col("id"))
       .join(labeled, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("hop"), lit(-1)).as("hop"))

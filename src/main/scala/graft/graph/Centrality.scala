@@ -38,9 +38,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: per-round shuffle is frontier×degree on (src, id)
   * hash keys (the [[Bfs]] frontier contract, with the source
   * dimension multiplying width by k — choose k accordingly); per
-  * level one groupBy; per-round eager checkpoint with fresh stats
-  * (the repo's Pregel discipline). No window sorts, no driver loops
-  * over nodes.
+  * level one groupBy; per-round eager checkpoint with fresh stats,
+  * by hand rather than through [[graft.Rounds]], because the forward
+  * table and the terms are unions of every round's frame. No window
+  * sorts, no driver loops over nodes.
   */
 object Centrality {
 

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected edge list —
@@ -29,13 +30,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: every round is one edge→label equi-join plus a
   * node-keyed min aggregate (partial aggregation applies) plus the
   * jump join — all hash-partitioned on the node key, nothing
-  * collected. Labels are eagerly `localCheckpoint`ed per round: they
-  * feed the next round TWICE, so without lineage truncation the
-  * un-executed plan doubles per round (the GraphX-Pregel checkpoint
-  * pattern). Convergence is a 1-row Σlabel fixpoint test — labels only
-  * ever decrease, so the sum strictly decreases until done (decimal
-  * sum: Σ of 64-bit ids overflows a long at warehouse row counts, and
-  * ANSI mode would rightly abort).
+  * collected. The labels are the [[graft.Rounds]] state (they feed the
+  * next round twice). Convergence is a Σlabel fixpoint test observed on
+  * that state — labels only ever decrease, so the sum strictly
+  * decreases until done (decimal sum: Σ of 64-bit ids overflows a long
+  * at warehouse row counts, and ANSI mode would rightly abort).
   */
 object ConnectedComponents {
 
@@ -57,15 +56,13 @@ object ConnectedComponents {
     val e = e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
+    GraftSqlShims.releaseCheckpoint(e0)
     // round 0 fused: label(v) = min(v, min neighbor); also defines the
     // active (edge-touched) vertex set — isolated nodes skip the loop
-    var labels = e.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("component"))
-      .localCheckpoint(true)
-    var it = 0
     var done = false
-    var prevSum: java.math.BigDecimal = null
-    while (!done && it < maxIters) {
+    val labels = Rounds.iterate(e.groupBy(col("src").as("id"))
+        .agg(least(min(col("dst")), first(col("src"))).as("component")),
+        maxIters) { (labels, _) =>
       val prop = e
         .join(labels.select(col("id").as("src"), col("component")), "src")
         .groupBy(col("dst").as("id"))
@@ -76,20 +73,15 @@ object ConnectedComponents {
             .as("component"))
       // pointer jump — component values are always node ids, so the
       // self-lookup hits
-      val next = m1.join(
+      m1.join(
           m1.select(col("id").as("component"), col("component").as("c2")),
           Seq("component"), "left")
         .select(col("id"),
           coalesce(col("c2"), col("component")).as("component"))
-        .transform(org.apache.spark.sql.GraftSqlShims
-          .localCheckpointFreshStats)
-      val s = next.agg(sum(col("component").cast("decimal(38,0)")))
-        .first.getDecimal(0)
-      done = s == prevSum
-      prevSum = s
-      labels = next
-      it += 1
-    }
+    }(Rounds.until(sum(col("component").cast("decimal(38,0)"))) {
+      (prev, s) => done = prev.contains(s); done
+    })
+    GraftSqlShims.releaseCheckpoint(e)
     // A silent partial merge would give callers (dupClusters,
     // clusterDedup) wrong clusters with no signal — fail loudly.
     // Pointer jumping converges in O(log diameter), so hitting the

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** HITS (Kleinberg) hubs & authorities in exact fixed-point integers
@@ -24,9 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each half-round is one equi-join of the edge list
   * against a score frame + a dst- (or src-)keyed long-sum with
-  * map-side partials + the broadcast 1-row pivot; scores eagerly
-  * localCheckpoint per round (the Pregel-family discipline). Nodes
-  * without in-(out-)edges keep score 0 via the spine left join.
+  * map-side partials + the broadcast 1-row pivot; the hub frame is
+  * the [[graft.Rounds]] state. Nodes without in-(out-)edges keep
+  * score 0 via the spine left join.
   */
 object Hits {
 
@@ -39,12 +40,9 @@ object Hits {
     *         `auth` for the dst side, score in 10⁻⁶ units
     */
   def run(hubs: DataFrame, auths: DataFrame, edges: DataFrame,
-      iters: Int = 5, checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
-    val e = cp(edges.select(col("src"), col("dst")))
+      iters: Int = 5): DataFrame = {
+    val e = GraftSqlShims.localCheckpointFreshStats(
+      edges.select(col("src"), col("dst")))
     val hSpine = hubs.select(col("id"))
     val aSpine = auths.select(col("id"))
     def renorm(scores: DataFrame): DataFrame = {
@@ -58,9 +56,9 @@ object Hits {
               * scale + 0.5).cast("long"))
             .otherwise(col("s")).as("s"))
     }
-    var h = cp(hSpine.select(col("id"), lit(scale).as("s")))
     var a: DataFrame = null
-    for (k <- 1 to iters) {
+    val h = Rounds.iterate(hSpine.select(col("id"), lit(scale).as("s")),
+        iters) { (h, k) =>
       val aSums = e.join(h, col("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("s")).as("t"))
       // ONE materialization per full round (r17, guide §1.2): the
@@ -73,13 +71,14 @@ object Hits {
       a = renorm(aSpine
         .join(aSums, col("id") === col("dst"), "left_outer")
         .select(col("id"), coalesce(col("t"), lit(0L)).as("s")))
-      if (k == iters) a = cp(a)
+      if (k == iters) a = GraftSqlShims.localCheckpointFreshStats(a)
       val hSums = e.join(a, col("dst") === col("id"))
         .groupBy(col("src")).agg(sum(col("s")).as("t"))
-      h = cp(renorm(hSpine
+      renorm(hSpine
         .join(hSums, col("id") === col("src"), "left_outer")
-        .select(col("id"), coalesce(col("t"), lit(0L)).as("s"))))
-    }
+        .select(col("id"), coalesce(col("t"), lit(0L)).as("s")))
+    }(Rounds.fixed)
+    GraftSqlShims.releaseCheckpoint(e)
     h.select(col("id"), lit("hub").as("kind"), col("s").as("score_fp"))
       .unionByName(a.select(col("id"), lit("auth").as("kind"),
         col("s").as("score_fp")))

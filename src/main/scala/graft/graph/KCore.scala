@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,9 +23,9 @@ import org.apache.spark.sql.functions._
   * is pure savings.
   *
   * Scale shape: each round is one bounded map-side-combined degree
-  * aggregate plus two id-keyed left-semi hash joins, with
-  * `localCheckpoint` truncating the per-round lineage (the
-  * [[PageRank]] discipline). Rounds on real co-occurrence graphs are
+  * aggregate plus two id-keyed left-semi hash joins over the
+  * [[graft.Rounds]] edge state; the fixpoint test is the state's
+  * observed row count. Rounds on real co-occurrence graphs are
   * few (peeling cascades are short once cliques dominate); a
   * pathological path graph peels O(n) ends, which the cap bounds
   * deterministically.
@@ -43,32 +44,17 @@ object KCore {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 8,
       symmetricDistinct: Boolean = false): DataFrame = {
     require(k >= 1 && maxRounds >= 1, s"bad k-core params ($k, $maxRounds)")
-    var e = (if (symmetricDistinct)
-        edges.where(col("a") < col("b"))
-          .select(col("a").as("u"), col("b").as("v"))
-      else edges.where(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"),
-          greatest(col("a"), col("b")).as("v"))
-        .distinct())
-      .localCheckpoint(true)
-    var nEdges = e.count()
-    var round = 0
-    var fixed = nEdges == 0L
-    while (!fixed && round < maxRounds) {
+    // a round that drops no edge is the fixed point
+    val e = Rounds.iterate(
+        Triangles.canonical(edges, symmetricDistinct), maxRounds) { (e, _) =>
       val keep = e.select(col("u").as("id"))
         .unionByName(e.select(col("v").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("d"))
         .where(col("d") >= k)
-      val e2 = e
-        .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
+      e.join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .transform(org.apache.spark.sql.GraftSqlShims
-          .localCheckpointFreshStats)
-      val n2 = e2.count()
-      fixed = n2 == nEdges
-      e = e2; nEdges = n2; round += 1
-    }
+    }(Rounds.until(count(lit(1)))((prev, n) => prev.contains(n)))
     e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id")))
       .groupBy(col("id"))

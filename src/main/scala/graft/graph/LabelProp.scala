@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label-propagation community detection (Raghavan,
@@ -24,9 +25,8 @@ import org.apache.spark.sql.functions._
   * symmetric pair set against the label frame, a (dst, lbl) count
   * with map-side partials, and a single hash-aggregate argmin
   * `min(struct(-cnt, lbl))` per node — no window sort anywhere, and
-  * shuffle volume is O(|E|) per round on the join key. Labels are
-  * eagerly `localCheckpoint`ed per round ([[ConnectedComponents]]
-  * Pregel discipline: the un-executed plan would double per round).
+  * shuffle volume is O(|E|) per round on the join key; the label
+  * frame is the [[graft.Rounds]] state.
   */
 object LabelProp {
 
@@ -36,26 +36,21 @@ object LabelProp {
     * @param rounds fixed synchronous round count
     * @return (id, lbl, csize) — final label + its community size
     */
-  def run(pairs: DataFrame, rounds: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
-    val e = cp(pairs.select(col("a").as("src"), col("b").as("dst")))
-    var lbl = cp(e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")))
-    for (_ <- 1 to rounds) {
-      val cnt = e.join(lbl, col("src") === col("id"))
-        .groupBy(col("dst"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
+  def run(pairs: DataFrame, rounds: Int = 4): DataFrame = {
+    val e = GraftSqlShims.localCheckpointFreshStats(
+      pairs.select(col("a").as("src"), col("b").as("dst")))
+    val lbl = Rounds.iterate(e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl")), rounds) { (lbl, _) =>
       // argmax count, ties to the smallest label, as ONE hash
       // aggregate: min over (−cnt, lbl) struct ordering
-      lbl = cp(cnt
+      e.join(lbl, col("src") === col("id"))
+        .groupBy(col("dst"), col("lbl"))
+        .agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("m"))
-        .select(col("dst").as("id"), col("m.lbl").as("lbl")))
-    }
+        .select(col("dst").as("id"), col("m.lbl").as("lbl"))
+    }(Rounds.fixed)
+    GraftSqlShims.releaseCheckpoint(e)
     val sizes = lbl.groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
     lbl.join(sizes, "lbl").select(col("id"), col("lbl"), col("csize"))
   }

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation}
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,9 +40,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: the edge frame is checkpointed once,
   * hash-partitioned on `src`, with each node's strength on its rows
-  * and one (i, i, 0) marker row per node; one node-state checkpoint
-  * `(id, c, k, dc)` carries each node's community, strength and
-  * community degree sum (a window column). The state joins the edges
+  * and one (i, i, 0) marker row per node; one [[graft.Rounds]] node
+  * state `(id, c, k, dc, moved)` carries each node's community,
+  * strength, community degree sum (a window column) and whether it
+  * just moved (the fixpoint test counts those). The state joins the edges
   * ONCE, on `dst`, with no broadcast hint — the marker's join brings
   * the node's own state — and its measured checkpoint size lets the
   * planner broadcast it while it is small; a state too big to
@@ -52,8 +54,7 @@ import org.apache.spark.sql.functions._
   * aggregate of at most |communities| rows, whose winners are counted
   * and applied in one id-keyed aggregate over state ∪ winners; the
   * window's shuffle on c closes the round. 5 Spark jobs a round under
-  * AQE at bench scale. Each round releases the state it replaces, and
-  * the edge checkpoint is released on return.
+  * AQE at bench scale. The edge checkpoint is released on return.
   */
 object Louvain {
 
@@ -63,10 +64,8 @@ object Louvain {
     * @param rounds fixed handshake-move round count
     * @return (id, community, csize) — final community + its size
     */
-  def oneLevel(pairs: DataFrame, rounds: Int = 4,
-      checkpoint: Boolean = true): DataFrame =
-    oneLevelW(pairs.select(col("a"), col("b"), lit(1L).as("w")),
-      rounds, checkpoint)
+  def oneLevel(pairs: DataFrame, rounds: Int = 4): DataFrame =
+    oneLevelW(pairs.select(col("a"), col("b"), lit(1L).as("w")), rounds)
 
   /** WEIGHTED one-level ascent — the form the CONTRACTED graph of
     * [[twoLevel]] needs: `edges(a, b, w)` symmetric directed with
@@ -80,25 +79,21 @@ object Louvain {
     * long sums of long weights ([[oneLevel]] is the w = 1 no-loop
     * special case).
     */
-  def oneLevelW(edges: DataFrame, rounds: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
-    val lbl = oneLevelLabelsW(edges, rounds, checkpoint)
+  def oneLevelW(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    val lbl = oneLevelLabelsW(edges, rounds)
     val sizes = lbl.groupBy(col("c")).agg(count(lit(1)).as("csize"))
     lbl.join(sizes, "c")
       .select(col("id"), col("c").as("community"), col("csize"))
   }
 
-  /** Bare final labels of [[oneLevelW]] — (id, c, k, dc), checkpointed
-    * when `checkpoint` — for composed callers ([[twoLevel]]) that do
+  /** Bare final labels of [[oneLevelW]] — the checkpointed state
+    * (id, c, k, dc, moved) — for composed callers ([[twoLevel]]) that do
     * not need the size decoration: the terminal groupBy + join (and
     * one more checkpoint of their output) is skipped (r17, guide
     * §1.2).
     */
-  private[graft] def oneLevelLabelsW(edges: DataFrame, rounds: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame, leaf: DataFrame => DataFrame =
-        GraftSqlShims.localCheckpointFreshStats): DataFrame =
-      if (checkpoint) leaf(df) else df
+  private[graft] def oneLevelLabelsW(edges: DataFrame,
+      rounds: Int = 4): DataFrame = {
     // edges hash-partitioned on src ONCE (an explicit count, so AQE
     // cannot coalesce it away): every src-keyed step below reads the
     // checkpoint in place. Each row carries its src's strength k;
@@ -106,7 +101,8 @@ object Louvain {
     // node's first row also emits an (i, i, 0) MARKER, whose dst-side
     // join brings the node's own state to its src partition.
     val bySrc = Window.partitionBy(col("src")).orderBy(col("dst"))
-    val e = cp(edges.select(col("a").as("src"), col("b").as("dst"),
+    val e = GraftSqlShims.localCheckpointPartitioned(edges.select(
+        col("a").as("src"), col("b").as("dst"),
         col("w").cast("long").as("w"))
       .repartition(edges.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt, col("src"))
@@ -118,16 +114,17 @@ object Louvain {
         struct(col("dst"), col("w"), (col("src") =!= col("dst")).as("keep")),
         struct(col("src").as("dst"), lit(0L).as("w"),
           (col("rn") === 1).as("keep")))).as("x"))
-      .where(col("x.keep")).select("src", "k", "x.dst", "x.w"),
-      GraftSqlShims.localCheckpointPartitioned)
+      .where(col("x.keep")).select("src", "k", "x.dst", "x.w"))
     val nodes = e.where(col("src") === col("dst"))
     val m = nodes.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
-    // node state (id, c, k, dc): community c, strength k, and the
-    // community's degree sum dc — singletons start with dc = k
-    var st = cp(nodes.select(col("src").as("id"), col("src").as("c"),
-      col("k"), col("k").as("dc")))
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
+    // node state (id, c, k, dc, moved): community c, strength k, the
+    // community's degree sum dc — singletons start with dc = k — and
+    // whether the node's label is new this round. FIXPOINT EARLY EXIT
+    // (identical output): no applied moves ⇒ the state is unchanged ⇒
+    // every remaining round is a no-op.
+    val st = Rounds.iterate(nodes.select(col("src").as("id"),
+        col("src").as("c"), col("k"), col("k").as("dc"),
+        lit(true).as("moved")), rounds) { (st, _) =>
       // k_{i,b} per (node, community b of a neighbor) with b's degree
       // sum d_b; the marker's group is the node's own community a
       // (its kc is k_{i,a\i}). Then each node's best move: ΔQ(b) =
@@ -158,26 +155,17 @@ object Louvain {
           col("id"), col("b"), col("dq")).groupBy(col("comm"))
         .agg(min(struct((-col("dq")).as("nd"), col("id"), col("b"))).as("w"))
       val wins = sum(col("win"))
-      val next = st.select(col("id"), col("c"), col("k"), lit(0).as("win"))
+      st.select(col("id"), col("c"), col("k"), lit(0).as("win"))
         .unionByName(best.select(col("w.id").as("id"), col("w.b").as("c"),
           lit(null).cast("long").as("k"), lit(1).as("win")))
         .groupBy(col("id"))
         .agg(max(col("k")).as("k"), (wins === 2).as("moved"),
           when(wins === 2, max_by(col("c"), col("win")))
             .otherwise(min_by(col("c"), col("win"))).as("c"))
-      // FIXPOINT EARLY EXIT (identical output): no applied moves ⇒ the
-      // state is unchanged ⇒ every remaining round is a no-op. The
-      // move count rides the state checkpoint as an observed metric.
-      val obs = Observation()
-      val nextSt = cp((if (checkpoint)
-          next.observe(obs, count(when(col("moved"), 1)).as("moves"))
-        else next)
         .select(col("id"), col("c"), col("k"),
-          sum(col("k")).over(Window.partitionBy(col("c"))).as("dc")))
-      GraftSqlShims.releaseCheckpoint(st)
-      st = nextSt
-      converged = checkpoint && obs.get("moves") == 0L
-    }
+          sum(col("k")).over(Window.partitionBy(col("c"))).as("dc"),
+          col("moved"))
+    }(Rounds.until(count(when(col("moved"), 1)))((_, n) => n == 0L))
     GraftSqlShims.releaseCheckpoint(e)
     st
   }
@@ -205,19 +193,16 @@ object Louvain {
     *         level-2 communities + the level-2 community's ORIGINAL
     *         node count
     */
-  def twoLevel(pairs: DataFrame, rounds1: Int = 4, rounds2: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint) GraftSqlShims.localCheckpointFreshStats(df) else df
+  def twoLevel(pairs: DataFrame, rounds1: Int = 4,
+      rounds2: Int = 4): DataFrame = {
     // the level-1 label frame is already checkpointed by the ascent
     // loop — read it bare instead of decorating it with sizes and
     // re-checkpointing the projection (r17, guide §1.2: the old form
     // paid a groupBy + join + one more full-frame materialization for
     // columns twoLevel never reads)
-    val lbl1 = oneLevelLabelsW(
-        pairs.select(col("a"), col("b"), lit(1L).as("w")),
-        rounds1, checkpoint)
-      .select(col("id"), col("c").as("c1"))
+    val st1 = oneLevelLabelsW(
+      pairs.select(col("a"), col("b"), lit(1L).as("w")), rounds1)
+    val lbl1 = st1.select(col("id"), col("c").as("c1"))
     val e2 = pairs
       .join(lbl1.select(col("id").as("a"), col("c1").as("ca")), "a")
       .join(lbl1.select(col("id").as("b"), col("c1").as("cb")), "b")
@@ -225,9 +210,11 @@ object Louvain {
       .agg(count(lit(1)).as("w"))
     // level 2 likewise needs only the labels — its csize is recomputed
     // over ORIGINAL nodes below, never read from the contracted ascent
-    val l2 = oneLevelLabelsW(e2, rounds2, checkpoint)
-      .select(col("id").as("c1"), col("c").as("c2"))
-    val fin = cp(lbl1.join(l2, "c1"))
+    val st2 = oneLevelLabelsW(e2, rounds2)
+    val fin = GraftSqlShims.localCheckpointFreshStats(
+      lbl1.join(st2.select(col("id").as("c1"), col("c").as("c2")), "c1"))
+    GraftSqlShims.releaseCheckpoint(st1)
+    GraftSqlShims.releaseCheckpoint(st2)
     val sizes = fin.groupBy(col("c2")).agg(count(lit(1)).as("csize"))
     fin.join(sizes, "c2")
       .select(col("id"), col("c1"), col("c2").as("community"),

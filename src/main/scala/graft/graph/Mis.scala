@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Maximal independent set by Luby's algorithm (Luby 1986) — the
@@ -30,7 +31,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one (id-keyed) equi-join of the edge
   * list against the ≤|V|-row priority frame + one grouped min — the
   * frontier-join family's cost (|E_active| shuffle rows/round), no
-  * collect, state one int per vertex, rounds plan-time.
+  * collect, a [[graft.Rounds]] state of one int per vertex, rounds
+  * plan-time.
   *
   * @return (id, state) — 1 in the MIS, −1 excluded (has an MIS
   *         neighbor), 0 undecided after `rounds`
@@ -66,12 +68,15 @@ object Mis {
         edges.select(col("src"), col("dst")).unionByName(swapped)
           .distinct()
     }).localCheckpoint(true)
-    var st = vertices.select(col("id"), lit(0).as("state"))
-      .localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      val pri = st.where(col("state") === 0)
-        .select(col("id"), prio(r, col("id")).as("p"))
-        .localCheckpoint(true) // feeds both join sides + the winners
+    // each round's priority frame feeds both join sides and the
+    // winners; it is released once the state it fed is checkpointed
+    var pri: DataFrame = null
+    val st = Rounds.iterate(vertices.select(col("id"), lit(0).as("state")),
+        rounds) { (st, r) =>
+      if (pri != null) GraftSqlShims.releaseCheckpoint(pri)
+      pri = GraftSqlShims.localCheckpointFreshStats(
+        st.where(col("state") === 0)
+          .select(col("id"), prio(r, col("id")).as("p")))
       // min (priority, id) over ACTIVE neighbors (both ends active)
       val nb = und
         .join(pri.select(col("id").as("dst"), col("p").as("pd")), "dst")
@@ -89,13 +94,13 @@ object Mis {
       // impossible), so both verdicts ride ONE mark union and one join
       val marks = winners.select(col("id"), lit(1).as("mk"))
         .unionByName(excluded.select(col("id"), lit(-1).as("mk")))
-      st = st
-        .join(marks, Seq("id"), "left")
+      st.join(marks, Seq("id"), "left")
         .select(col("id"),
           when(col("state") =!= 0, col("state"))
             .otherwise(coalesce(col("mk"), lit(0))).as("state"))
-        .localCheckpoint(true)
-    }
+    }(Rounds.fixed)
+    GraftSqlShims.releaseCheckpoint(pri)
+    GraftSqlShims.releaseCheckpoint(und)
     st.select(col("id"), col("state").cast("int").as("state"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank in EXACT fixed-point integer arithmetic.
@@ -28,12 +29,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one (src-keyed) join of the edge list
   * against the rank frame, a dst-keyed long-sum with map-side
   * partials, and a left join back to the node spine — all
-  * hash-partitioned equi-operations; ranks are eagerly
-  * `localCheckpoint`ed per round (the [[ConnectedComponents]] Pregel
-  * discipline: the un-executed plan would double per round). Rounds
-  * are a fixed count, not a convergence loop — the batch-pipeline
-  * form (rank deltas after ~5 damped rounds are below decision
-  * relevance for curation weighting; run more rounds where needed).
+  * hash-partitioned equi-operations, one [[graft.Rounds]] state per
+  * round. Rounds are a fixed count, not a convergence loop — the
+  * batch-pipeline form (rank deltas after ~5 damped rounds are below
+  * decision relevance for curation weighting; run more rounds where
+  * needed).
   */
 object PageRank {
 
@@ -45,30 +45,8 @@ object PageRank {
     * @param iters fixed round count
     * @return (id, rank_fp) — rank in 10^-12 fixed-point units
     */
-  def run(nodes: DataFrame, edges: DataFrame, iters: Int = 5,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
-    val n = nodes.select(col("id"))
-    val nN = broadcast(n.agg(count(lit(1)).as("n_nodes")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val eDeg = cp(edges.join(deg, "src"))
-    val tele = expr(s"${scale * 15 / 100} div n_nodes")
-    var ranks = cp(n.crossJoin(nN)
-      .select(col("id"), expr(s"$scale div n_nodes").as("r")))
-    for (_ <- 1 to iters) {
-      val sums = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = cp(n.join(sums, col("id") === col("dst"), "left_outer")
-        .crossJoin(nN)
-        .select(col("id"),
-          (tele + expr("(85 * coalesce(s, 0)) div 100")).as("r")))
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
-  }
+  def run(nodes: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame =
+    rankLoop(uniform(nodes), edges, lit(1L), iters)
 
   /** WEIGHTED [[run]]: each edge carries a long weight `w` (e.g.
     * co-occurrence multiplicity) and a node's mass splits
@@ -76,32 +54,11 @@ object PageRank {
     * co-purchased in fifty orders pulls fifty times the rank of a
     * one-off. Same exact-integer contract: r ≤ 10¹² and fixture
     * weights keep r·w far inside 64 bits (ANSI faults loudly if a
-    * graph ever exceeds it); same per-round checkpoint discipline.
+    * graph ever exceeds it).
     */
-  def runWeighted(nodes: DataFrame, edges: DataFrame, iters: Int = 5,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
-    val n = nodes.select(col("id"))
-    val nN = broadcast(n.agg(count(lit(1)).as("n_nodes")))
-    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("d"))
-    val eDeg = cp(edges.join(deg, "src"))
-    val tele = expr(s"${scale * 15 / 100} div n_nodes")
-    var ranks = cp(n.crossJoin(nN)
-      .select(col("id"), expr(s"$scale div n_nodes").as("r")))
-    for (_ <- 1 to iters) {
-      val sums = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), expr("(r * w) div d").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = cp(n.join(sums, col("id") === col("dst"), "left_outer")
-        .crossJoin(nN)
-        .select(col("id"),
-          (tele + expr("(85 * coalesce(s, 0)) div 100")).as("r")))
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
-  }
+  def runWeighted(nodes: DataFrame, edges: DataFrame,
+      iters: Int = 5): DataFrame =
+    rankLoop(uniform(nodes), edges, col("w"), iters)
 
   /** PERSONALIZED [[run]]: the random surfer teleports only to a seed
     * set instead of uniformly — rank becomes "proximity to the seeds"
@@ -118,15 +75,10 @@ object PageRank {
     * @param seeds one row per seed vertex, column `id`
     */
   def runPersonalized(nodes: DataFrame, edges: DataFrame,
-      seeds: DataFrame, iters: Int = 5,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
+      seeds: DataFrame, iters: Int = 5): DataFrame = {
     val sd = seeds.select(col("id")).distinct()
     val nS = broadcast(sd.agg(count(lit(1)).as("n_seeds")))
-    val spine = cp(nodes.select(col("id"))
+    rankLoop(nodes.select(col("id"))
       .join(broadcast(sd.withColumn("is_seed", lit(1))), Seq("id"),
         "left_outer")
       .crossJoin(nS)
@@ -135,19 +87,39 @@ object PageRank {
           expr(s"${scale * 15 / 100} div n_seeds"))
           .otherwise(lit(0L)).as("tele"),
         when(col("is_seed") === 1, expr(s"$scale div n_seeds"))
-          .otherwise(lit(0L)).as("r0")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val eDeg = cp(edges.join(deg, "src"))
-    var ranks = cp(spine.select(col("id"), col("r0").as("r")))
-    for (_ <- 1 to iters) {
+          .otherwise(lit(0L)).as("r0")), edges, lit(1L), iters)
+  }
+
+  /** The spine where every node is a seed: tele = (15·scale/100) div N
+    * and r0 = scale div N on all N nodes. */
+  private def uniform(nodes: DataFrame): DataFrame = {
+    val n = nodes.select(col("id"))
+    n.crossJoin(broadcast(n.agg(count(lit(1)).as("n_nodes"))))
+      .select(col("id"), expr(s"${scale * 15 / 100} div n_nodes").as("tele"),
+        expr(s"$scale div n_nodes").as("r0"))
+  }
+
+  /** The rank loop over a node spine (id, tele, r0) and edges carrying
+    * weight `w` per row: contribution (r·w) div Σw, so w = 1 is
+    * exactly `r div outdeg`. */
+  private def rankLoop(spine: DataFrame, edges: DataFrame, w: Column,
+      iters: Int): DataFrame = {
+    val sp = GraftSqlShims.localCheckpointFreshStats(spine)
+    val eDeg = GraftSqlShims.localCheckpointFreshStats(edges.join(
+      edges.groupBy(col("src")).agg(sum(w).as("d")), "src"))
+    val out = Rounds.iterate(sp.select(col("id"), col("r0").as("r")),
+        iters) { (ranks, _) =>
       val sums = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), expr("r div d").as("c"))
+        .select(col("dst"), (col("r") * w).as("rw"), col("d"))
+        .select(col("dst"), expr("rw div d").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = cp(spine.join(sums, col("id") === col("dst"), "left_outer")
+      sp.join(sums, col("id") === col("dst"), "left_outer")
         .select(col("id"),
-          (col("tele") + expr("(85 * coalesce(s, 0)) div 100")).as("r")))
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
+          (col("tele") + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
+    }(Rounds.fixed)
+    GraftSqlShims.releaseCheckpoint(eDeg)
+    GraftSqlShims.releaseCheckpoint(sp)
+    out.select(col("id"), col("r").as("rank_fp"))
   }
 
   /** Unrolled DuckDB CTE chain re-deriving [[runPersonalized]]

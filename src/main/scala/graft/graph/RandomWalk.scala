@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Deterministic seeded random walks — the corpus generator for
@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   * is a src-keyed equi-join frontier×edges (shuffle O(Σ deg(frontier)),
   * never the whole graph), followed by a single hash-aggregate argmin
   * `min(struct(h, dst))` per walk (no window sort), checkpointed per
-  * step. Walk count scales with the seed set, independent of |V|.
+  * step with fresh statistics. Every step's frame stays in the output
+  * union, so this loop is not a [[graft.Rounds]] loop: only the edge
+  * checkpoint is released before return. Walk count scales with the seed set,
+  * independent of |V|.
   */
 object RandomWalk {
 
@@ -33,18 +36,16 @@ object RandomWalk {
     * @param steps fixed hop count (walk length − 1)
     * @return (walk_id, step, node) — step 0 is the seed itself
     */
-  def walks(pairs: DataFrame, seeds: DataFrame, steps: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
-    val e = cp(pairs.select(col("a").as("src"), col("b").as("dst")))
+  def walks(pairs: DataFrame, seeds: DataFrame,
+      steps: Int = 4): DataFrame = {
+    val e = GraftSqlShims.localCheckpointFreshStats(
+      pairs.select(col("a").as("src"), col("b").as("dst")))
     var cur = seeds.select(col("id").as("walk_id"), col("id").as("node"))
     var out = cur.select(col("walk_id"), lit(0).cast("int").as("step"),
       col("node"))
     for (t <- 1 to steps) {
-      cur = cp(cur.join(e, col("node") === col("src"))
+      cur = GraftSqlShims.localCheckpointFreshStats(cur
+        .join(e, col("node") === col("src"))
         .select(col("walk_id"), col("dst"),
           md5(concat_ws(":", col("walk_id"), lit(t), col("dst"))).as("h"))
         .groupBy(col("walk_id"))
@@ -53,6 +54,7 @@ object RandomWalk {
       out = out.unionByName(cur.select(col("walk_id"),
         lit(t).cast("int").as("step"), col("node")))
     }
+    GraftSqlShims.releaseCheckpoint(e)
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,10 +16,9 @@ import org.apache.spark.sql.functions._
   * hash-partitioned equi-join + map-side-combined min aggregate + a
   * full-outer min merge — no global sort, no priority queue (Dijkstra's
   * heap is inherently sequential; Bellman–Ford rounds are the
-  * distributed formulation). Distance state is `localCheckpoint`ed per
-  * round (the repo's iterative discipline: un-executed lineage doubles
-  * per round, and the state feeds two consumers — the merge and the
-  * next frontier).
+  * distributed formulation). The distance state is the [[graft.Rounds]]
+  * state; it feeds two consumers, the merge and the next frontier, and
+  * the loop stops on the first round that improves nothing.
   *
   * DETERMINISM: with integer edge lengths every tentative distance is
   * an exact BIGINT and `min` is order-independent, so the result is
@@ -36,29 +36,26 @@ import org.apache.spark.sql.functions._
 object Sssp {
 
   def distances(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
-      rounds: Int, checkpoint: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint)
-        org.apache.spark.sql.GraftSqlShims.localCheckpointFreshStats(df)
-      else df
+      rounds: Int): DataFrame = {
     val e = edges.select(col("a"), col("b"), col("len").cast("long"))
-    var dist = cp(seeds.select(col("id")).distinct()
-      .withColumn("d", lit(0L)))
-    var frontier = dist
-    for (_ <- 1 to rounds if !frontier.isEmpty) {
-      val relaxed = e.join(frontier.withColumnRenamed("id", "a"), "a")
+    // state (id, d, improved): the frontier is the improved rows, and
+    // the loop stops once a round improves nothing
+    val dist = Rounds.iterate(seeds.select(col("id")).distinct()
+        .select(col("id"), lit(0L).as("d"), lit(true).as("improved")),
+        rounds) { (st, _) =>
+      val relaxed = e.join(st.where(col("improved"))
+          .select(col("id").as("a"), col("d")), "a")
         .groupBy(col("b").as("id"))
         .agg(min(col("d") + col("len")).as("nd"))
-      val merged = cp(dist.join(relaxed, Seq("id"), "full_outer")
+      st.select(col("id"), col("d"))
+        .join(relaxed, Seq("id"), "full_outer")
         .select(col("id"),
           least(coalesce(col("d"), col("nd")),
             coalesce(col("nd"), col("d"))).as("d"),
-          (col("d").isNull || col("nd") < col("d")).as("improved")))
-      frontier = merged.where(col("improved")).select(col("id"), col("d"))
-      dist = merged.select(col("id"), col("d"))
-    }
+          (col("d").isNull || col("nd") < col("d")).as("improved"))
+    }(Rounds.until(count(when(col("improved"), 1)))((_, n) => n == 0L))
     nodes.select(col("id"))
-      .join(dist, Seq("id"), "left_outer")
+      .join(dist.select(col("id"), col("d")), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("d"), lit(-1L)).as("dist"))
   }
 }

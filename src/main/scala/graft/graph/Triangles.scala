@@ -58,9 +58,10 @@ object Triangles {
     *        orientations exist and ids are distinct. */
   def perNodeBundle(edges: DataFrame,
       symmetricDistinct: Boolean = false): (DataFrame, DataFrame) = {
-    val canon = canonical(edges, symmetricDistinct)
+    // checkpointed: it feeds degree + both orientation lookups
+    val canon = canonical(edges, symmetricDistinct).localCheckpoint(true)
     val deg = degrees(canon).localCheckpoint(true)
-    val counts = trianglesOf(canon, deg)
+    val counts = trianglesOf(orientedOf(canon, deg))
       .select(explode(array(col("n1"), col("n2"), col("n3"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
       .localCheckpoint(true)
@@ -123,11 +124,11 @@ object Triangles {
     clusteringCoefFromBundle(deg, counts)
   }
 
-  /** Canonical undirected edge set (u < v, distinct, loops dropped) —
-    * checkpointed: it feeds degree + both orientation lookups. With
-    * the [[perNodeBundle]] `symmetricDistinct` contract the dedup
-    * exchange is replaced by a map-side `a < b` filter. */
-  private def canonical(edges: DataFrame,
+  /** Canonical undirected edge set (u < v, distinct, loops dropped),
+    * lazy: each caller checkpoints it as it needs. With the
+    * [[perNodeBundle]] `symmetricDistinct` contract the dedup exchange
+    * is replaced by a map-side `a < b` filter. */
+  private[graph] def canonical(edges: DataFrame,
       symmetricDistinct: Boolean = false): DataFrame =
     (if (symmetricDistinct)
       edges.where(col("a") < col("b"))
@@ -137,22 +138,20 @@ object Triangles {
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .distinct())
-      .localCheckpoint(true)
 
   private def degrees(canon: DataFrame): DataFrame =
     canon.select(col("u").as("id"))
       .unionByName(canon.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
 
-  /** The degree-oriented, bloom-gated triangle stream (n1, n2, n3)
-    * over a canonical edge set — factored so [[Truss]] can re-count
-    * per-EDGE support per peeling round on the same machinery. */
-  private[graph] def trianglesOf(canon: DataFrame,
+  /** A canonical edge set oriented from (degree, id)-smaller to larger,
+    * (src, dst, sd, dd) — checkpointed: [[trianglesOf]] reads it as
+    * both wedge legs and the closure probe. */
+  private[graph] def orientedOf(canon: DataFrame,
       deg: DataFrame): DataFrame = {
-    // orient from (degree, id)-smaller to larger
     val du = deg.select(col("id").as("u"), col("d").as("du"))
     val dv = deg.select(col("id").as("v"), col("d").as("dv"))
-    val oriented = canon.join(du, "u").join(dv, "v")
+    canon.join(du, "u").join(dv, "v")
       .select(
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")),
@@ -164,7 +163,14 @@ object Triangles {
       .withColumn("sd", least(col("du"), col("dv")))
       .withColumn("dd", greatest(col("du"), col("dv")))
       .select(col("src"), col("dst"), col("sd"), col("dd"))
-      .localCheckpoint(true) // wedge legs ×2 + closure probe
+      .localCheckpoint(true)
+  }
+
+  /** The degree-oriented, bloom-gated triangle stream (n1, n2, n3)
+    * over an [[orientedOf]] edge set — factored so [[Truss]] can
+    * re-count per-EDGE support per peeling round on the same
+    * machinery. */
+  private[graph] def trianglesOf(oriented: DataFrame): DataFrame = {
     // wedges at the lowest corner: two out-edges (src→v, src→w) with
     // (v, w) themselves orientation-ordered, closed by oriented v→w
     val e1 = oriented.select(col("src"), col("dst").as("x"),
@@ -197,10 +203,6 @@ object Triangles {
     gated.join(closing, Seq("x", "y"))
       .select(col("src").as("n1"), col("x").as("n2"), col("y").as("n3"))
   }
-
-  /** Package-private canonicalization for [[Truss]]. */
-  private[graph] def canonicalOf(edges: DataFrame): DataFrame =
-    canonical(edges)
 
   /** Package-private degree helper for [[Truss]]. */
   private[graph] def degreesOf(canon: DataFrame): DataFrame =

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** k-truss peeling (Cohen 2008) — the cohesion subgraph between
@@ -16,8 +17,8 @@ import org.apache.spark.sql.functions._
   * — O(|E|^1.5) with wedges generated only at the lowest-(deg, id)
   * corner), explodes each triangle into its three canonical edges,
   * and keeps edges whose exact integer support ≥ k−2. Everything is
-  * counts and comparisons — no floats — and the surviving set is
-  * checkpointed per round (iterative-operator discipline).
+  * counts and comparisons — no floats — and the surviving set is the
+  * [[graft.Rounds]] state.
   *
   * Scale shape: per round one wedge join + one (u, v)-keyed count
   * with map-side partials + one edge filter; peeling monotonically
@@ -30,8 +31,13 @@ object Truss {
 
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    def support(canon: DataFrame): DataFrame =
-      Triangles.trianglesOf(canon, Triangles.degreesOf(canon))
+    // the orientation checkpoint each support count reads is released
+    // by the next count, once the frame it fed is checkpointed
+    var oriented: DataFrame = null
+    def support(canon: DataFrame): DataFrame = {
+      if (oriented != null) GraftSqlShims.releaseCheckpoint(oriented)
+      oriented = Triangles.orientedOf(canon, Triangles.degreesOf(canon))
+      Triangles.trianglesOf(oriented)
         .select(explode(array(
           array(least(col("n1"), col("n2")),
             greatest(col("n1"), col("n2"))),
@@ -42,15 +48,13 @@ object Truss {
         .select(element_at(col("e"), 1).as("u"),
           element_at(col("e"), 2).as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-    var canon = Triangles.canonicalOf(edges)
-    (1 to rounds).foreach { _ =>
-      canon = canon
-        .join(support(canon), Seq("u", "v"), "left_outer")
-        .where(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select(col("u"), col("v"))
-        .transform(org.apache.spark.sql.GraftSqlShims
-          .localCheckpointFreshStats)
     }
+    val canon = Rounds.iterate(Triangles.canonical(edges), rounds) {
+      (canon, _) =>
+        canon.join(support(canon), Seq("u", "v"), "left_outer")
+          .where(coalesce(col("sup"), lit(0L)) >= k - 2)
+          .select(col("u"), col("v"))
+    }(Rounds.fixed)
     canon.join(support(canon), Seq("u", "v"), "left_outer")
       .select(col("u"), col("v"),
         coalesce(col("sup"), lit(0L)).as("support"))

@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import graft.Rounds
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** PCA leading component by power iteration, in the exact-integer
@@ -37,8 +38,7 @@ import org.apache.spark.sql.functions._
   * per vector that a (i, j)-keyed hash aggregate collapses with
   * map-side combine, so the shuffle carries ≤ dim² rows per map task
   * regardless of N; steps 3–4 run on the dim²-row covariance frame
-  * (metadata-sized), checkpointed per round like every iterative
-  * operator here. Scoring ([[scores]]) is a second map-only pass with
+  * (metadata-sized), one [[graft.Rounds]] state per iteration. Scoring ([[scores]]) is a second map-only pass with
   * the loading vector broadcast.
   */
 object Pca {
@@ -131,22 +131,21 @@ object Pca {
     val spark = cov0.sparkSession
     import spark.implicits._
     val cov = cov0.localCheckpoint(true)
-    var v = (0 until dim).map(j => (j, vScale)).toDF("j", "v")
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val v = Rounds.iterate((0 until dim).map(j => (j, vScale)).toDF("j", "v"),
+        iters) { (v, _) =>
       val y = cov.join(v, "j")
         .groupBy(col("i")).agg(sum(col("c") * col("v")).as("y"))
       val pivot = broadcast(y
         .orderBy(abs(col("y")).desc, col("i")).limit(1)
         .select(col("y").as("ym")))
-      v = y.crossJoin(pivot)
+      y.crossJoin(pivot)
         .select(col("i").as("j"),
           when(col("ym") =!= 0,
             floor(col("y").cast("double") / col("ym").cast("double")
               * vScale + 0.5).cast("long"))
             .otherwise(lit(vScale)).as("v"))
-        .localCheckpoint(true)
-    }
+    }(Rounds.fixed)
+    GraftSqlShims.releaseCheckpoint(cov)
     v.select(col("j").cast("int").as("pos"), col("v").as("loading_fp"))
       .orderBy(col("pos"))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
@@ -28,6 +29,23 @@ class PlanSpec extends AnyFunSuite {
     try SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
     finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
+
+  /** A round loop's physical plans with exchanges visible (AQE off):
+    * every `localCheckpoint` it runs — one per round state, plus its
+    * loop-invariant frames — and the plan of the frame it returns. */
+  private def roundPlans(f: => DataFrame): Seq[SparkPlan] = {
+    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      var out: DataFrame = null
+      val plans = TestSpark.checkpointPlansDuring { out = f }
+      plans :+ out.queryExecution.executedPlan
+    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
+  }
+
+  private def shuffleWidths(plans: Seq[SparkPlan]): Seq[Int] =
+    plans.flatMap(_.collect { case e: ShuffleExchangeExec => e })
+      .map(_.output.length)
 
   test("q02: predicates reach the parquet scan, columns are pruned") {
     val scans = plan("q02_filter_project")
@@ -240,23 +258,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pagerank rounds carry only (id, rank) — no wide rows") {
-    // five rounds of rank iteration must shuffle nothing beyond the
-    // node key + fixed-point rank / contribution columns. The
-    // registered query localCheckpoints per round (lineage would
-    // double otherwise), which hides the exchanges from its final
-    // plan — inspect the full un-checkpointed lineage instead.
+    // rounds of rank iteration must shuffle nothing beyond the node
+    // key + fixed-point rank / contribution columns. Each round is
+    // checkpointed, which hides its exchanges from the returned plan —
+    // inspect every round's checkpoint plan instead.
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val nodes = Seq(0L, 1L).toDF("id")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val widths =
-      try graft.graph.PageRank
-        .run(nodes, edges, iters = 3, checkpoint = false)
-        .queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val widths = shuffleWidths(roundPlans(
+      graft.graph.PageRank.run(nodes, edges, iters = 3)))
     assert(widths.nonEmpty && widths.forall(_ <= 3),
       s"wide shuffle rows: ${widths.mkString(",")}")
   }
@@ -268,16 +278,8 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq((0L, 1L, 2L), (1L, 0L, 2L)).toDF("a", "b", "len")
     val nodes = Seq(0L, 1L).toDF("id")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val widths =
-      try graft.graph.Sssp
-        .distances(nodes, edges, Seq(0L).toDF("id"), 3,
-          checkpoint = false)
-        .queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val widths = shuffleWidths(roundPlans(
+      graft.graph.Sssp.distances(nodes, edges, Seq(0L).toDF("id"), 3)))
     assert(widths.nonEmpty && widths.forall(_ <= 3),
       s"wide shuffle rows: ${widths.mkString(",")}")
   }
@@ -435,16 +437,8 @@ class PlanSpec extends AnyFunSuite {
     val edges = Seq((0L, 1L), (1L, 0L), (1L, 2L)).toDF("src", "dst")
     val nodes = Seq(0L, 1L, 2L).toDF("id")
     val seeds = Seq(0L).toDF("id")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val widths =
-      try graft.graph.PageRank
-        .runPersonalized(nodes, edges, seeds, iters = 3,
-          checkpoint = false)
-        .queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val widths = shuffleWidths(roundPlans(
+      graft.graph.PageRank.runPersonalized(nodes, edges, seeds, iters = 3)))
     // node key + teleport/r0/rank/contribution columns, never wide
     assert(widths.nonEmpty && widths.forall(_ <= 4),
       s"wide shuffle rows: ${widths.mkString(",")}")
@@ -455,15 +449,8 @@ class PlanSpec extends AnyFunSuite {
     val edges = Seq((0L, 10L), (1L, 10L), (1L, 11L)).toDF("src", "dst")
     val hubs = Seq(0L, 1L).toDF("id")
     val auths = Seq(10L, 11L).toDF("id")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val widths =
-      try graft.graph.Hits
-        .run(hubs, auths, edges, iters = 2, checkpoint = false)
-        .queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val widths = shuffleWidths(roundPlans(
+      graft.graph.Hits.run(hubs, auths, edges, iters = 2)))
     assert(widths.nonEmpty && widths.forall(_ <= 3),
       s"wide shuffle rows: ${widths.mkString(",")}")
   }
@@ -508,43 +495,29 @@ class PlanSpec extends AnyFunSuite {
   test("label propagation rounds: hash-aggregate argmax, no window") {
     import spark.implicits._
     val pairs = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)).toDF("a", "b")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val p = graft.graph.LabelProp.run(pairs, rounds = 3,
-          checkpoint = false)
-        .queryExecution.executedPlan
-      // the per-node winner is min(struct(-cnt, lbl)) — never a
-      // row_number window sort over the (node, label) count frame
-      assert(p.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }.isEmpty, "LPA argmax regressed to a window sort")
-      val widths = p.collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      assert(widths.nonEmpty && widths.forall(_ <= 3),
-        s"wide shuffle rows: ${widths.mkString(",")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val ps = roundPlans(graft.graph.LabelProp.run(pairs, rounds = 3))
+    // the per-node winner is min(struct(-cnt, lbl)) — never a
+    // row_number window sort over the (node, label) count frame
+    assert(ps.flatMap(_.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }).isEmpty, "LPA argmax regressed to a window sort")
+    val widths = shuffleWidths(ps)
+    assert(widths.nonEmpty && widths.forall(_ <= 3),
+      s"wide shuffle rows: ${widths.mkString(",")}")
   }
 
   test("random walks: frontier rounds shuffle only narrow rows") {
     import spark.implicits._
     val pairs = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)).toDF("a", "b")
     val seeds = Seq(0L, 1L).toDF("id")
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val p = graft.graph.RandomWalk.walks(pairs, seeds, steps = 3,
-          checkpoint = false)
-        .queryExecution.executedPlan
-      assert(p.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }.isEmpty, "hop argmin regressed to a window sort")
-      // (walk_id, node/dst, h) — the md5 draw never widens a shuffle
-      val widths = p.collect { case e: ShuffleExchangeExec => e }
-        .map(_.output.length)
-      assert(widths.nonEmpty && widths.forall(_ <= 3),
-        s"wide shuffle rows: ${widths.mkString(",")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    val ps = roundPlans(graft.graph.RandomWalk.walks(pairs, seeds, steps = 3))
+    assert(ps.flatMap(_.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }).isEmpty, "hop argmin regressed to a window sort")
+    // (walk_id, node/dst, h) — the md5 draw never widens a shuffle
+    val widths = shuffleWidths(ps)
+    assert(widths.nonEmpty && widths.forall(_ <= 3),
+      s"wide shuffle rows: ${widths.mkString(",")}")
   }
 
   test("q271/q272: every window is keyed — no single-partition data " +

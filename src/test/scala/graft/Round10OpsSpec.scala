@@ -1,73 +1,14 @@
 package graft
 
-import graft.graph.{LabelProp, RandomWalk}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hand-solved ground-truth checks for the round-10 graph operators:
-  * the synchronous LPA fixed point on a barbell graph and the
-  * md5-argmin hop rule of the deterministic random walks.
+/** Hand-solved ground-truth checks for the round-10 operators
+  * (attribution, sequence patterns, survival, calibration, blocking,
+  * bootstrap, encoding, conformal, trend and CUPED statistics).
   */
 class Round10OpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def sym(es: Seq[(Long, Long)]) = {
-    import spark.implicits._
-    (es ++ es.map(_.swap)).toDF("a", "b")
-  }
-
-  test("labelProp: barbell graph converges to its two triangles") {
-    // triangles {1,2,3} and {4,5,6} bridged by 3–4; hand-walked:
-    // l1 = (2,1,1,3,4,4), l2 = (1,1,1,4,3,3), l3 = (1,1,1,3,3,3) —
-    // stable from round 3, so rounds = 4 lands on the fixed point.
-    val pairs = sym(Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)))
-    val got = LabelProp.run(pairs, rounds = 4, checkpoint = false)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    assert(got == Map(
-      1L -> (1L, 3L), 2L -> (1L, 3L), 3L -> (1L, 3L),
-      4L -> (3L, 3L), 5L -> (3L, 3L), 6L -> (3L, 3L)))
-  }
-
-  test("labelProp: frequency beats smaller label, ties break down") {
-    // star: hub 10 with leaves 7, 8, 9 — after round 1 the hub holds
-    // the smallest leaf label (tie of three), each leaf holds 10.
-    val pairs = sym(Seq((10L, 7L), (10L, 8L), (10L, 9L)))
-    val got = LabelProp.run(pairs, rounds = 1, checkpoint = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(10L -> 7L, 7L -> 10L, 8L -> 10L, 9L -> 10L))
-  }
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  test("randomWalk: follows the md5-argmin hop rule exactly") {
-    // path 1–2–3: step 1 from seed 1 must go to 2 (only neighbor);
-    // step 2 from 2 picks argmin over {1, 3} of md5("1:2:" + v).
-    val pairs = sym(Seq((1L, 2L), (2L, 3L)))
-    val seeds = {
-      import spark.implicits._; Seq(1L).toDF("id")
-    }
-    val got = RandomWalk.walks(pairs, seeds, steps = 2,
-        checkpoint = false)
-      .collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val expStep2 =
-      if (md5hex("1:2:1") < md5hex("1:2:3")) 1L else 3L
-    assert(got == Map(0 -> 1L, 1 -> 2L, 2 -> expStep2))
-  }
-
-  test("randomWalk: isolated seed keeps only its step-0 row") {
-    import spark.implicits._
-    val pairs = sym(Seq((1L, 2L)))
-    val got = RandomWalk.walks(pairs, Seq(1L, 9L).toDF("id"),
-        steps = 3, checkpoint = false)
-      .groupBy("walk_id").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(9L) == 1L)
-    assert(got(1L) == 4L)
-  }
 
   test("attribution: hand-solved 3-touch credit split with remainders") {
     import spark.implicits._
@@ -304,15 +245,5 @@ class Round10OpsSpec extends AnyFunSuite {
     val f = ops.Stats.cuped(flat, "x", "y").collect()(0)
     assert(f.isNullAt(1) && f.getFloat(3) == f.getFloat(2) &&
       f.getFloat(4) == 0f)
-  }
-
-  test("randomWalk: replays identically (common-random-number draw)") {
-    val pairs = sym(Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 4L)))
-    val seeds = { import spark.implicits._; Seq(1L, 2L).toDF("id") }
-    def run() = RandomWalk.walks(pairs, seeds, steps = 4,
-        checkpoint = false)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .toSet
-    assert(run() == run())
   }
 }
