@@ -71,7 +71,7 @@ object ScaleSmoke {
           col("a.l_partkey") =!= col("b.l_partkey"))
       .groupBy(col("a.l_partkey").as("a"), col("b.l_partkey").as("b"))
       .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val edges = pairs.drop("w")
 
     println(s"SMOKE config sf=$sfDir k=$k shuffle=$shuffleParts")

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Dataset, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Registry of the suite's memoized SHARED-BUILD artifacts (the
   * co-purchase edge frame, the triangle bundle, the Brandes bundle,
@@ -34,14 +34,16 @@ import org.apache.spark.sql.{Dataset, GraftSqlShims, SparkSession}
   *   - Bench hygiene only: every consumer's answer is identical to
   *     rebuilding inline, and each oracle still derives the artifact
   *     independently.
-  *   - `clear` releases what the memo owned: each held frame whose
-  *     logical plan is a single `LogicalRDD` leaf (the checkpoint the
-  *     builder made itself, via `localCheckpoint(true)` or
-  *     `localCheckpointFreshStats`) has that RDD unpersisted,
-  *     blocking, so its storage is free on return instead of whenever
-  *     a JVM GC lets the ContextCleaner run. Held frames that are
-  *     still lazy plans are only dropped — their leaves may belong to
-  *     someone else.
+  *   - Each build is a [[Checkpoints]] scope whose kept checkpoints
+  *     the memo owns: when `build` returns, every checkpoint it made
+  *     that its value does not read is already released (intermediate
+  *     frames, per-round scratch), and those the value reads — its
+  *     checkpoint leaves, including the leaves under a lazy union —
+  *     stay stored until `clear` releases them, blocking, so their
+  *     storage is free on return instead of whenever a JVM GC lets the
+  *     ContextCleaner run. A memo looked up inside another scope (the
+  *     triangle and Brandes bundles read the co-purchase frame) keeps
+  *     its frames: they are its own, not the enclosing scope's.
   *
   * Registration happens in each query pack's object initializer, which
   * `SparkEntry.queries` forces before any bench/verify loop runs.
@@ -51,7 +53,7 @@ object SharedBuilds {
   /** One memoized artifact: `clear` releases the given session's held
     * frames (so `force` rebuilds from scratch); `force(session, dir)`
     * builds and MATERIALIZES the artifact for a fixture dir (the
-    * builders end in eager `localCheckpoint(true)`, so returning is
+    * builders end in eager [[Checkpoints]], so returning is
     * materializing). */
   final case class Entry(name: String,
       clear: SparkSession => Unit,
@@ -65,25 +67,18 @@ object SharedBuilds {
   def memo[T](name: String)(
       build: (SparkSession, String) => T): (SparkSession, String) => T = {
     val held = new java.util.WeakHashMap[SparkSession,
-      ConcurrentHashMap[String, T]]()
+      ConcurrentHashMap[String, (T, () => Unit)]]()
     val lookup = (s: SparkSession, d: String) =>
       held.synchronized {
         held.computeIfAbsent(s, _ => new ConcurrentHashMap())
-      }.computeIfAbsent(d, _ => build(s, d))
+      }.computeIfAbsent(d, _ => Checkpoints.owned(build(s, d)))._1
     val clear = (s: SparkSession) =>
       held.synchronized(Option(held.get(s))).foreach { byDir =>
         byDir.keySet.asScala.foreach(d =>
-          Option(byDir.remove(d)).foreach(release))
+          Option(byDir.remove(d)).foreach { case (_, release) => release() })
       }
     reg.put(name, Entry(name, clear, (s, d) => { lookup(s, d); () }))
     lookup
-  }
-
-  /** Unpersist every checkpoint leaf among a held value's frames. */
-  private def release(held: Any): Unit = held match {
-    case df: Dataset[_] => GraftSqlShims.releaseCheckpoint(df)
-    case frames: Product => frames.productIterator.foreach(release)
-    case _ =>
   }
 
   /** All registered artifacts, name-sorted — dependency order is by

@@ -30,9 +30,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CloseStats(Tables.load(spark, "/root/testdata/sf0.001", "events"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * runs in a [[Checkpoints]] scope: the checkpoints it made that the
+    * frame it returns does not read are released before it returns. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    packs.flatMap(_.queries).map { case (name, f) =>
+      name -> ((s: SparkSession, d: String) => Checkpoints.scoped(f(s, d)))
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
+import graft.Checkpoints
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate Neighborhood Function — the ACTUAL sketched algorithm
@@ -34,9 +35,9 @@ import org.apache.spark.sql.functions._
   * map-side max-combine, checkpointed per round with fresh statistics
   * — by hand, not through [[graft.Rounds]], because every round's
   * frame feeds the union of hop readouts materialized after the last
-  * round (the frames are released once it is); each hop readout is one
-  * map-side-combined per-id aggregate → one exact-long global sum. Nothing quadratic, no
-  * window over data-sized frames.
+  * round (the call's scope releases the frames once it is); each hop
+  * readout is one map-side-combined per-id aggregate → one exact-long
+  * global sum. Nothing quadratic, no window over data-sized frames.
   */
 object Anf {
 
@@ -106,18 +107,17 @@ object Anf {
     *         hop with eff_diameter repeated
     */
   def neighborhood(nodes: DataFrame, edges: DataFrame,
-      rounds: Int = 4): DataFrame = {
-    val e = edges.select(col("a"), col("b")).localCheckpoint(true)
-    var frames = Seq(init(nodes).localCheckpoint(true))
+      rounds: Int = 4): DataFrame = Checkpoints.scoped {
+    val e = Checkpoints(edges.select(col("a"), col("b")))
+    var frames = Seq(Checkpoints(init(nodes)))
     for (_ <- 1 to rounds) frames = frames :+
-      GraftSqlShims.localCheckpointFreshStats(round(frames.last, e))
+      Checkpoints(round(frames.last, e))
     val per = frames.zipWithIndex.map { case (frame, h) =>
         estimateC(frame)
           .agg(count(lit(1)).as("n_nodes"), sum(col("est_c")).as("anf_c"))
           .select(lit(h).as("hop"), col("n_nodes"), col("anf_c"))
       }.reduce(_ unionByName _)
-      .localCheckpoint(true) // feeds the total row AND the output
-    (e +: frames).foreach(GraftSqlShims.releaseCheckpoint)
+      .transform(Checkpoints(_)) // feeds the total row AND the output
     val tot = broadcast(per.where(col("hop") === rounds)
       .select(col("anf_c").as("tot")))
     val cum = per.crossJoin(tot)

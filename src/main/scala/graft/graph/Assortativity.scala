@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object Assortativity {
   def degreeCorrelation(edges: DataFrame): DataFrame = {
     val deg = edges.groupBy(col("a").as("id"))
       .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // joined on both endpoints
+      .transform(Checkpoints(_)) // joined on both endpoints
     val pairs = edges
       .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
@@ -86,7 +87,7 @@ object Assortativity {
     val lb = labels.select(col("id").as("b"), col("cls").as("cb"))
     val cells = edges.join(broadcast(la), "a").join(broadcast(lb), "b")
       .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("e"))
-      .localCheckpoint(true) // feeds M, the diagonal AND the marginals
+      .transform(Checkpoints(_)) // feeds M, the diagonal AND the marginals
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val marg = cells.groupBy(col("ca"))
       .agg(sum(col("e")).as("ai"),
@@ -129,7 +130,7 @@ object Assortativity {
       ks: Seq[Int] = Seq(2, 4, 8, 16, 32)): DataFrame = {
     val deg = edges.groupBy(col("a").as("id"))
       .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // endpoint joins AND the node sweep
+      .transform(Checkpoints(_)) // endpoint joins AND the node sweep
     val kf = ks.map(k => s"($k)").mkString(",")
     val pairs = edges
       .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")

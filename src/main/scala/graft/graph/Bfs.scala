@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.Rounds
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,14 +75,14 @@ object Bfs {
     val per = hops(nodes, edges, seeds, rounds)
       .where(col("hop") >= 0)
       .groupBy(col("hop")).agg(count(lit(1)).as("n_first"))
-      .localCheckpoint(true) // the cum window AND the total row
+      .transform(Checkpoints(_)) // the cum window AND the total row
     val tot = broadcast(per.agg(sum(col("n_first")).as("tot")))
     val w = Window.orderBy(col("hop"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = per
       .withColumn("cum_reached", sum(col("n_first")).over(w))
       .crossJoin(tot)
-      .localCheckpoint(true) // feeds the diameter row AND the output
+      .transform(Checkpoints(_)) // feeds the diameter row AND the output
     val ed = broadcast(cum
       .where(col("cum_reached") * 10 >= col("tot") * 9)
       .agg(min(col("hop")).as("eff_diameter")))

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.Checkpoints
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Seeded path-based centralities: Brandes betweenness (node and
@@ -38,9 +39,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: per-round shuffle is frontier×degree on (src, id)
   * hash keys (the [[Bfs]] frontier contract, with the source
   * dimension multiplying width by k — choose k accordingly); per
-  * level one groupBy; per-round eager checkpoint with fresh stats,
-  * by hand rather than through [[graft.Rounds]], because the forward
-  * table and the terms are unions of every round's frame. No window
+  * level one groupBy; one [[graft.Checkpoints]] frame per round, in a
+  * hand-written loop rather than [[graft.Rounds]], because the forward
+  * table and the terms are unions of every round's frame. Nothing here
+  * releases a frame: the scope that runs a build (the shared build's,
+  * or the caller's) frees every frame its value does not read — the
+  * forward rounds once `ds` copies them, the DAG edges and the level
+  * deltas — and keeps `ds` and the per-level terms leaves. No window
   * sorts, no driver loops over nodes.
   */
 object Centrality {
@@ -54,7 +59,7 @@ object Centrality {
     var labeled = seeds.select(col("id")).distinct()
       .select(col("id").as("src"), col("id"), lit(0).as("dist"),
         lit(1L).as("sigma"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var frontier = labeled
     for (r <- 1 to rounds) {
       val next = e.join(frontier.select(col("id").as("a"), col("src"),
@@ -64,7 +69,7 @@ object Centrality {
         .join(labeled.select(col("src"), col("id")), Seq("src", "id"),
           "left_anti")
         .select(col("src"), col("id"), lit(r).as("dist"), col("sigma"))
-        .transform(GraftSqlShims.localCheckpointFreshStats)
+        .transform(Checkpoints(_))
       // plain union of ALREADY-CHECKPOINTED per-round frames: the
       // accumulated set is only anti-joined/scanned, so re-copying all
       // rows into a fresh checkpoint every round bought nothing
@@ -84,7 +89,7 @@ object Centrality {
   def brandesTerms(edges: DataFrame, seeds: DataFrame,
       rounds: Int): (DataFrame, DataFrame) = {
     val e = edges.select(col("a"), col("b"))
-    val ds = distSigma(edges, seeds, rounds).localCheckpoint(true)
+    val ds = Checkpoints(distSigma(edges, seeds, rounds))
     // The SHORTEST-PATH-DAG EDGE SET, built in ONE pass (guide §2.4 /
     // §1.2): (src, id, w, vdist, sigma, sw) for every DAG edge id→w
     // (dist(w) = dist(id)+1 under the same src). The per-level
@@ -110,7 +115,7 @@ object Centrality {
       .where(col("wdist") === col("dist") + 1)
       .select(col("src"), col("id"), col("w"), col("dist").as("vdist"),
         col("sigma"), col("sw"))
-      .transform(GraftSqlShims.localCheckpointFreshStats)
+      .transform(Checkpoints(_))
     // Backward recursion, level by level (inherent sequencing: t(v→w)
     // needs δ of the DEEPER level). prevDelta is the PREVIOUS level's
     // complete node spine — at the deepest level every dw is 0, and
@@ -142,7 +147,7 @@ object Centrality {
           // div result is a Long again.
           expr("cast(sigma as decimal(38,0)) * (1000000 + dw) div sw")
             .as("t"))
-        .transform(GraftSqlShims.localCheckpointFreshStats)
+        .transform(Checkpoints(_))
       val contrib = terms.groupBy(col("src"), col("id"))
         .agg(sum(col("t")).as("delta_u"))
       val lvlDelta = ds.where(col("dist") === r)
@@ -150,7 +155,7 @@ object Centrality {
         .join(contrib, Seq("src", "id"), "left")
         .select(col("src"), col("id"),
           coalesce(col("delta_u"), lit(0L)).as("delta_u"))
-        .transform(GraftSqlShims.localCheckpointFreshStats)
+        .transform(Checkpoints(_))
       prevDelta = Some(lvlDelta)
       acc = Some(acc.map(_.unionByName(terms)).getOrElse(terms))
     }

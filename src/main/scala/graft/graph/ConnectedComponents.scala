@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected edge list —
@@ -44,7 +44,7 @@ object ConnectedComponents {
     * @return (id, component) — component = smallest reachable id
     */
   def run(nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = 50): DataFrame = {
+      maxIters: Int = 50): DataFrame = Checkpoints.scoped {
     // materialize the caller's edge derivation BEFORE the orientation
     // union: the union's two branches are separate physical subtrees,
     // so a heavy pair producer (banded fingerprint join over an audio
@@ -52,11 +52,10 @@ object ConnectedComponents {
     // branch — plus once more for a broadcast build side, which
     // ReuseExchange shares but a re-planned union branch does not
     val e0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val e = e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    GraftSqlShims.releaseCheckpoint(e0)
+      .transform(Checkpoints(_))
     // round 0 fused: label(v) = min(v, min neighbor); also defines the
     // active (edge-touched) vertex set — isolated nodes skip the loop
     var done = false
@@ -81,7 +80,6 @@ object ConnectedComponents {
     }(Rounds.until(sum(col("component").cast("decimal(38,0)"))) {
       (prev, s) => done = prev.contains(s); done
     })
-    GraftSqlShims.releaseCheckpoint(e)
     // A silent partial merge would give callers (dupClusters,
     // clusterDedup) wrong clusters with no signal — fail loudly.
     // Pointer jumping converges in O(log diameter), so hitting the
@@ -122,7 +120,7 @@ object ConnectedComponents {
         coalesce(col("pb"), col("b")).as("b"))
       // reps reads this twice and run() once more — and the new-edge
       // producer is typically a heavy delta pair family; materialize
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val reps = contracted.select(col("a").as("id"))
       .unionByName(contracted.select(col("b").as("id"))).distinct()
     // rep → merged component over the contracted graph; each rep is

@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** HITS (Kleinberg) hubs & authorities in exact fixed-point integers
@@ -40,9 +40,8 @@ object Hits {
     *         `auth` for the dst side, score in 10⁻⁶ units
     */
   def run(hubs: DataFrame, auths: DataFrame, edges: DataFrame,
-      iters: Int = 5): DataFrame = {
-    val e = GraftSqlShims.localCheckpointFreshStats(
-      edges.select(col("src"), col("dst")))
+      iters: Int = 5): DataFrame = Checkpoints.scoped {
+    val e = Checkpoints(edges.select(col("src"), col("dst")))
     val hSpine = hubs.select(col("id"))
     val aSpine = auths.select(col("id"))
     def renorm(scores: DataFrame): DataFrame = {
@@ -56,29 +55,32 @@ object Hits {
               * scale + 0.5).cast("long"))
             .otherwise(col("s")).as("s"))
     }
-    var a: DataFrame = null
-    val h = Rounds.iterate(hSpine.select(col("id"), lit(scale).as("s")),
-        iters) { (h, k) =>
+    def auth(h: DataFrame): DataFrame = {
       val aSums = e.join(h, col("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("s")).as("t"))
-      // ONE materialization per full round (r17, guide §1.2): the
-      // half-round auth frame stays LAZY — h's checkpoint action
-      // evaluates it exactly once (its heavy aggregate is shared with
-      // its pivot subquery via exchange reuse, the r16 finding), so
-      // eagerly copying it out too only doubled the job count.
-      // Lineage stays bounded at depth 2. The LAST auth frame is
-      // checkpointed because the output union reads it directly.
-      a = renorm(aSpine
+      renorm(aSpine
         .join(aSums, col("id") === col("dst"), "left_outer")
         .select(col("id"), coalesce(col("t"), lit(0L)).as("s")))
-      if (k == iters) a = GraftSqlShims.localCheckpointFreshStats(a)
+    }
+    def hub(a: DataFrame): DataFrame = {
       val hSums = e.join(a, col("dst") === col("id"))
         .groupBy(col("src")).agg(sum(col("s")).as("t"))
       renorm(hSpine
         .join(hSums, col("id") === col("src"), "left_outer")
         .select(col("id"), coalesce(col("t"), lit(0L)).as("s")))
-    }(Rounds.fixed)
-    GraftSqlShims.releaseCheckpoint(e)
+    }
+    // ONE materialization per full round (r17, guide §1.2): the
+    // half-round auth frame stays LAZY — h's checkpoint action
+    // evaluates it exactly once (its heavy aggregate is shared with
+    // its pivot subquery via exchange reuse, the r16 finding), so
+    // eagerly copying it out too only doubled the job count. Lineage
+    // stays bounded at depth 2. The LAST auth frame is checkpointed
+    // because the output union reads it directly, so the last round
+    // runs after the loop.
+    val hPrev = Rounds.iterate(hSpine.select(col("id"), lit(scale).as("s")),
+      iters - 1)((h, _) => hub(auth(h)))(Rounds.fixed)
+    val a = Checkpoints(auth(hPrev))
+    val h = Checkpoints(hub(a))
     h.select(col("id"), lit("hub").as("kind"), col("s").as("score_fp"))
       .unionByName(a.select(col("id"), lit("auth").as("kind"),
         col("s").as("score_fp")))

@@ -35,8 +35,8 @@ object KCore {
   /** Undirected edges (`a`, `b`; dups/loops/direction ignored) →
     * (id, core_deg): the vertices surviving `maxRounds` rounds of
     * k-peeling with their degree inside the surviving subgraph.
-    */
-  /** @param symmetricDistinct input-contract flag (the
+    *
+    * @param symmetricDistinct input-contract flag (the
     *        [[Triangles.perNodeBundle]] rule): true promises a
     *        loop-free distinct directed symmetric pair set, replacing
     *        the canonicalization dedup exchange with a map-side

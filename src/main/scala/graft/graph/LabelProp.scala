@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synchronous label-propagation community detection (Raghavan,
@@ -36,8 +36,8 @@ object LabelProp {
     * @param rounds fixed synchronous round count
     * @return (id, lbl, csize) — final label + its community size
     */
-  def run(pairs: DataFrame, rounds: Int = 4): DataFrame = {
-    val e = GraftSqlShims.localCheckpointFreshStats(
+  def run(pairs: DataFrame, rounds: Int = 4): DataFrame = Checkpoints.scoped {
+    val e = Checkpoints(
       pairs.select(col("a").as("src"), col("b").as("dst")))
     val lbl = Rounds.iterate(e.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")), rounds) { (lbl, _) =>
@@ -50,7 +50,6 @@ object LabelProp {
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("m"))
         .select(col("dst").as("id"), col("m.lbl").as("lbl"))
     }(Rounds.fixed)
-    GraftSqlShims.releaseCheckpoint(e)
     val sizes = lbl.groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
     lbl.join(sizes, "lbl").select(col("id"), col("lbl"), col("csize"))
   }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object LinkPred {
     *         a < b canonical, ra_fp in 10⁻⁶ units
     */
   def resourceAllocation(edges: DataFrame, topK: Int = 50): DataFrame = {
-    val canon = Triangles.canonical(edges).localCheckpoint(true)
+    val canon = Checkpoints(Triangles.canonical(edges))
     val deg = Triangles.degreesOf(canon)
     val nb = canon.select(col("u").as("z"), col("v").as("n"))
       .unionByName(canon.select(col("v").as("z"), col("u").as("n")))

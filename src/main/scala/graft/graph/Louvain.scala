@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   * aggregate of at most |communities| rows, whose winners are counted
   * and applied in one id-keyed aggregate over state ∪ winners; the
   * window's shuffle on c closes the round. 5 Spark jobs a round under
-  * AQE at bench scale. The edge checkpoint is released on return.
+  * AQE at bench scale. The call's scope releases the edge checkpoint.
   */
 object Louvain {
 
@@ -93,7 +93,7 @@ object Louvain {
     * §1.2).
     */
   private[graft] def oneLevelLabelsW(edges: DataFrame,
-      rounds: Int = 4): DataFrame = {
+      rounds: Int = 4): DataFrame = Checkpoints.scoped {
     // edges hash-partitioned on src ONCE (an explicit count, so AQE
     // cannot coalesce it away): every src-keyed step below reads the
     // checkpoint in place. Each row carries its src's strength k;
@@ -101,7 +101,7 @@ object Louvain {
     // node's first row also emits an (i, i, 0) MARKER, whose dst-side
     // join brings the node's own state to its src partition.
     val bySrc = Window.partitionBy(col("src")).orderBy(col("dst"))
-    val e = GraftSqlShims.localCheckpointPartitioned(edges.select(
+    val e = Checkpoints.partitioned(edges.select(
         col("a").as("src"), col("b").as("dst"),
         col("w").cast("long").as("w"))
       .repartition(edges.sparkSession.conf
@@ -166,7 +166,6 @@ object Louvain {
           sum(col("k")).over(Window.partitionBy(col("c"))).as("dc"),
           col("moved"))
     }(Rounds.until(count(when(col("moved"), 1)))((_, n) => n == 0L))
-    GraftSqlShims.releaseCheckpoint(e)
     st
   }
 
@@ -194,7 +193,7 @@ object Louvain {
     *         node count
     */
   def twoLevel(pairs: DataFrame, rounds1: Int = 4,
-      rounds2: Int = 4): DataFrame = {
+      rounds2: Int = 4): DataFrame = Checkpoints.scoped {
     // the level-1 label frame is already checkpointed by the ascent
     // loop — read it bare instead of decorating it with sizes and
     // re-checkpointing the projection (r17, guide §1.2: the old form
@@ -211,10 +210,8 @@ object Louvain {
     // level 2 likewise needs only the labels — its csize is recomputed
     // over ORIGINAL nodes below, never read from the contracted ascent
     val st2 = oneLevelLabelsW(e2, rounds2)
-    val fin = GraftSqlShims.localCheckpointFreshStats(
+    val fin = Checkpoints(
       lbl1.join(st2.select(col("id").as("c1"), col("c").as("c2")), "c1"))
-    GraftSqlShims.releaseCheckpoint(st1)
-    GraftSqlShims.releaseCheckpoint(st2)
     val sizes = fin.groupBy(col("c2")).agg(count(lit(1)).as("csize"))
     fin.join(sizes, "c2")
       .select(col("id"), col("c1"), col("c2").as("community"),

@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Maximal independent set by Luby's algorithm (Luby 1986) — the
@@ -55,8 +55,8 @@ object Mis {
     *          of the two orientations is distinct by construction, so
     *          only the distinct is skipped.
     *        All three yield the identical undirected edge set. */
-  def luby(vertices: DataFrame, edges: DataFrame,
-      rounds: Int = 3, edgeShape: String = "raw"): DataFrame = {
+  def luby(vertices: DataFrame, edges: DataFrame, rounds: Int = 3,
+      edgeShape: String = "raw"): DataFrame = Checkpoints.scoped {
     require(rounds >= 1, "Luby needs at least one round")
     // both directions once: the neighborhood tests below are symmetric
     val swapped = edges.select(col("dst").as("src"), col("src").as("dst"))
@@ -67,14 +67,12 @@ object Mis {
       case _ =>
         edges.select(col("src"), col("dst")).unionByName(swapped)
           .distinct()
-    }).localCheckpoint(true)
+    }).transform(Checkpoints(_))
     // each round's priority frame feeds both join sides and the
-    // winners; it is released once the state it fed is checkpointed
-    var pri: DataFrame = null
+    // winners; the round's scope releases it
     val st = Rounds.iterate(vertices.select(col("id"), lit(0).as("state")),
         rounds) { (st, r) =>
-      if (pri != null) GraftSqlShims.releaseCheckpoint(pri)
-      pri = GraftSqlShims.localCheckpointFreshStats(
+      val pri = Checkpoints(
         st.where(col("state") === 0)
           .select(col("id"), prio(r, col("id")).as("p")))
       // min (priority, id) over ACTIVE neighbors (both ends active)
@@ -99,8 +97,6 @@ object Mis {
           when(col("state") =!= 0, col("state"))
             .otherwise(coalesce(col("mk"), lit(0))).as("state"))
     }(Rounds.fixed)
-    GraftSqlShims.releaseCheckpoint(pri)
-    GraftSqlShims.releaseCheckpoint(und)
     st.select(col("id"), col("state").cast("int").as("state"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,19 +32,11 @@ object Modularity {
     * @return (community, n_nodes, deg_sum, intra_edges, contrib,
     *         q_mod) — q_mod repeated (broadcast-total pattern)
     */
-  /** The label-annotated edge frame BEFORE its checkpoint — split out
-    * so PlanSpec can assert the two broadcast label joins (the eager
-    * checkpoint in [[byPartition]] hides its upstream plan). */
-  private[graft] def labeled(edges: DataFrame,
-      labels: DataFrame): DataFrame = {
+  def byPartition(edges: DataFrame, labels: DataFrame): DataFrame = {
     val la = labels.select(col("id").as("a"), col("community").as("ca"))
     val lb = labels.select(col("id").as("b"), col("community").as("cb"))
-    edges.join(broadcast(la), "a").join(broadcast(lb), "b")
-  }
-
-  def byPartition(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val e = labeled(edges, labels)
-      .localCheckpoint(true) // feeds m, degrees and intra counts
+    val e = Checkpoints( // feeds m, degrees and intra counts
+      edges.join(broadcast(la), "a").join(broadcast(lb), "b"))
     val m = e.agg(count(lit(1)).as("m"))
     val degC = e.groupBy(col("ca").as("community"))
       .agg(count(lit(1)).as("deg_sum"),
@@ -53,7 +46,7 @@ object Modularity {
       .agg(count(lit(1)).as("intra_edges"))
     val cells = degC.join(intra, Seq("community"), "left")
       .na.fill(0L, Seq("intra_edges"))
-      .localCheckpoint(true) // feeds rows and the 1-row total
+      .transform(Checkpoints(_)) // feeds rows and the 1-row total
     val tot = cells.agg(sum(col("intra_edges")).as("si"),
       sum(col("deg_sum") * col("deg_sum")).as("sd"))
     def r6(c: org.apache.spark.sql.Column) =

@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank in EXACT fixed-point integer arithmetic.
@@ -103,9 +103,9 @@ object PageRank {
     * weight `w` per row: contribution (r·w) div Σw, so w = 1 is
     * exactly `r div outdeg`. */
   private def rankLoop(spine: DataFrame, edges: DataFrame, w: Column,
-      iters: Int): DataFrame = {
-    val sp = GraftSqlShims.localCheckpointFreshStats(spine)
-    val eDeg = GraftSqlShims.localCheckpointFreshStats(edges.join(
+      iters: Int): DataFrame = Checkpoints.scoped {
+    val sp = Checkpoints(spine)
+    val eDeg = Checkpoints(edges.join(
       edges.groupBy(col("src")).agg(sum(w).as("d")), "src"))
     val out = Rounds.iterate(sp.select(col("id"), col("r0").as("r")),
         iters) { (ranks, _) =>
@@ -117,8 +117,6 @@ object PageRank {
         .select(col("id"),
           (col("tele") + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
     }(Rounds.fixed)
-    GraftSqlShims.releaseCheckpoint(eDeg)
-    GraftSqlShims.releaseCheckpoint(sp)
     out.select(col("id"), col("r").as("rank_fp"))
   }
 

@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.Checkpoints
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic seeded random walks — the corpus generator for
@@ -24,9 +25,9 @@ import org.apache.spark.sql.functions._
   * never the whole graph), followed by a single hash-aggregate argmin
   * `min(struct(h, dst))` per walk (no window sort), checkpointed per
   * step with fresh statistics. Every step's frame stays in the output
-  * union, so this loop is not a [[graft.Rounds]] loop: only the edge
-  * checkpoint is released before return. Walk count scales with the seed set,
-  * independent of |V|.
+  * union, so this loop is not a [[graft.Rounds]] loop: the call's
+  * scope releases only the edge checkpoint. Walk count scales with the
+  * seed set, independent of |V|.
   */
 object RandomWalk {
 
@@ -37,14 +38,14 @@ object RandomWalk {
     * @return (walk_id, step, node) — step 0 is the seed itself
     */
   def walks(pairs: DataFrame, seeds: DataFrame,
-      steps: Int = 4): DataFrame = {
-    val e = GraftSqlShims.localCheckpointFreshStats(
+      steps: Int = 4): DataFrame = Checkpoints.scoped {
+    val e = Checkpoints(
       pairs.select(col("a").as("src"), col("b").as("dst")))
     var cur = seeds.select(col("id").as("walk_id"), col("id").as("node"))
     var out = cur.select(col("walk_id"), lit(0).cast("int").as("step"),
       col("node"))
     for (t <- 1 to steps) {
-      cur = GraftSqlShims.localCheckpointFreshStats(cur
+      cur = Checkpoints(cur
         .join(e, col("node") === col("src"))
         .select(col("walk_id"), col("dst"),
           md5(concat_ws(":", col("walk_id"), lit(t), col("dst"))).as("h"))
@@ -54,7 +55,6 @@ object RandomWalk {
       out = out.unionByName(cur.select(col("walk_id"),
         lit(t).cast("int").as("step"), col("node")))
     }
-    GraftSqlShims.releaseCheckpoint(e)
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,12 +60,12 @@ object Triangles {
   def perNodeBundle(edges: DataFrame,
       symmetricDistinct: Boolean = false): (DataFrame, DataFrame) = {
     // checkpointed: it feeds degree + both orientation lookups
-    val canon = canonical(edges, symmetricDistinct).localCheckpoint(true)
-    val deg = degrees(canon).localCheckpoint(true)
+    val canon = Checkpoints(canonical(edges, symmetricDistinct))
+    val deg = Checkpoints(degrees(canon))
     val counts = trianglesOf(orientedOf(canon, deg))
       .select(explode(array(col("n1"), col("n2"), col("n3"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     (deg, counts)
   }
 
@@ -163,7 +164,7 @@ object Triangles {
       .withColumn("sd", least(col("du"), col("dv")))
       .withColumn("dd", greatest(col("du"), col("dv")))
       .select(col("src"), col("dst"), col("sd"), col("dd"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
   }
 
   /** The degree-oriented, bloom-gated triangle stream (n1, n2, n3)

@@ -1,7 +1,7 @@
 package graft.graph
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** k-truss peeling (Cohen 2008) — the cohesion subgraph between
@@ -29,15 +29,14 @@ import org.apache.spark.sql.functions._
   */
 object Truss {
 
-  def kTruss(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int,
+      rounds: Int = 3): DataFrame = Checkpoints.scoped {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    // the orientation checkpoint each support count reads is released
-    // by the next count, once the frame it fed is checkpointed
-    var oriented: DataFrame = null
-    def support(canon: DataFrame): DataFrame = {
-      if (oriented != null) GraftSqlShims.releaseCheckpoint(oriented)
-      oriented = Triangles.orientedOf(canon, Triangles.degreesOf(canon))
-      Triangles.trianglesOf(oriented)
+    // each support count checkpoints its own orientation, which the
+    // scope of the round (or of this call) releases
+    def support(canon: DataFrame): DataFrame =
+      Triangles.trianglesOf(
+          Triangles.orientedOf(canon, Triangles.degreesOf(canon)))
         .select(explode(array(
           array(least(col("n1"), col("n2")),
             greatest(col("n1"), col("n2"))),
@@ -48,7 +47,6 @@ object Truss {
         .select(element_at(col("e"), 1).as("u"),
           element_at(col("e"), 2).as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-    }
     val canon = Rounds.iterate(Triangles.canonical(edges), rounds) {
       (canon, _) =>
         canon.join(support(canon), Seq("u", "v"), "left_outer")

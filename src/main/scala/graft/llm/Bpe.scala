@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -85,21 +86,21 @@ object Bpe {
       .withColumn("sym", concat(lit(" "), concat_ws(" ", expr(
           "transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
         lit(" </w> ")))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var merges: DataFrame = null
     (1 to nMerges).foreach { r =>
       val best = pairsOf(words)
         .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(1)
         .select(lit(r).cast("int").as("rank"),
           col("lhs"), col("rhs"), col("cnt"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       merges = if (merges == null) best else merges.unionByName(best)
       words = words.crossJoin(
           broadcast(best.select(col("lhs"), col("rhs"))))
         .withColumn("sym", expr("replace(sym, " +
           "' ' || lhs || ' ' || rhs || ' ', ' ' || lhs || rhs || ' ')"))
         .drop("lhs", "rhs")
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     (merges, words.select(col("word"), col("freq"),
       trim(col("sym")).as("sym")))
@@ -144,7 +145,7 @@ object Bpe {
       .withColumn("sym", concat(lit(" "), concat_ws(" ", expr(
           "transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
         lit(" </w> ")))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var merges: DataFrame = null
     (1 to nMerges).foreach { r =>
       val syms = words
@@ -160,14 +161,14 @@ object Bpe {
         .orderBy(col("score_fp").desc, col("lhs"), col("rhs")).limit(1)
         .select(lit(r).cast("int").as("rank"),
           col("lhs"), col("rhs"), col("cnt"), col("score_fp"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       merges = if (merges == null) best else merges.unionByName(best)
       words = words.crossJoin(
           broadcast(best.select(col("lhs"), col("rhs"))))
         .withColumn("sym", expr("replace(sym, " +
           "' ' || lhs || ' ' || rhs || ' ', ' ' || lhs || rhs || ' ')"))
         .drop("lhs", "rhs")
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     (merges, words.select(col("word"), col("freq"),
       trim(col("sym")).as("sym")))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -737,7 +738,7 @@ object Corpus {
     // it saves is the whole text column
     val scored = docs.select(col("doc_id"), col("lang"),
       TextOps.qualityCol(col("text")).as("quality"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val sk = scored.groupBy(col("lang"))
       .agg(graft.functions.BottomKByHash(
         col("quality"), col("doc_id"), k).as("vs"))
@@ -779,7 +780,7 @@ object Corpus {
     val scored = docs.select(col("doc_id"), col("lang"),
         TextOps.qualityCol(col("text")).as("quality"))
       .where(col("quality").isNotNull)
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val sk = scored.groupBy(col("lang"))
       .agg(graft.functions.BottomKByHash(
         col("quality"), col("doc_id"), k).as("vs"))
@@ -816,7 +817,7 @@ object Corpus {
       nStreams: Int = 8): DataFrame = {
     val kept = sourceCap(docs, cap)
     val base = docs.join(kept.select(col("doc_id")), "doc_id")
-      .localCheckpoint(true) // feeds splits AND packing
+      .transform(Checkpoints(_)) // feeds splits AND packing
     packManifest(base, budget, nStreams)
       .join(assignSplits(base).select(col("doc_id"), col("split")), "doc_id")
       .join(kept.select(col("doc_id"), col("source")), "doc_id")
@@ -843,7 +844,7 @@ object Corpus {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(TextOps.tokens(col("text"))).cast("long")).as("n_tokens"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val total = agg.agg(sum("n_tokens").as("total_tokens"))
     val share = col("n_tokens").cast("double") / col("total_tokens")
     agg.crossJoin(broadcast(total))
@@ -884,7 +885,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"),
         sum(size(TextOps.tokens(col("text"))).cast("long")).as("n_tokens"))
       .withColumn("wr", pow(col("n_tokens").cast("double"), lit(alpha)))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val norm = agg.agg(sum("n_tokens").as("total_tokens"), sum("wr").as("z"))
     val rawShare = col("n_tokens").cast("double") / col("total_tokens")
     agg.crossJoin(broadcast(norm))
@@ -1021,16 +1022,16 @@ object Corpus {
       .where(col("keep")).select(col("doc_id"))
     val s1 = docs.join(gated, "doc_id")
       .select(col("doc_id"), col("lang"), col("text"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val cd = Dedup.clusterDedup(s1, Dedup.dupClusters(s1, maxHamming))
     val s2 = s1.join(
         cd.where(col("keep"))
           .select(col("doc_id"), col("cluster"), col("quality")), "doc_id")
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val dec = decontaminate(s2, benchEvery, shingleN)
     val s3 = s2.where(col("doc_id") % benchEvery =!= 0)
       .join(dec.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     // packStream's default (lang, shard) stream key reuses shardShuffle's
     // md5 shard math (same salt "ep0"), so joining on (doc_id, shard)
     // is lossless by construction: each output shard is packed
@@ -1102,7 +1103,7 @@ object Corpus {
     val world = corpus.select(col("doc_id"), col("lang"), col("text"))
       .unionByName(batch.select(col("doc_id"), col("lang"), col("text"))
         .join(gated, "doc_id"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val jp = Dedup.jaccardPairsDelta(world, isNewDoc,
       threshold = jaccardThreshold)
     val sp = Dedup.simhashPairsDelta(world, isNewDoc, maxHamming)

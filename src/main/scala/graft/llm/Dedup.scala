@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -253,7 +254,7 @@ object Dedup {
     // read the shingle frame — materialize the tokenize+shingle pass
     // once (the persisted-fingerprint-store shape of dupClustersDelta)
     val arrays = TextOps.shingleArrays(spread(docs), n)
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     verifyExact(prefixCandidates(arrays, threshold, deltaOnly = false),
       arrays, threshold)
   }
@@ -293,7 +294,7 @@ object Dedup {
     // same fan-out as jaccardPairsPrefix: one materialized shingle pass
     val arrays = spread(docs).select(col("doc_id"), isNew.as("nw"),
       TextOps.shingleSet(TextOps.tokens(col("text")), n).as("arr"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     verifyExact(
       prefixCandidates(arrays, threshold, deltaOnly = true, bloomGate),
       arrays.select(col("doc_id"), col("arr")), threshold)
@@ -683,7 +684,7 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(TextOps.tokens(col("text"))).as(Seq("p0", "tk")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("tk"))
-      .localCheckpoint(true) // feeds totals AND the anti-join
+      .transform(Checkpoints(_)) // feeds totals AND the anti-join
     val total = toks.groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("int").as("n_tokens"))
     val kept = toks.join(covered, Seq("doc_id", "pos"), "left_anti")
@@ -730,7 +731,7 @@ object Dedup {
       .select(col("doc_id"), col("ci").as("chunk_idx"), col("start"),
         (col("endp") - col("start") + 1).as("n_bytes"),
         md5(expr("substring(payload, start, endp - start + 1)")).as("dig"))
-      .localCheckpoint(true) // feeds the rows AND the df aggregate
+      .transform(Checkpoints(_)) // feeds the rows AND the df aggregate
     val dfreq = ch.groupBy(col("dig"))
       .agg(countDistinct(col("doc_id")).as("df"))
     ch.join(dfreq, "dig")
@@ -816,12 +817,12 @@ object Dedup {
         conv(substring(
           md5(concat_ws(" ", slice(col("wd"), col("i"), lit(n)))),
           1, 12), 16, 10).cast("long").as("h"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     // stop-anchor cap: viral boilerplate n-grams leave before the join
     val keep = grams.groupBy(col("h"))
       .agg(count_distinct(col("doc_id")).as("df"))
       .where(col("df") <= maxDf).select(col("h"))
-    val occ = grams.join(keep, Seq("h")).localCheckpoint(true)
+    val occ = Checkpoints(grams.join(keep, Seq("h")))
     val a = occ.select(col("h"), col("doc_id").as("da"), col("i").as("ia"))
     val b = occ.select(col("h"), col("doc_id").as("db"), col("i").as("ib"))
     val pairPred =
@@ -858,7 +859,7 @@ object Dedup {
     // three consumers (bloom build, probe side, union-back) — without
     // the checkpoint each would recompute the upstream selection/cap/
     // prefix work (the repo's two-consumer-fan-out discipline)
-    val t = tagged.localCheckpoint(true)
+    val t = Checkpoints(tagged)
     // a NULL newness predicate means OLD here: the ungated join's
     // (a.nw || b.nw) only ever keeps a NULL-nw row when its partner is
     // new, exactly the pairs the bloom preserves — routing NULL to the
@@ -885,7 +886,7 @@ object Dedup {
     // narrow (doc_id, pos, fp) sketch once. (The r16 no-checkpoint
     // note applied to the old distinct()-terminated form, whose
     // Exchange the consumers shared via reuse.)
-    val base = winnow(docs, k, w).localCheckpoint(true)
+    val base = Checkpoints(winnow(docs, k, w))
     val s = deltaPred match {
       case Some(p) => base.withColumn("nw", p)
       case None => base
@@ -1067,7 +1068,7 @@ object Dedup {
         substring(col("text"), 1, prefixLen).as("pfx"))
     val ranked = graft.ops.Scan
       .globalRunningSum(keyed, Seq("k", "doc_id"), lit(1L), "rn")
-      .localCheckpoint(true) // both sides of the neighbor join
+      .transform(Checkpoints(_)) // both sides of the neighbor join
     def jw(a: Column, b: Column): Column =
       GraftSqlShims.column(graft.functions.JaroWinkler(
         GraftSqlShims.expression(a), GraftSqlShims.expression(b)))
@@ -1182,7 +1183,7 @@ object Dedup {
     // image hashes) that doubles the dominant cost. The frame is
     // narrow (doc_id, 64-bit string, long), so materializing it once
     // is cheap at any scale next to recomputing the producer.
-    val fp = fpIn.localCheckpoint(true)
+    val fp = Checkpoints(fpIn)
     val flagged = deltaPred match {
       case Some(p) => fp.withColumn("nw", p)
       case None => fp
@@ -1296,7 +1297,7 @@ object Dedup {
     // frame IS the persisted store.
     val allPairs = pairsFromFp(fpFrame(docs, bits), maxHamming, None,
         bits)
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val oldPairs = allPairs
       .where(!isNewId(col("da")) && !isNewId(col("db")))
       .select(col("da").as("a"), col("db").as("b"))
@@ -1409,7 +1410,7 @@ object Dedup {
     // and recomputing claims means re-shuffling every digest)
     val claims = segs.groupBy(col("dig"))
       .agg(min(col("ord")).as("w_ord"), count(lit(1)).as("df"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     // normal digests take the hash join with per-key fan-in <=
     // viralDf, viral ones the broadcast winner map
     val normal = claims.where(col("df") <= viralDf).drop("df")
@@ -1479,7 +1480,7 @@ object Dedup {
       mask: Int = 8): DataFrame = {
     // one chunking pass serves both sides (in production this frame is
     // the persisted chunk store)
-    val chunks = cdcChunkFrame(docs, k, mask).localCheckpoint(true)
+    val chunks = Checkpoints(cdcChunkFrame(docs, k, mask))
     val oldDigs = chunks.where(!isNewId(col("doc_id")))
       .select(col("dig")).distinct()
     val newCh = chunks.where(isNewId(col("doc_id")))

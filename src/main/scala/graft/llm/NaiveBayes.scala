@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,14 +42,14 @@ object NaiveBayes {
     val base = TextOps.spread(docs.where(col("text").isNotNull &&
         col("lang").isin(classes: _*)))
       .select(col("doc_id"), col("lang"), col("text"))
-      .localCheckpoint(true) // feeds tokens AND the label join
+      .transform(Checkpoints(_)) // feeds tokens AND the label join
     val toks = base.select(col("doc_id"), col("lang"),
       explode(TextOps.tokens(col("text"))).as("tok"))
     val tf = toks.groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     val ct = toks.groupBy(col("lang").as("cl"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // feeds totals, vocab AND log-probs
+      .transform(Checkpoints(_)) // feeds totals, vocab AND log-probs
     val totals = ct.groupBy(col("cl")).agg(sum(col("cnt")).as("tot"))
     val vocab = ct.agg(countDistinct(col("tok")).as("v"))
     val priors = base.groupBy(col("lang").as("cl"))

@@ -1,7 +1,7 @@
 package graft.llm
 
-import graft.Rounds
-import org.apache.spark.sql.{DataFrame, GraftSqlShims}
+import graft.{Checkpoints, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PCA leading component by power iteration, in the exact-integer
@@ -127,10 +127,10 @@ object Pca {
   }
 
   private def loadingsFromCov(cov0: DataFrame, dim: Int,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Checkpoints.scoped {
     val spark = cov0.sparkSession
     import spark.implicits._
-    val cov = cov0.localCheckpoint(true)
+    val cov = Checkpoints(cov0)
     val v = Rounds.iterate((0 until dim).map(j => (j, vScale)).toDF("j", "v"),
         iters) { (v, _) =>
       val y = cov.join(v, "j")
@@ -145,7 +145,6 @@ object Pca {
               * vScale + 0.5).cast("long"))
             .otherwise(lit(vScale)).as("v"))
     }(Rounds.fixed)
-    GraftSqlShims.releaseCheckpoint(cov)
     v.select(col("j").cast("int").as("pos"), col("v").as("loading_fp"))
       .orderBy(col("pos"))
   }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -321,7 +322,7 @@ object Retrieval {
         when(col("rmax") > col("rmin"),
           expr("(10000 * (r0 - rmin)) div (rmax - rmin)"))
           .otherwise(lit(10000L)).as("rel"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     // distinct 3-shingle rows for candidate docs only
     val sh = cand.select(col("doc_id")).distinct()
       .join(TextOps.spread(docs.where(col("text").isNotNull)), "doc_id")
@@ -329,7 +330,7 @@ object Retrieval {
         explode(array_distinct(
           TextOps.shingleMultiset(TextOps.tokens(col("text")), 3)))
           .as("sh"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val pairs = cand.select(col("query_id"), col("doc_id").as("da"))
       .join(cand.select(col("query_id"), col("doc_id").as("db")),
@@ -348,7 +349,7 @@ object Retrieval {
         col("db").as("pd"),
         expr("(10000 * coalesce(ni, 0)) div (na + nb - coalesce(ni, 0))")
           .as("sim"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var state = cand.withColumn("ms", lit(0L))
     var out: DataFrame = null
     for (t <- 1 to k) {
@@ -368,7 +369,7 @@ object Retrieval {
         .join(sims, Seq("query_id", "doc_id", "pd"), "left_outer")
         .select(col("query_id"), col("doc_id"), col("rel"),
           greatest(col("ms"), coalesce(col("sim"), lit(0L))).as("ms"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     out
   }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -382,7 +383,7 @@ object Similarity {
         sum(col("a6").cast("decimal(38,0)")).as("sa"))
       .select(col("cell"),
         (col("sa").cast("double") / col("n") / 1e6).as("sc"))
-      .localCheckpoint(true) // both sides of the cluster-pair frame
+      .transform(Checkpoints(_)) // both sides of the cluster-pair frame
     val cf = cents.select(explode(col("ca")).as("s"))
       .select(col("s.cell").as("cell"), col("s.c").as("c"))
     val pairs = cf.as("i").join(cf.as("j"),
@@ -575,22 +576,17 @@ object Similarity {
     * id-keyed semi-join — embeddings never travel with the verdict.
     *
     * The assigned frame feeds THREE consumers (both pair-join sides
-    * and the verdict join), so it is eagerly `localCheckpoint`ed by
-    * default — without that the whole iterative Lloyd chain re-executes
-    * per consumer (the corpusPipeline discipline; at warehouse scale
-    * the slot is a checkpoint table). `persist = false` exposes the
-    * raw composed plan for structural inspection (PlanSpec).
+    * and the verdict join), so it is eagerly checkpointed — without
+    * that the whole iterative Lloyd chain re-executes per consumer
+    * (the corpusPipeline discipline; at warehouse scale the slot is a
+    * checkpoint table).
     *
     * @return one row per input vector: (vec_id, cell, keep)
     */
   def semDedup(embeddings: DataFrame, threshold: Double = 0.35,
-      nlist: Int = 16, iters: Int = 2,
-      persist: Boolean = true): DataFrame = {
-    val assignedRaw = lloydArtifact(embeddings, nlist, iters)._2
-    val assigned =
-      if (persist) assignedRaw.localCheckpoint(true) else assignedRaw
-    semDedupFrom(assigned, threshold)
-  }
+      nlist: Int = 16, iters: Int = 2): DataFrame =
+    semDedupFrom(Checkpoints(lloydArtifact(embeddings, nlist, iters)._2),
+      threshold)
 
   /** [[semDedup]] over a prebuilt [[lloydArtifact]] assigned frame —
     * the caller owns persistence (the memoized bundle is already
@@ -773,7 +769,7 @@ object Similarity {
     // both sides of the bucket self-join read the plane-projection
     // pass (numTables × bitsPerTable dots per vector); when one side
     // broadcasts, the stream side re-runs it — materialize once
-    val eb = withBuckets(e, dim).localCheckpoint(true)
+    val eb = Checkpoints(withBuckets(e, dim))
     eb.as("a").join(eb.as("b"),
         col("a.table") === col("b.table") &&
           col("a.bucket") === col("b.bucket") &&
@@ -877,7 +873,7 @@ object Similarity {
     val per = q.groupBy(col("vec_id"))
       .agg(sum((col("q").cast("decimal(19,0)") * col("q")
         .cast("decimal(19,0)")).cast("decimal(38,0)")).as("n2"))
-      .localCheckpoint(true) // feeds the moment row AND the output
+      .transform(Checkpoints(_)) // feeds the moment row AND the output
     val m = per.agg(count(lit(1)).as("n"),
       sum(col("n2")).as("s"),
       sum((col("n2") * col("n2")).cast("decimal(38,0)")).as("ss"))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +51,7 @@ object TextOps {
           " i -> struct(w[i - 1] AS a, w[i] AS b))")).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
     val cab = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds marginals, total and the join
+      .transform(Checkpoints(_)) // feeds marginals, total and the join
     val cl = cab.groupBy(col("a")).agg(sum(col("c")).as("cl"))
     val cr = cab.groupBy(col("b")).agg(sum(col("c")).as("cr"))
     val n = cab.agg(sum(col("c")).as("n"))
@@ -492,7 +493,7 @@ object TextOps {
         concat_ws(" ", slice(col("w"), col("i"), lit(2))).as("g"))
     val bc = bi.groupBy(col("w1"), col("w2"), col("g"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds pc, ct, tot AND the prob table
+      .transform(Checkpoints(_)) // feeds pc, ct, tot AND the prob table
     val pc = bc.groupBy(col("w1"))
       .agg(sum(col("c")).as("cw"), count(lit(1)).as("t1"))
     val ct = bc.groupBy(col("w2")).agg(count(lit(1)).as("tc"))
@@ -560,13 +561,13 @@ object TextOps {
         explode(sequence(lit(1), size(col("w")) - 2)).as("i"), col("w"))
       .select(col("doc_id"),
         concat_ws(" ", slice(col("w"), col("i"), lit(3))).as("g"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val tg = tri.groupBy(col("g")).agg(count(lit(1)).as("c"))
       .withColumn("p3", split(col("g"), " "))
       .select(element_at(col("p3"), 1).as("u"),
         element_at(col("p3"), 2).as("v"),
         element_at(col("p3"), 3).as("w3"), col("g"), col("c"))
-      .localCheckpoint(true) // feeds ctx, cont, mid AND the prob table
+      .transform(Checkpoints(_)) // feeds ctx, cont, mid AND the prob table
     val ctx = tg.groupBy(col("u"), col("v"))
       .agg(sum(col("c")).as("cuv"), count(lit(1)).as("t12"))
     val cont = tg.groupBy(col("v"), col("w3"))
@@ -578,7 +579,7 @@ object TextOps {
       .select(element_at(col("w"), col("i")).as("b1"),
         element_at(col("w"), col("i") + 1).as("b2"))
       .distinct()
-      .localCheckpoint(true) // feeds t1, cw, tot
+      .transform(Checkpoints(_)) // feeds t1, cw, tot
     val t1 = bt.groupBy(col("b1")).agg(count(lit(1)).as("t1"))
       .withColumnRenamed("b1", "v")
     val cw = bt.groupBy(col("b2")).agg(count(lit(1)).as("ncw"))
@@ -646,7 +647,7 @@ object TextOps {
   def distinctNgrams(docs: DataFrame, maxN: Int = 3): DataFrame = {
     val toks = spread(docs.where(col("text").isNotNull))
       .select(tokens(col("text")).as("w"))
-      .localCheckpoint(true) // swept once per n
+      .transform(Checkpoints(_)) // swept once per n
     (1 to maxN).map { n =>
       toks.where(size(col("w")) >= n)
         .select(explode(sequence(lit(1), size(col("w")) - (n - 1)))
@@ -711,7 +712,7 @@ object TextOps {
   def heapsLaw(docs: DataFrame, checkpoints: Int = 10): DataFrame = {
     val toks = spread(docs.where(col("text").isNotNull))
       .select(col("doc_id"), tokens(col("text")).as("w"))
-      .localCheckpoint(true) // feeds span, per-doc counts, first-seen
+      .transform(Checkpoints(_)) // feeds span, per-doc counts, first-seen
     val span = toks.agg(min(col("doc_id")).as("d0"),
       max(col("doc_id")).as("d1"))
     val cuts = broadcast(span
@@ -732,7 +733,7 @@ object TextOps {
         .as("n_distinct"))
     val pts = tc.join(dc, Seq("chk", "cut"))
       .where(col("n_tokens") > 0 && col("n_distinct") > 0)
-      .localCheckpoint(true) // feeds the fit AND the output rows
+      .transform(Checkpoints(_)) // feeds the fit AND the output rows
     val beta = broadcast(logLogMoments(pts, col("n_tokens"),
         col("n_distinct"))
       .select(slopeCol.cast("float").as("heaps_beta")))
@@ -759,7 +760,7 @@ object TextOps {
     val top = counts.orderBy(col("cnt").desc, col("term")).limit(topN)
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("cnt").desc, col("term"))).cast("long"))
-      .localCheckpoint(true) // feeds the fit AND the summary row
+      .transform(Checkpoints(_)) // feeds the fit AND the summary row
     val m = logLogMoments(top, col("rnk"), col("cnt"))
       .select(col("n").cast("int").as("n_terms"),
         slopeCol.cast("float").as("zipf_slope"))
@@ -1073,7 +1074,7 @@ object TextOps {
     // the candidate frame is read three times (both per-order overlap
     // joins and the output spine) and is typically itself a banded/
     // prefix-filtered join — materialize the (da, db) rows once
-    val cand = pairs.localCheckpoint(true)
+    val cand = Checkpoints(pairs)
     val toks = spread(docs.where(col("text").isNotNull))
       .select(col("doc_id"), tokens(col("text")).as("w"))
     def gramCounts(n: Int): DataFrame = {
@@ -1089,7 +1090,7 @@ object TextOps {
       // and no shared Exchange between them — materialize the
       // tokenize+explode+count pass once per order
       g.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     def side(n: Int, tag: String): (DataFrame, DataFrame) = {
       val gc = gramCounts(n)

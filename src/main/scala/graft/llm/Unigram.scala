@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -112,7 +113,7 @@ object Unigram {
     */
   private[graft] def viterbi(words: DataFrame, vocab: DataFrame,
       maxPieceLen: Int, maxWordLen: Int): DataFrame = {
-    val v = broadcast(vocab.localCheckpoint(true))
+    val v = broadcast(Checkpoints(vocab))
     // Contract guard (r16 advice): the per-row DP has no round bound,
     // so a word longer than maxWordLen could return a segmentation
     // with np > maxWordLen that the round form cannot reach. Every
@@ -165,11 +166,11 @@ object Unigram {
     */
   private[graft] def viterbiRounds(words: DataFrame, vocab: DataFrame,
       maxPieceLen: Int, maxWordLen: Int): DataFrame = {
-    val v = broadcast(vocab.localCheckpoint(true))
+    val v = broadcast(Checkpoints(vocab))
     var state = words.select(col("word"), col("freq"),
         lit(0).as("pos"), lit(0L).as("ns"), lit(0).as("np"),
         array().cast("array<string>").as("pieces"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     (1 to maxWordLen).foreach { _ =>
       val fin = state.where(col("pos") === length(col("word")))
       val cand = state.where(col("pos") < length(col("word")))
@@ -197,7 +198,7 @@ object Unigram {
         .select(col("word"), col("pos"), col("b.ns").as("ns"),
           col("b.np").as("np"), col("b.pieces").as("pieces"),
           col("b.freq").as("freq"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     state.where(col("pos") === length(col("word")))
       .select(col("word"), col("freq"), col("ns"), col("np"),
@@ -210,7 +211,7 @@ object Unigram {
     val counts = segs
       .select(col("freq"), explode(col("pieces")).as("piece"))
       .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint(true) // feeds the union AND the anti-join
+      .transform(Checkpoints(_)) // feeds the union AND the anti-join
     counts.unionByName(
       chars.join(counts, Seq("piece"), "left_anti")
         .select(col("piece"), lit(1L).as("cnt")))
@@ -227,17 +228,17 @@ object Unigram {
       seedSize: Int, emIters: Int, vocabSize: Int, maxWordLen: Int)
       : (DataFrame, DataFrame) = {
     require(emIters >= 1 && seedSize >= 1 && vocabSize >= 1)
-    val words = wordTable(docs, maxWordLen).localCheckpoint(true)
-    val subs = substringCounts(words, maxPieceLen).localCheckpoint(true)
+    val words = Checkpoints(wordTable(docs, maxWordLen))
+    val subs = Checkpoints(substringCounts(words, maxPieceLen))
     val chars = subs.where(length(col("piece")) === 1)
-      .select(col("piece")).localCheckpoint(true)
+      .select(col("piece")).transform(Checkpoints(_))
     val seed = subs.where(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece")).limit(seedSize)
       .unionByName(subs.where(length(col("piece")) === 1))
     var vocab = seed
     (1 to emIters).foreach { _ =>
       val segs = viterbi(words, scored(vocab), maxPieceLen, maxWordLen)
-      vocab = mStep(segs, chars).localCheckpoint(true)
+      vocab = Checkpoints(mStep(segs, chars))
     }
     val pruned = vocab.where(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece")).limit(vocabSize)
@@ -251,7 +252,7 @@ object Unigram {
     val (pruned0, words) = trainVocab(docs, maxPieceLen, seedSize,
       emIters, vocabSize, maxWordLen)
     val pruned = pruned0
-      .localCheckpoint(true) // feeds the vocab output AND final pass
+      .transform(Checkpoints(_)) // feeds the vocab output AND final pass
     val finalSegs = viterbi(words, scored(pruned), maxPieceLen, maxWordLen)
     (pruned, finalSegs)
   }

@@ -95,13 +95,24 @@ object PartitionIO {
       Seq("year", "month", "day"), clusterBy = Seq("id"))
   }
 
-  /** Trailing-window reload at HOUR grain: rows whose hour-bucket
-    * falls in [trunc(asOf) − hours, trunc(asOf)] — both ends
-    * inclusive, so `hours + 1` buckets are rewritten (same convention
-    * as [[reloadTrailingWindow]]) — into their (year, month, day,
-    * hour) partitions: the `candles_minute`-shaped reload, one level
-    * deeper than the day tables.
-    */
+  /** Recursively force every nullability flag true so the type-flip
+    * check compares SHAPE only (an `array<int>` whose containsNull
+    * differs is the same type for append purposes). */
+  private def normalizeNullability(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ArrayType(e, _) =>
+        ArrayType(normalizeNullability(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(normalizeNullability(k), normalizeNullability(v),
+          valueContainsNull = true)
+      case StructType(fs) => StructType(fs.map(f => f.copy(
+        dataType = normalizeNullability(f.dataType), nullable = true)))
+      case other => other
+    }
+  }
+
   /** Additive schema evolution on the incremental write path — dbt's
     * `on_schema_change='append_new_columns'`
     * (modules/dbt/crypto_etl_pjr/models/crypto/marts/
@@ -122,24 +133,6 @@ object PartitionIO {
     * Composes with dynamic partition overwrite, so the evolved write
     * keeps S6–S10's idempotency-under-retry.
     */
-  /** Recursively force every nullability flag true so the type-flip
-    * check compares SHAPE only (an `array<int>` whose containsNull
-    * differs is the same type for append purposes). */
-  private def normalizeNullability(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ArrayType(e, _) =>
-        ArrayType(normalizeNullability(e), containsNull = true)
-      case MapType(k, v, _) =>
-        MapType(normalizeNullability(k), normalizeNullability(v),
-          valueContainsNull = true)
-      case StructType(fs) => StructType(fs.map(f => f.copy(
-        dataType = normalizeNullability(f.dataType), nullable = true)))
-      case other => other
-    }
-  }
-
   def appendNewColumns(updates: DataFrame, path: String,
       partitionCols: Seq[String], clusterBy: Seq[String] = Nil,
       format: String = "parquet"): Unit = {
@@ -178,6 +171,13 @@ object PartitionIO {
       format: String = "parquet"): DataFrame =
     spark.read.option("mergeSchema", "true").format(format).load(path)
 
+  /** Trailing-window reload at HOUR grain: rows whose hour-bucket
+    * falls in [trunc(asOf) − hours, trunc(asOf)] — both ends
+    * inclusive, so `hours + 1` buckets are rewritten (same convention
+    * as [[reloadTrailingWindow]]) — into their (year, month, day,
+    * hour) partitions: the `candles_minute`-shaped reload, one level
+    * deeper than the day tables.
+    */
   def reloadTrailingHours(source: DataFrame, path: String, tsCol: String,
       hours: Int, asOf: String, format: String = "parquet"): Unit = {
     val hi = date_trunc("hour", lit(asOf).cast("timestamp"))

@@ -75,12 +75,6 @@ object IndicatorDay {
     */
   private def edge(c: Column): Column = when(c =!= 0.0, c).cast("float")
 
-  /** Full indicator frame over bars (id, tkey, open, high, low, close,
-    * volume) + any carry columns. Output: carry ++ (id, tkey, open,
-    * high, low, close, volume, n_multiple) ++ [[indicatorCols]], all
-    * indicator values Double (no edge coercion yet — [[apply]] does
-    * that), warm-up rows NULL.
-    */
   /** Resume-mode helper columns `indicators(resume = true)` expects on
     * its input (all joined per id by [[incrementalFrom]]; the state
     * structs come from [[stateSnapshot]], NULL for ids with no
@@ -91,6 +85,12 @@ object IndicatorDay {
     "_rn_off", "_obv0", "_ema5_st", "_ema10_st", "_ema30_st",
     "_ema12_st", "_ema26_st", "_sig9_st", "_rsi_st")
 
+  /** Full indicator frame over bars (id, tkey, open, high, low, close,
+    * volume) + any carry columns. Output: carry ++ (id, tkey, open,
+    * high, low, close, volume, n_multiple) ++ [[indicatorCols]], all
+    * indicator values Double (no edge coercion yet — [[apply]] does
+    * that), warm-up rows NULL.
+    */
   def indicators(bars: DataFrame, carry: Seq[String] = Nil,
       exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
       nMultiple: Double = IndicatorDay.nMultiple,

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,7 @@ object Calibration {
     val pre = binned
       .withColumn("cn", sum(col("nb")).over(w))
       .withColumn("cp", sum(col("pb")).over(w))
-      .localCheckpoint(true) // three bounded self-joins below
+      .transform(Checkpoints(_)) // three bounded self-joins below
     // interval averages a(j,k) = floor(1e6·(Sk − Sj₋₁)/(Ck − Cj₋₁)):
     // bounded triangle self-join (≤ B²/2 rows)
     val j = pre.select(col("bin").as("j"),
@@ -125,7 +126,7 @@ object Calibration {
     require(alphaPct >= 1 && alphaPct < 100, "alpha percent in [1, 100)")
     val base = df.where(col(scoreCol).isNotNull)
       .select(cents(col(scoreCol)).as("v"), isCal.as("cal"))
-      .localCheckpoint(true) // feeds the scan AND the audit
+      .transform(Checkpoints(_)) // feeds the scan AND the audit
     val calCounts = base.where(col("cal"))
       .groupBy(col("v")).agg(count(lit(1)).as("ct"))
     val scanned = Scan.globalRunningSum(calCounts, Seq("v"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,7 @@ object Concentration {
     val ranked = Scan.globalRunningSum(
         units.select(col(idCol).as("uid"), col(centsCol).as("x")),
         Seq("x", "uid"), lit(1L), run = "rk")
-      .localCheckpoint(true) // consumed by moments + both share sums
+      .transform(Checkpoints(_)) // consumed by moments + both share sums
     val moments = ranked.agg(
       count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("t"),
@@ -106,7 +107,7 @@ object Concentration {
     */
   def theil(units: DataFrame, centsCol: String): DataFrame = {
     val base = units.select(col(centsCol).as("x"))
-      .localCheckpoint(true) // totals row AND the term pass
+      .transform(Checkpoints(_)) // totals row AND the term pass
     val tot = broadcast(base.agg(count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("t")))
     val mu = col("t").cast("double") / col("n")

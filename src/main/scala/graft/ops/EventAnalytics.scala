@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,7 +155,7 @@ object EventAnalytics {
         acc.join(nxt, Seq("user_id", "sid"), "left_outer")
     }
     // chain feeds |steps| count aggregates — materialize once
-    val done = chain.localCheckpoint(true)
+    val done = Checkpoints(chain)
     val counts = steps.indices.map { i =>
       done.agg(count(col(s"t_${i + 1}")).as("n_sessions"))
         .select(lit(i + 1).as("step"), lit(steps(i)).as("step_name"),
@@ -185,7 +186,7 @@ object EventAnalytics {
       minCount: Long = 3L): DataFrame = {
     val b = facts.select(col(basketCol).as("bk"), col(itemCol).as("it"))
       .distinct()
-      .localCheckpoint(true) // pair join ×2 + item counts + total
+      .transform(Checkpoints(_)) // pair join ×2 + item counts + total
     // basket total as a broadcast 1-row frame (the q07 scalar shape —
     // no driver-side count action)
     val nB = b.select(col("bk")).distinct()
@@ -275,7 +276,7 @@ object EventAnalytics {
       .where(col("user_id").isNotNull && col("ts").isNotNull)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint(true) // feeds actives AND first-day sides
+      .transform(Checkpoints(_)) // feeds actives AND first-day sides
     val daily = act.groupBy(col("day"))
       .agg(count(lit(1)).as("n_active"))
     val firstDay = act.groupBy(col("user_id"))
@@ -367,7 +368,7 @@ object EventAnalytics {
     // ≤ |type domain| rows per session enter the rank window
     val ranked = firsts.withColumn("rk", row_number().over(rw))
       .select(col("user_id"), col("sid"), col("event_type"), col("rk"))
-      .localCheckpoint(true) // fans into the 3-way self-join
+      .transform(Checkpoints(_)) // fans into the 3-way self-join
     def leg(i: Int) = ranked.select(col("user_id"), col("sid"),
       col("event_type").as(s"t$i"), col("rk").as(s"r$i"))
     leg(1)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -60,7 +61,7 @@ object ImplicitMf {
     require(iters >= 1, "implicit MF needs at least one round")
     val r = ratings.select(col("u"), col("i"),
         (lit(1L) + lit(alpha) * col("cnt")).cast("decimal(38,0)").as("c"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var v = r.select(col("i").as("id")).distinct()
       .select(col("id"), expr(s"cast($scaleFp as decimal(38,0))").as("f"))
     var u: DataFrame = null
@@ -96,7 +97,7 @@ object ImplicitMf {
       .select(col("id"),
         expr(s"cast(fr as decimal(38,0)) * $scaleFp div mx")
           .cast("decimal(38,0)").as("f"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
   }
 
   /** Rank-2 ALS (the r14 verdict's "rank-k generalization shuffles
@@ -142,7 +143,7 @@ object ImplicitMf {
     require(iters >= 1, "implicit MF needs at least one round")
     val r = ratings.select(col("u"), col("i"),
         (lit(1L) + lit(alpha) * col("cnt")).cast("decimal(38,0)").as("c"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     var v = r.select(col("i").as("id")).distinct()
       .select(col("id"),
         expr(s"cast($scaleFp as decimal(38,0))").as("f1"),
@@ -216,7 +217,7 @@ object ImplicitMf {
           .cast("decimal(38,0)").as("f1"),
         expr(s"cast(x2 as decimal(38,0)) * $scaleFp div m2")
           .cast("decimal(38,0)").as("f2"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
   }
 
   /** Rank-2 rounds unrolled as DuckDB MATERIALIZED CTEs (HUGEINT

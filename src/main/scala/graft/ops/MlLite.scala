@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object MlLite {
       .select(((col(valueCol).cast("decimal(18,2)") * 100)
           .cast("long").cast("double") * lit(xScale)).as("x"),
         when(isPos, 1.0).otherwise(0.0).as("y"))
-      .localCheckpoint(true) // every Newton step re-reads the frame
+      .transform(Checkpoints(_)) // every Newton step re-reads the frame
     def solve(stats: DataFrame): DataFrame = {
       def d(n: String) = col(n).cast("double") / lit(1e12)
       val (sw, swx, swxx, sr, srx) =

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -76,7 +77,7 @@ object RangeJoin {
       .cast("long")
     val base = df.where(col(valueCol).isNotNull)
       .select(cents.as("v"))
-      .localCheckpoint(true) // feeds the band derivation AND the join
+      .transform(Checkpoints(_)) // feeds the band derivation AND the join
     val counts = base.groupBy(col("v")).agg(count(lit(1)).as("c"))
     val bands = decileBands(counts)
     chunked(base, bands, chunkWidth)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,8 +42,9 @@ object Scan {
     val keys = keyCols.map(col)
     val parted = df.repartitionByRange(keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // pin range boundaries: local scans and
-                              // totals must see the SAME partitioning
+      .transform(Checkpoints(_)) // pin range boundaries: local scans
+                                 // and totals must see the SAME
+                                 // partitioning
     val wLocal = Window.partitionBy(col("__pid")).orderBy(keys: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = vs.zipWithIndex.foldLeft(parted) {
@@ -85,7 +87,7 @@ object Scan {
       .groupBy(col(valueCol).as("v"))
       .agg(sum(when(col(groupCol) === g1, 1L).otherwise(0L)).as("c1"),
         sum(when(col(groupCol) === g2, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint(true) // feeds the scan twice + the totals row
+      .transform(Checkpoints(_)) // feeds the scan twice + the totals row
     val n = counts.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
     val scanned = globalRunningSums(counts, Seq("v"),
       Seq(col("c1") -> "r1", col("c2") -> "r2"))
@@ -118,7 +120,7 @@ object Scan {
     val rows = df.where(col(valueCol).isNotNull)
       .select(col(idCol), col(valueCol).as("v"))
     val counts = rows.groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the scan and the totals row
+      .transform(Checkpoints(_)) // feeds the scan and the totals row
     val n = counts.agg(sum(col("c")).as("n"))
     val ranks = globalRunningSum(counts, Seq("v"), col("c"), "run")
       .crossJoin(broadcast(n))
@@ -152,7 +154,7 @@ object Scan {
     val counts = df.where(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("v"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the scan and the totals row
+      .transform(Checkpoints(_)) // feeds the scan and the totals row
     val n = counts.agg(sum(col("c")).as("n"))
     globalRunningSum(counts, Seq("v"), col("c"), "run")
       .crossJoin(broadcast(n))

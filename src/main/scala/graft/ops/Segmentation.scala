@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object Segmentation {
       .select(col("cust"),
         datediff(col("d1"), col("last_d")).as("recency_days"),
         col("frequency"), col("mon_c"))
-      .localCheckpoint(true) // feeds the three metric scans + output
+      .transform(Checkpoints(_)) // feeds the three metric scans + output
     def bins(c: String, name: String): DataFrame = {
       val counts = base.groupBy(col(c).as("v"))
         .agg(count(lit(1)).as("ct"))
@@ -184,7 +185,7 @@ object Segmentation {
       .agg(min(col("t")).as("t1"))
       .select((col("t1") - col("t0")).as("delta"))
     val counts = conv.groupBy(col("delta")).agg(count(lit(1)).as("ct"))
-      .localCheckpoint(true) // feeds the scan AND the total row
+      .transform(Checkpoints(_)) // feeds the scan AND the total row
     val n = counts.agg(sum(col("ct")).as("n"))
     val scanned = Scan.globalRunningSum(counts, Seq("delta"),
       col("ct"), "rt").crossJoin(broadcast(n))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,7 +33,7 @@ object Stats {
   def chiSquare(df: DataFrame, a: String, b: String): DataFrame = {
     val cells = df.groupBy(col(a), col(b))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true) // feeds marginals, total and the cell join
+      .transform(Checkpoints(_)) // feeds marginals, total and the cell join
     val rt = cells.groupBy(col(a)).agg(sum("o").as("rt"))
     val ct = cells.groupBy(col(b)).agg(sum("o").as("ct"))
     val n = cells.agg(sum("o").as("n"))
@@ -73,7 +74,7 @@ object Stats {
   def gTest(df: DataFrame, a: String, b: String): DataFrame = {
     val cells = df.groupBy(col(a), col(b))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true) // feeds marginals, total and the cell join
+      .transform(Checkpoints(_)) // feeds marginals, total and the cell join
     val rt = cells.groupBy(col(a)).agg(sum("o").as("rt"))
     val ct = cells.groupBy(col(b)).agg(sum("o").as("ct"))
     val n = cells.agg(sum("o").as("n"))
@@ -172,7 +173,7 @@ object Stats {
       .where(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(keyCol).as("k"), cents(col(xCol)).as("x"),
         cents(col(yCol)).as("y"))
-      .localCheckpoint(true) // both sides of the pair join
+      .transform(Checkpoints(_)) // both sides of the pair join
     val pairs = base.as("a").join(base.as("b"), col("a.k") < col("b.k"))
       .select(signum((col("b.x") - col("a.x")).cast("double"))
           .cast("int").as("cx"),
@@ -267,7 +268,7 @@ object Stats {
       .groupBy(cents(col(valueCol)).as("v"))
       .agg(sum(when(col(groupCol) === g1, 1L).otherwise(0L)).as("c1"),
         sum(when(col(groupCol) === g0, 1L).otherwise(0L)).as("c0"))
-      .localCheckpoint(true) // feeds the scan AND the totals row
+      .transform(Checkpoints(_)) // feeds the scan AND the totals row
     val n = broadcast(counts.agg(sum(col("c1")).as("n1"),
       sum(col("c0")).as("n0")))
     val scanned = Scan.globalRunningSum(counts, Seq("v"), col("c0"),
@@ -369,7 +370,7 @@ object Stats {
       .groupBy(col(valueCol).as("v"))
       .agg(sum(when(col(groupCol) === g1, 1L).otherwise(0L)).as("c1"),
         sum(when(col(groupCol) === g2, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint(true) // feeds the scan AND the totals row
+      .transform(Checkpoints(_)) // feeds the scan AND the totals row
     val n = counts.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
     val ct = col("c1") + col("c2")
     val scanned = Scan.globalRunningSum(counts, Seq("v"), ct, "rt")
@@ -530,7 +531,7 @@ object Stats {
       .groupBy(col(scoreCol).as("v"))
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("c1"),
         sum(when(!col(labelCol), 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint(true) // feeds the scan AND the totals row
+      .transform(Checkpoints(_)) // feeds the scan AND the totals row
     val n = counts.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
     val ct = col("c1") + col("c2")
     val scanned = Scan.globalRunningSum(counts, Seq("v"), ct, "rt")
@@ -681,7 +682,7 @@ object Stats {
     // on one local row.
     def pcol(k: Int, j: Int): Column = col(s"p_${k}_$j")
     var cur = wide.withColumn("p_1_1", col("r1"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     for (k <- 2 to maxLag) {
       val num = col(s"r$k") -
         (1 until k).map(j => pcol(k - 1, j) * col(s"r${k - j}"))
@@ -691,7 +692,7 @@ object Stats {
           .reduce(_ + _)
       cur = cur
         .withColumn(s"p_${k}_$k", when(den =!= 0.0, num / den))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       if (k < maxLag)
         cur = cur.select(col("*") +:
           (1 until k).map(j => (pcol(k - 1, j) -
@@ -797,7 +798,7 @@ object Stats {
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val rows = df.where(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(cents(col(xCol)).as("x"), cents(col(yCol)).as("y"))
-      .localCheckpoint(true) // feeds two rank sides + the pair join
+      .transform(Checkpoints(_)) // feeds two rank sides + the pair join
     def ranks(c: String) = {
       val counts = rows.groupBy(col(c)).agg(count(lit(1)).as("ct"))
       Scan.globalRunningSum(counts, Seq(c), col("ct"), "rt")
@@ -857,7 +858,7 @@ object Stats {
       valueCol: String): DataFrame = {
     val x = cents(col(valueCol))
     val base = series.select(col(keyCol).as("k"), x.as("x"))
-      .localCheckpoint(true) // feeds the scan and the totals row
+      .transform(Checkpoints(_)) // feeds the scan and the totals row
     val n = base.agg(count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("t"))
     val scanned = Scan.globalRunningSums(base, Seq("k"),
@@ -936,7 +937,7 @@ object Stats {
     def medOf(vals: DataFrame): DataFrame = {
       // vals: (v) exact longs; median = smallest v with 2·cum ≥ n
       val counts = vals.groupBy(col("v")).agg(count(lit(1)).as("ct"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       val n = counts.agg(sum(col("ct")).as("n"))
       Scan.globalRunningSum(counts, Seq("v"), col("ct"), "rt")
         .crossJoin(broadcast(n))
@@ -944,7 +945,7 @@ object Stats {
           min(when(col("rt") * 2 >= col("n"), col("v"))).as("med"))
     }
     val base = df.where(col(valueCol).isNotNull).select(x.as("v"))
-      .localCheckpoint(true) // feeds both scans
+      .transform(Checkpoints(_)) // feeds both scans
     val m1 = medOf(base)
     val dev = base.crossJoin(broadcast(m1))
       .select(abs(col("v") - col("med")).as("v"),
@@ -982,13 +983,13 @@ object Stats {
       valueCol: String): DataFrame = {
     val x = cents(col(valueCol))
     val base = series.select(col(keyCol).as("k"), x.as("x"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
     val tot = base.agg(count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("t"))
     val scanned = Scan.globalRunningSums(base, Seq("k"),
         Seq(col("x") -> "run", lit(1L) -> "rk"))
       .crossJoin(broadcast(tot))
-      .localCheckpoint(true) // feeds the split row AND both halves
+      .transform(Checkpoints(_)) // feeds the split row AND both halves
     def dec(c: Column) = c.cast("decimal(38,0)")
     def argmaxOf(df: DataFrame, num: Column, nSeg: Column,
         rkSeg: Column, label: String): DataFrame =
@@ -1073,7 +1074,7 @@ object Stats {
     val base = df.where(col(valueCol).isNotNull)
       .select(col(idCol).cast("string").as("id"),
         col(valueCol).cast("double").as("x"))
-      .localCheckpoint(true) // feeds the point estimate AND replicates
+      .transform(Checkpoints(_)) // feeds the point estimate AND replicates
     val pt = broadcast(base.agg(count(lit(1)).as("n"),
       avg(col("x")).as("est")))
     val ex = base.select(col("x"),
@@ -1130,7 +1131,7 @@ object Stats {
     val base = series
       .where(col(xCol).isNotNull && col(valueCol).isNotNull)
       .select(col(xCol).cast("long").as("x"), cents(col(valueCol)).as("y"))
-      .localCheckpoint(true) // feeds pairs, residuals AND the counts
+      .transform(Checkpoints(_)) // feeds pairs, residuals AND the counts
     val pairs = base.as("a").join(base.as("b"),
         col("a.x") < col("b.x"))
       .select(((col("b.y") - col("a.y")).cast("double") /
@@ -1182,7 +1183,7 @@ object Stats {
     val base = series
       .where(col(xCol).isNotNull && col(valueCol).isNotNull)
       .select(col(xCol).cast("long").as("x"), cents(col(valueCol)).as("y"))
-      .localCheckpoint(true) // pairs + ties + n
+      .transform(Checkpoints(_)) // pairs + ties + n
     val s = base.as("a").join(base.as("b"), col("a.x") < col("b.x"))
       .agg(sum(signum((col("b.y") - col("a.y")).cast("double"))
         .cast("long")).as("s"))
@@ -1232,7 +1233,7 @@ object Stats {
     val rows = df.where(col(targetCol).isNotNull)
       .select(col(groupCol).as("g"), cents(col(targetCol)).as("yc"),
         col(splitCol).as("sp"))
-      .localCheckpoint(true) // feeds fit, calibration, and coverage
+      .transform(Checkpoints(_)) // feeds fit, calibration, and coverage
     val mu = rows.where(col("sp") === 0).groupBy(col("g"))
       .agg(count(lit(1)).as("n_tr"),
         sum(col("yc").cast("decimal(38,0)")).as("s_tr"))
@@ -1293,7 +1294,7 @@ object Stats {
       .groupBy(col(catCol).as("cat"), col(foldCol).as("fold"))
       .agg(count(lit(1)).as("nf"),
         sum(y.cast("decimal(38,0)")).as("sf"))
-      .localCheckpoint(true) // feeds per-cat AND global totals
+      .transform(Checkpoints(_)) // feeds per-cat AND global totals
     val perCat = perFold.groupBy(col("cat"))
       .agg(sum(col("nf")).as("nc"), sum(col("sf")).as("sc"))
     val glob = broadcast(perFold.agg(sum(col("nf")).as("ng"),
@@ -1335,7 +1336,7 @@ object Stats {
     val per = rows.groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
         sum(col("sc")).as("ss"))
-      .localCheckpoint(true) // feeds the report AND the ECE scalar
+      .transform(Checkpoints(_)) // feeds the report AND the ECE scalar
     val conf = col("ss") / col("n")
     val acc = col("n_pos").cast("double") / col("n")
     val gap = abs(acc - conf)
@@ -1384,7 +1385,7 @@ object Stats {
         sum(((col("s6") - col("y") * 1000000L).cast("decimal(19,0)") *
           (col("s6") - col("y") * 1000000L).cast("decimal(19,0)"))
           .cast("decimal(38,0)")).as("sq"))
-      .localCheckpoint(true) // feeds totals AND the bin terms
+      .transform(Checkpoints(_)) // feeds totals AND the bin terms
     val tot = per.agg(sum(col("n")).as("nn"),
       sum(col("n_pos")).as("pp"), sum(col("sq")).as("qq"))
     def d(c: String) = col(c).cast("double")
@@ -1628,7 +1629,7 @@ object Stats {
         armSum(0, v).as("ds0"), armSum(1, v).as("ds1"),
         armSum(0, dec19(v) * dec19(v)).as("dq0"),
         armSum(1, dec19(v) * dec19(v)).as("dq1"))
-      .localCheckpoint(true) // feeds the span row AND the cum window
+      .transform(Checkpoints(_)) // feeds the span row AND the cum window
     val w = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = daily.select(col("day"),
@@ -1672,7 +1673,7 @@ object Stats {
       .withColumn("bound_raw", bound)
       .withColumn("crossed",
         when(col("z_raw").isNotNull, abs(col("z_raw")) >= col("bound_raw")))
-      .localCheckpoint(true) // feeds the first-cross row AND the output
+      .transform(Checkpoints(_)) // feeds the first-cross row AND the output
     val fc = broadcast(looked
       .agg(min(when(col("crossed"), col("look"))).as("first_cross_look")))
     looked.crossJoin(fc)
@@ -1718,7 +1719,7 @@ object Stats {
       // documented metadata-sized window exception
       .withColumn("rk", row_number()
         .over(Window.orderBy(col("bin"))).cast("long"))
-      .localCheckpoint(true) // feeds the rounds AND the final join
+      .transform(Checkpoints(_)) // feeds the rounds AND the final join
     var st = per.select(col("rk").as("lo"), col("rk").as("hi"),
       col("n_pos").as("pos"), col("n").as("bn"))
     for (_ <- 1 until bins) {
@@ -1735,7 +1736,7 @@ object Stats {
         .groupBy(col("g"))
         .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
           sum(col("pos")).as("pos"), sum(col("bn")).as("bn"))
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
     }
     per.join(st, col("rk") >= col("lo") && col("rk") <= col("hi"))
       .select(col("bin").cast("int").as("bin"), col("n"), col("n_pos"),
@@ -1772,7 +1773,7 @@ object Stats {
       .groupBy(col(durCol).as("t"))
       .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("d"),
         sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("c"))
-      .localCheckpoint(true) // feeds the total AND the scans
+      .transform(Checkpoints(_)) // feeds the total AND the scans
     val tot = broadcast(per.agg(sum(col("d") + col("c")).as("nt")))
     val scanned = Scan.globalRunningSum(per, Seq("t"),
       col("d") + col("c"), "cum")
@@ -1957,7 +1958,7 @@ object Stats {
       valueCol: String): DataFrame = {
     val base = series
       .select(col(keyCol).as("k"), cents(col(valueCol)).as("xc"))
-      .localCheckpoint(true) // feeds the moments row AND the chart
+      .transform(Checkpoints(_)) // feeds the moments row AND the chart
     val m = broadcast(base.agg(count(lit(1)).as("n"),
       sum(col("xc").cast("decimal(38,0)")).as("s"),
       sum((col("xc").cast("decimal(19,0)") *
@@ -2021,7 +2022,7 @@ object Stats {
           .as("s0b"),
         sum(when(col("arm") === 1, dec38(col("v"))).otherwise(zero38))
           .as("s1b"))
-      .localCheckpoint(true) // feeds the totals row AND the LOO pass
+      .transform(Checkpoints(_)) // feeds the totals row AND the LOO pass
     val tot = broadcast(per.agg(sum(col("n0b")).as("nn0"),
       sum(col("n1b")).as("nn1"),
       sum(col("s0b")).as("ss0"), sum(col("s1b")).as("ss1")))
@@ -2136,7 +2137,7 @@ object Stats {
       unit: Double = 1.0, pct: Int = 99): DataFrame = {
     val base = obs.select(col(armCol).as("arm"), col(v4Col).as("v"))
     val counts = base.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // feeds the scan AND the totals row
+      .transform(Checkpoints(_)) // feeds the scan AND the totals row
     val n = counts.agg(sum(col("cnt")).as("n"))
     val cap = broadcast(Scan.globalRunningSum(counts, Seq("v"),
         col("cnt"), "rt")
@@ -2253,7 +2254,7 @@ object Stats {
         sum(col("x").cast("decimal(38,0)")).as("sg"),
         sum((dec(col("x")) * dec(col("x"))).cast("decimal(38,0)"))
           .as("qg"))
-      .localCheckpoint(true) // the cross-segment row AND the output
+      .transform(Checkpoints(_)) // the cross-segment row AND the output
     def d(c: Column) = c.cast("double")
     val meanG = d(col("sg")) / col("ng") / 100.0
     val sswG = (d(col("qg")) - d(col("sg")) * d(col("sg")) /
@@ -2320,7 +2321,7 @@ object Stats {
     val per = obs.groupBy(col(idCol).cast("string").as("id"))
       .agg(sum(col(v4Col).cast("decimal(38,0)")).as("yu"),
         min(col(armCol)).as("arm"))
-      .localCheckpoint(true) // feeds the observed row AND replicates
+      .transform(Checkpoints(_)) // feeds the observed row AND replicates
     val tot = broadcast(per.agg(count(lit(1)).as("n"),
       sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1o"),
       sum(col("yu")).as("s"),
@@ -2953,9 +2954,6 @@ object Stats {
       (f > lit(3.841459)).as("x_helps_95"))
   }
 
-  /** ln 9 as a plan-time literal (the entropy normalizer for the
-    * 9-period candidate grid; no libm log(9) in a query path).
-    */
   /** ln(maxPeriod − 1) normalizers for [[spectralEntropy]] as
     * PLAN-TIME literals keyed by maxPeriod (r13 advice: the single
     * hardcoded ln 9 silently mis-normalized any maxPeriod ≠ 10 call).
@@ -3074,7 +3072,7 @@ object Stats {
     val counts = nz.groupBy(col("a"))
       .agg(sum(when(col("pos"), 1L).otherwise(0L)).as("cp"),
         count(lit(1)).as("ct"))
-      .localCheckpoint(true) // feeds the scan AND the totals row
+      .transform(Checkpoints(_)) // feeds the scan AND the totals row
     val n = counts.agg(sum(col("ct")).as("n"))
     val scanned = Scan.globalRunningSum(counts, Seq("a"),
       col("ct"), "rt")
@@ -3232,7 +3230,7 @@ object Stats {
       .select(col("seg"), col("th"),
         floor(lit(1e6) / col("vg")).cast("long").as("w_u"),
         floor(lit(1e6) * col("th") / col("vg")).cast("long").as("wt_u"))
-      .localCheckpoint(true) // feeds the pool row AND the Q pass
+      .transform(Checkpoints(_)) // feeds the pool row AND the Q pass
     val pool = eligible.agg(count(lit(1)).as("k"),
       sum(col("w_u")).as("sw"), sum(col("wt_u")).as("swt"))
     val theta = col("swt").cast("double") / col("sw").cast("double")

@@ -1,5 +1,6 @@
 package graft.quality
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -209,7 +210,7 @@ object DataQuality {
       buckets: Int = 10): DataFrame = {
     val rCounts = ref.where(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the scan and the bucket table
+      .transform(Checkpoints(_)) // feeds the scan and the bucket table
     val n = rCounts.agg(sum(col("c")).as("n"))
     val bt = graft.ops.Scan.globalRunningSum(rCounts, Seq("v"),
         col("c"), "run")
@@ -217,7 +218,7 @@ object DataQuality {
       .withColumn("bucket",
         expr(s"((run - c) * $buckets) div n").cast("int"))
       .groupBy(col("bucket")).agg(min(col("v")).as("v_min"))
-      .localCheckpoint(true) // ≤ buckets rows
+      .transform(Checkpoints(_)) // ≤ buckets rows
     def bucketCounts(df: DataFrame, out: String) =
       df.where(col(valueCol).isNotNull)
         .groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c"))
@@ -240,7 +241,7 @@ object DataQuality {
       .withColumn("p_cur", r6(q))
       .withColumn("contrib",
         (floor((p - q) * log(p / q) * 1e6 + 0.5) / 1e6))
-      .localCheckpoint(true) // feeds the cells and the decimal total
+      .transform(Checkpoints(_)) // feeds the cells and the decimal total
     val psiTotal = contrib
       .agg(sum(col("contrib").cast("decimal(18,6)")).as("psi"))
     contrib.crossJoin(broadcast(psiTotal))
@@ -255,26 +256,6 @@ object DataQuality {
   case class FkEdge(name: String, child: DataFrame, childKey: String,
     parent: DataFrame, parentKey: String)
 
-  /** Referential-integrity audit over a set of FK edges (the dbt
-    * `relationships` test, distributed): per edge, the child row count,
-    * the orphaned child rows (no parent), and the count of DISTINCT
-    * missing parent keys — the triage number that tells an operator
-    * whether drift is one bad load (few keys, many rows) or key-space
-    * corruption (many keys).
-    *
-    * Scale shape, per edge: orphan detection is a LEFT ANTI join on the
-    * key — both sides shuffle only their key column after pushdown (the
-    * child's projection prunes to the FK at the scan), NULL FKs are
-    * excluded first (SQL FK semantics: NULL references nothing and is
-    * the not-null test's business, not this one's). The distinct-key
-    * count aggregates the anti-join's output, which is orphan-sized,
-    * not child-sized. Edges audit independently — the union is of
-    * 1-row aggregates. At extreme child/parent asymmetry, gate the
-    * parent side with [[graft.functions.BloomFrame]] over the child's
-    * keys before the anti join (the delta-dedup join-pruning pattern);
-    * the audit's answer is identical, the shuffle sheds parent rows
-    * the child never references.
-    */
   /** Robust per-group outlier audit (median/MAD, the Iglewicz–Hoaglin
     * rule): per group, the exact interpolated median, the median
     * absolute deviation, and the count of values with
@@ -342,6 +323,26 @@ object DataQuality {
           col("n_violations"), col("n_distinct_bad"))
     }.reduce(_ unionByName _)
 
+  /** Referential-integrity audit over a set of FK edges (the dbt
+    * `relationships` test, distributed): per edge, the child row count,
+    * the orphaned child rows (no parent), and the count of DISTINCT
+    * missing parent keys — the triage number that tells an operator
+    * whether drift is one bad load (few keys, many rows) or key-space
+    * corruption (many keys).
+    *
+    * Scale shape, per edge: orphan detection is a LEFT ANTI join on the
+    * key — both sides shuffle only their key column after pushdown (the
+    * child's projection prunes to the FK at the scan), NULL FKs are
+    * excluded first (SQL FK semantics: NULL references nothing and is
+    * the not-null test's business, not this one's). The distinct-key
+    * count aggregates the anti-join's output, which is orphan-sized,
+    * not child-sized. Edges audit independently — the union is of
+    * 1-row aggregates. At extreme child/parent asymmetry, gate the
+    * parent side with [[graft.functions.BloomFrame]] over the child's
+    * keys before the anti join (the delta-dedup join-pruning pattern);
+    * the audit's answer is identical, the shuffle sheds parent rows
+    * the child never references.
+    */
   def refIntegrity(edges: Seq[FkEdge]): DataFrame =
     refIntegrityCore(edges, None)
 
@@ -544,7 +545,7 @@ object DataQuality {
       // and the n_child count — materialize once at the fan-out
       val c0 = e.child.where(col(e.childKey).isNotNull)
         .select(col(e.childKey).as("fk"))
-      val c = if (bloomGate.isDefined) c0.localCheckpoint(true) else c0
+      val c = if (bloomGate.isDefined) Checkpoints(c0) else c0
       val p0 = e.parent.select(col(e.parentKey).as("pk"))
       val p = bloomGate match {
         case Some((m, dd)) =>

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Checkpoints
 import graft.SharedBuilds.memo
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +40,7 @@ object Analytics extends QueryPack {
           col("a.l_partkey") =!= col("b.l_partkey"))
       .groupBy(col("a.l_partkey").as("a"), col("b.l_partkey").as("b"))
       .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
   }
 
   private def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
@@ -852,7 +853,7 @@ object Analytics extends QueryPack {
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
       val seedBasket = basket.where(col("c") % 100 === 0)
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       val scores = seedBasket
         .join(coPurchaseEdgesW(s, d)
           .select(col("a").as("p"), col("b").as("cand"), col("w")), "p")
@@ -925,9 +926,9 @@ object Analytics extends QueryPack {
       val edges = bi.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(bi.select(col("b").as("src"), col("a").as("dst")))
         .distinct()
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       val nodes = edges.select(col("src").as("id")).distinct()
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       graft.graph.PageRank.run(nodes, edges, iters = 5)
         .select(col("id").as("word"), col("rank_fp"))
     }),
@@ -1754,7 +1755,7 @@ object Analytics extends QueryPack {
       val rev = t("orders")(s, d).groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"),
           count(lit(1)).as("n_orders"))
-        .localCheckpoint(true) // feeds the rank scan and the join back
+        .transform(Checkpoints(_)) // feeds the rank scan and the join back
       val ranked = graft.ops.Scan.globalPercentRank(rev, "o_custkey", "rev")
       ranked.select(col("o_custkey"),
           least(floor(col("pct").cast("double") * 10), lit(9)).cast("int")
@@ -1841,7 +1842,7 @@ object Analytics extends QueryPack {
         to_date(col("ts")).cast("string"))
       val regs = graft.functions.HllFrame
         .registers(ev, Seq("event_type"), ud)
-        .localCheckpoint(true) // feeds all three estimates
+        .transform(Checkpoints(_)) // feeds all three estimates
       def est1(df: DataFrame, name: String) = graft.functions.HllFrame
         .estimate(df, Nil).select(col("est").as(name))
       val eA = est1(regs.where(col("event_type") === "view")
@@ -1851,7 +1852,7 @@ object Analytics extends QueryPack {
       val eU = est1(regs.groupBy(col("reg")).agg(max(col("mr")).as("mr")),
         "est_union")
       val sets = ev.select(col("event_type"), ud.as("ud")).distinct()
-        .localCheckpoint(true)
+        .transform(Checkpoints(_))
       val exact = sets.where(col("event_type") === "view").select("ud")
         .intersect(sets.where(col("event_type") === "purchase").select("ud"))
         .agg(count(lit(1)).as("n_exact_overlap"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Checkpoints
 import graft.SharedBuilds.memo
 import graft.llm.{Dedup, Multimodal, Pca, Retrieval, Similarity, TextOps}
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object LlmPack extends QueryPack {
   private val bm25Run = memo("bm25_run") { (s, d) =>
     val docs = t("documents")(s, d)
     Retrieval.bm25TopK(docs, Retrieval.sampleQueries(docs))
-      .localCheckpoint(true)
+      .transform(Checkpoints(_))
   }
 
   /** Memoized unigram-LM training artifacts (pruned vocab + final
@@ -52,7 +53,7 @@ object LlmPack extends QueryPack {
   private val unigramTrained = memo("unigram_train") { (s, d) =>
     val (pruned, segs) = graft.llm.Unigram.train(
       t("documents")(s, d), maxWordLen = 8)
-    (pruned, segs.localCheckpoint(true))
+    (pruned, Checkpoints(segs))
   }
 
   /** Memoized Lloyd k-means bundle (one-row centroid array + assigned
@@ -66,7 +67,7 @@ object LlmPack extends QueryPack {
   private val lloydBundle = memo("lloyd_bundle") { (s, d) =>
     val (cents, assigned) =
       Similarity.lloydArtifact(t("embeddings")(s, d))
-    (cents.localCheckpoint(true), assigned.localCheckpoint(true))
+    (Checkpoints(cents), Checkpoints(assigned))
   }
 
   /** Memoized near-dup cluster frame ([[graft.llm.Dedup.dupClusters]]
@@ -80,7 +81,7 @@ object LlmPack extends QueryPack {
     * delta-reconciliation path, not the full recompute.
     */
   private val dupClustersBuilt = memo("dup_clusters") {
-    (s, d) => Dedup.dupClusters(t("documents")(s, d)).localCheckpoint(true)
+    (s, d) => Checkpoints(Dedup.dupClusters(t("documents")(s, d)))
   }
 
   private def extensionSession(): org.apache.spark.sql.SparkSession =
@@ -355,7 +356,7 @@ object LlmPack extends QueryPack {
         .join(pred, "doc_id")
         .groupBy(col("declared"), col("predicted_lang").as("predicted"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // feeds margins, total, agree, output
+        .transform(Checkpoints(_)) // feeds margins, total, agree, output
       val tot = cells.agg(sum(col("n")).as("nn"))
       val agree = cells.where(col("declared") === col("predicted"))
         .agg(coalesce(sum(col("n")), lit(0L)).as("na"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Checkpoints
 import graft.ts.{AsOf, Bars}
 import org.apache.spark.sql.functions._
 
@@ -85,7 +86,7 @@ object TimeJoins extends QueryPack {
     // the pair fan-out at watchlist², not market² (52 s → ~2 s).
     "q189_lead_lag" -> ((s, d) => {
       val bars = Bars.daily(t("events")(s, d))
-        .localCheckpoint(true) // feeds the watchlist cut AND the pairs
+        .transform(Checkpoints(_)) // feeds the watchlist cut AND the pairs
       val watch = bars.groupBy(col("id"))
         .agg(sum(col("volume")).as("vol"))
         .orderBy(col("vol").desc, col("id")).limit(200)

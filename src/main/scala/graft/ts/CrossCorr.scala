@@ -1,5 +1,6 @@
 package graft.ts
 
+import graft.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,7 +61,7 @@ object CrossCorr {
       // downstream sum is integer-exact and order-independent
       .select(col("id"), col("dt"),
         round(col("r") * 1e6, 0).cast("long").as("rs"))
-      .localCheckpoint(true) // both sides of the pair join
+      .transform(Checkpoints(_)) // both sides of the pair join
     // pair r_A(t) with r_B(t + k): B's row at dt matches A's date
     // dt − k, so positive k asks "does A's move predict B's k days on"
     val bSide = rets

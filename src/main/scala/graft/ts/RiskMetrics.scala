@@ -1,5 +1,6 @@
 package graft.ts
 
+import graft.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,7 +76,7 @@ object RiskMetrics {
     * @return (id, n, beta, alpha_daily, r2)
     */
   def capm(bars: DataFrame, minObs: Int = 10): DataFrame = {
-    val rets = microReturns(bars).localCheckpoint(true)
+    val rets = Checkpoints(microReturns(bars))
     // portable floor division (see class doc): ((s % n) + n) % n ≥ 0
     val mkt = rets.groupBy(col("dt"))
       .agg(sum(col("rs")).as("ms"), count(lit(1)).as("mc"))

@@ -30,9 +30,10 @@ object GraftSqlShims {
     * which point the DRIVER spends tens of seconds per plan in
     * BigInteger Toom-Cook multiplications (545 s for a 34k-edge
     * level-2 graph). Rebuilding the frame from the checkpointed
-    * InternalRow RDD drops originStats (fresh LogicalRDD, default
+    * InternalRow RDD drops originStats (fresh LogicalRDD, measured
     * leaf size) with ZERO data copies — the rows pass through
-    * untouched.
+    * untouched. The engine reaches it only through [[graft.Checkpoints]],
+    * which also owns when the checkpoint is released.
     */
   def localCheckpointFreshStats(df: DataFrame): DataFrame =
     freshLeaf(df, keepHashPartitioning = false)
@@ -74,8 +75,8 @@ object GraftSqlShims {
         // degree frames. The block manager already knows the EXACT
         // materialized size of the just-checkpointed RDD (UnsafeRow
         // blocks — no extra job, no estimation), so attach that.
-        val measured = spark.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
+        val measured = spark.sparkContext
+          .getRDDStorageInfo(_.id == lr.rdd.id).headOption
           .map(i => BigInt(i.memSize + i.diskSize))
           .filter(_ > 0)
         val stats = catalyst.plans.logical.Statistics(
@@ -115,16 +116,4 @@ object GraftSqlShims {
       case _ => lr.outputPartitioning
     }
   }
-
-  /** Frees a checkpoint frame's blocks now instead of whenever a GC
-    * lets the ContextCleaner run: a frame whose logical plan is a
-    * single `LogicalRDD` leaf (what [[localCheckpointFreshStats]] and
-    * `localCheckpoint` return) has that RDD unpersisted, blocking. Any
-    * other plan is left alone — its leaves may belong to someone else.
-    */
-  def releaseCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.logical match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = true)
-      case _ =>
-    }
 }

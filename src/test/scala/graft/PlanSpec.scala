@@ -144,27 +144,26 @@ class PlanSpec extends AnyFunSuite {
 
   test("q139: semDedup assigns cells via the broadcast-centroid map " +
       "and pairs via a cell-keyed equi-join") {
-    // persist = false: the registered query eagerly checkpoints the
-    // assigned frame (hiding the assignment subtree behind an RDD
-    // scan), so the structural gate inspects the raw composed plan
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val p = try graft.llm.Similarity.semDedup(
-        Tables.load(spark, dir, "embeddings"), persist = false)
-      .queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    // the assigned frame is eagerly checkpointed, which hides the
+    // assignment subtree behind an RDD scan: the gate reads that
+    // checkpoint's own plan (the last one semDedup runs) and the plan
+    // of the frame it returns
+    val plans = roundPlans(graft.llm.Similarity.semDedup(
+      Tables.load(spark, dir, "embeddings")))
+    val p = plans.init.last
+    val pairs = plans.last
     // assignment: the 1-row centroid array reaches every task as a
     // broadcast nested loop (a pure map), never a shuffled cartesian
     assert(p.collect {
       case j: org.apache.spark.sql.execution.joins
         .BroadcastNestedLoopJoinExec => j }.nonEmpty)
-    assert(p.collect {
+    assert(Seq(p, pairs).forall(_.collect {
       case j: org.apache.spark.sql.execution.joins
-        .CartesianProductExec => j }.isEmpty)
+        .CartesianProductExec => j }.isEmpty))
     // the quadratic search is confined to cells: some equi-join keys
     // on the cell id (hash or sort-merge both fine — the id-keyed
     // verdict joins are separate and may sort-merge)
-    val cellKeyed = p.collect {
+    val cellKeyed = pairs.collect {
       case j: SortMergeJoinExec
         if j.leftKeys.exists(_.references.exists(_.name == "cell")) => j
       case j: BroadcastHashJoinExec
@@ -389,7 +388,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("q232: modularity labels join via broadcast only, no sort-merge") {
     // the eager checkpoint hides the edge stage from the final plan,
-    // so the label-join shape is asserted on the pre-checkpoint frame
+    // so the label-join shape is asserted on that checkpoint's own
+    // plan, the first one byPartition runs
     val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -403,8 +403,8 @@ class PlanSpec extends AnyFunSuite {
         .distinct()
       val labels = spark.read.parquet(s"$dir/part.parquet")
         .select(col("p_partkey").as("id"), col("p_brand").as("community"))
-      val p = graft.graph.Modularity.labeled(e, labels)
-        .queryExecution.executedPlan
+      val p = TestSpark.checkpointPlansDuring(
+        graft.graph.Modularity.byPartition(e, labels)).head
       assert(p.collect { case j: BroadcastHashJoinExec => j }.length >= 2,
         s"both label joins must broadcast the |parts|-row table:\n$p")
       // the final assembly is metadata-sized: no sort-merge anywhere

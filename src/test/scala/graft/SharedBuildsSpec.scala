@@ -18,12 +18,12 @@ class SharedBuildsSpec extends AnyFunSuite {
   private val baseBuilds = new AtomicInteger()
   private val base = SharedBuilds.memo("spec_base") { (s, _) =>
     baseBuilds.incrementAndGet()
-    s.range(0, 1000).toDF("id").localCheckpoint(true)
+    Checkpoints(s.range(0, 1000).toDF("id"))
   }
   // a builder that reads another memo — the re-entry shape of the
   // triangle and Brandes bundles
   private val dependent = SharedBuilds.memo("spec_dependent") { (s, d) =>
-    base(s, d).selectExpr("id * 2 AS id").localCheckpoint(true)
+    Checkpoints(base(s, d).selectExpr("id * 2 AS id"))
   }
   // a held frame that is still a lazy plan over another memo's leaf
   private val lazyView = SharedBuilds.memo("spec_lazy") { (s, d) =>
@@ -91,7 +91,8 @@ class SharedBuildsSpec extends AnyFunSuite {
     eventually(timeout(30.seconds), interval(50.millis)) {
       assert(stored(id))
     }
-    // a lazy held frame is only dropped: base's leaf stays stored
+    // a held frame that is a lazy plan over another memo's leaf does
+    // not own that leaf: base's leaf stays stored
     entry("spec_lazy").clear(s)
     assert(stored(id))
     assert(view.count() == 500)
@@ -100,6 +101,33 @@ class SharedBuildsSpec extends AnyFunSuite {
     entry("spec_base").clear(s)
     assert(!stored(id))
     assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+  }
+
+  test("a forced Brandes build stores only the leaves its value reads, " +
+      "and clear frees them, with no GC") {
+    SparkEntry.queries // forces every pack's registrations
+    val sf = "/root/testdata/sf0.001"
+    val s = spark.newSession()
+    def storedIds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    entry("copurchase_edges").force(s, sf)
+    val before = storedIds
+    entry("dist_brandes").force(s, sf)
+    val added = eventually(timeout(30.seconds), interval(50.millis)) {
+      val a = storedIds -- before
+      assert(a.nonEmpty)
+      a
+    }
+    // the value is (ds, the union of the per-level terms frames): q359
+    // reads ds, q370 the terms union
+    val leaves = Seq("q359_closeness", "q370_edge_betweenness").flatMap { q =>
+      SparkEntry.queries(q)(s, sf).queryExecution.logical.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }
+    }.toSet
+    assert(added.subsetOf(leaves), s"stored $added, read $leaves")
+    assert(added.size <= 4, s"ds + 3 terms levels, stored $added")
+    entry("dist_brandes").clear(s)
+    assert((storedIds intersect added).isEmpty)
+    entry("copurchase_edges").clear(s)
   }
 
   test("SharedBuilds.all lists the seven builds in name order") {
