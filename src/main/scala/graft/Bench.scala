@@ -184,7 +184,7 @@ object Bench {
         spark.sparkContext.setJobDescription(s"$bn rep$rep")
         val mp = microProbe()
         val t0 = System.nanoTime()
-        try {
+        try Checkpoints.scoped {
           b.force(spark, sfDir)
           if (rep > 0) samples(bn) =
             samples(bn) :+ ((rep, (System.nanoTime() - t0) / 1e9, mp))
@@ -238,7 +238,9 @@ object Bench {
         spark.sparkContext.setJobDescription(s"$name pass$pass")
         val mp = microProbe()
         val t0 = System.nanoTime()
-        try {
+        // the end time is taken inside the scope, so the release of
+        // the checkpoints the entry's frame reads is not timed
+        try Checkpoints.scoped {
           // bit_xor (not sum): xxhash64 values span the full long range
           // and ANSI mode (Spark 4 default) faults on sum overflow.
           val df = fn(spark, sfDir)

@@ -28,10 +28,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoint made outside every scope, before the scope opened or on
   * another thread is never released by it.
   *
-  * Scopes are opened where a lifetime is owned: each round of
-  * [[Rounds.iterate]], each [[SharedBuilds.memo]] build (which keeps
+  * Scopes are opened where a lifetime is owned: each round of a
+  * [[Rounds]] loop, each [[SharedBuilds.memo]] build (which keeps
   * what its value reads until `clear`), every registry entry in
-  * [[SparkEntry.queries]], and the graph and PCA entry points.
+  * [[SparkEntry.queries]] and every caller that forces one
+  * ([[Verify]], [[Bench]], [[Explain]]), and the graph and PCA entry
+  * points.
   */
 object Checkpoints {
 
@@ -54,12 +56,12 @@ object Checkpoints {
   /** Runs `body` in a new scope (see the lifetime rule above). */
   def scoped[T](body: => T): T = passUp(run(Nil)(body))
 
-  /** [[scoped]] for a loop round that replaces `state`: the round's
-    * scope also takes over, from the enclosing scope, the checkpoints
-    * `state` reads, so they are released once the round's value no
-    * longer reads them. Checkpoints the enclosing scope does not own
-    * stay where they are. */
-  private[graft] def replacing[T](state: Dataset[_])(body: => T): T = {
+  /** [[scoped]] for a loop round that replaces `state` (any value
+    * [[scoped]] walks): the round's scope also takes over, from the
+    * enclosing scope, the checkpoints `state` reads, so they are
+    * released once the round's value no longer reads them. Checkpoints
+    * the enclosing scope does not own stay where they are. */
+  private[graft] def replacing[T](state: Any)(body: => T): T = {
     val taken = open.get.headOption.toSeq.flatMap { outer =>
       reads(state).toSeq.flatMap(id => outer.remove(id).map(id -> _))
     }

@@ -12,7 +12,7 @@ object Explain {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {
         println(s"\n===== $name =====")
-        try fn(spark, sfDir).explain("formatted")
+        try Checkpoints.scoped(fn(spark, sfDir).explain("formatted"))
         catch { case e: Throwable => println(s"explain failed: $e") }
       }
     }

@@ -14,8 +14,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // the scope frees, on return, every checkpoint the entry's frame
+      // reads (its own scope hands them to its caller)
+      try Checkpoints.scoped {
+        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -182,6 +182,20 @@ object BottomKByHash {
       GraftSqlShims.expression(value.cast("double")),
       GraftSqlShims.expression(rowKey), k).toAggregateExpression())
 
+  /** The RAW bottom-k sample of [[kmvDistinct]]'s sketch: the k
+    * smallest distinct-key 48-bit md5 fractions in ascending order
+    * (array<double>). Exposed for SKETCH-MERGE set operations — two
+    * samples union/intersect with plain array math (the KMV identity:
+    * a hash in the union's bottom-k that belongs to side A is
+    * necessarily in A's bottom-k), so slice-vs-slice overlap needs no
+    * pairwise join. Same one-md5-per-row fast path as [[kmvDistinct]].
+    */
+  def kmvSample(key: Column, k: Int): Column =
+    GraftSqlShims.column(BottomKByHash(
+      GraftSqlShims.expression(lit(0.0)),
+      GraftSqlShims.expression(key.cast("string")), k, valueFromHash = true)
+      .toAggregateExpression())
+
   /** KMV (k-minimum-values) distinct-count estimator from the SAME
     * sketch: sample the md5-derived uniform fraction of each key with
     * the KEY ITSELF as the sketch's row key, so the ordering digest and
@@ -203,20 +217,6 @@ object BottomKByHash {
     * partial aggregation applies and the cardinality profile of a
     * petabyte table is one scan + O(k·partitions) merge.
     */
-  /** The RAW bottom-k sample of [[kmvDistinct]]'s sketch: the k
-    * smallest distinct-key 48-bit md5 fractions in ascending order
-    * (array<double>). Exposed for SKETCH-MERGE set operations — two
-    * samples union/intersect with plain array math (the KMV identity:
-    * a hash in the union's bottom-k that belongs to side A is
-    * necessarily in A's bottom-k), so slice-vs-slice overlap needs no
-    * pairwise join. Same one-md5-per-row fast path as [[kmvDistinct]].
-    */
-  def kmvSample(key: Column, k: Int): Column =
-    GraftSqlShims.column(BottomKByHash(
-      GraftSqlShims.expression(lit(0.0)),
-      GraftSqlShims.expression(key.cast("string")), k, valueFromHash = true)
-      .toAggregateExpression())
-
   def kmvDistinct(key: Column, k: Int): Column =
     // valueFromHash inside kmvSample: the sketch derives the fraction
     // from its own ordering digest — ONE md5 per row, not two (a

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,11 +33,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: init is a pure map over the node list; each round is
   * one src-keyed equi-join (|E|·≤m rows) + one (id, reg) groupBy with
   * map-side max-combine, checkpointed per round with fresh statistics
-  * — by hand, not through [[graft.Rounds]], because every round's
-  * frame feeds the union of hop readouts materialized after the last
-  * round (the call's scope releases the frames once it is); each hop
-  * readout is one map-side-combined per-id aggregate → one exact-long
-  * global sum. Nothing quadratic, no window over data-sized frames.
+  * in a [[graft.Rounds]] loop whose state is the list of every round's
+  * frame, because each feeds the union of hop readouts materialized
+  * after the last round (the call's scope releases the frames once it
+  * is); each hop readout is one map-side-combined per-id aggregate →
+  * one exact-long global sum. Nothing quadratic, no window over
+  * data-sized frames.
   */
 object Anf {
 
@@ -109,9 +110,8 @@ object Anf {
   def neighborhood(nodes: DataFrame, edges: DataFrame,
       rounds: Int = 4): DataFrame = Checkpoints.scoped {
     val e = Checkpoints(edges.select(col("a"), col("b")))
-    var frames = Seq(Checkpoints(init(nodes)))
-    for (_ <- 1 to rounds) frames = frames :+
-      Checkpoints(round(frames.last, e))
+    val frames = Rounds.fold(Seq(Checkpoints(init(nodes))), rounds)(
+      (frames, _) => frames :+ Checkpoints(round(frames.last, e)))
     val per = frames.zipWithIndex.map { case (frame, h) =>
         estimateC(frame)
           .agg(count(lit(1)).as("n_nodes"), sum(col("est_c")).as("anf_c"))

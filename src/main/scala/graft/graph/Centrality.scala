@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,14 +39,15 @@ import org.apache.spark.sql.functions._
   * Scale shape: per-round shuffle is frontier×degree on (src, id)
   * hash keys (the [[Bfs]] frontier contract, with the source
   * dimension multiplying width by k — choose k accordingly); per
-  * level one groupBy; one [[graft.Checkpoints]] frame per round, in a
-  * hand-written loop rather than [[graft.Rounds]], because the forward
-  * table and the terms are unions of every round's frame. Nothing here
-  * releases a frame: the scope that runs a build (the shared build's,
-  * or the caller's) frees every frame its value does not read — the
-  * forward rounds once `ds` copies them, the DAG edges and the level
-  * deltas — and keeps `ds` and the per-level terms leaves. No window
-  * sorts, no driver loops over nodes.
+  * level one groupBy; one [[graft.Checkpoints]] frame per round. Both
+  * passes are [[graft.Rounds]] loops whose state carries the union of
+  * every round's frame (the forward table, the per-level terms), so a
+  * round frees only what that union does not read: the backward pass's
+  * replaced level deltas. The scope that runs a build (the shared
+  * build's, or the caller's) frees the rest its value does not read —
+  * the forward rounds once `ds` copies them, the DAG edges and the last
+  * level delta — and keeps `ds` and the per-level terms leaves. No
+  * window sorts, no driver loops over nodes.
   */
 object Centrality {
 
@@ -56,12 +57,11 @@ object Centrality {
   def distSigma(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-    var labeled = seeds.select(col("id")).distinct()
+    val init = seeds.select(col("id")).distinct()
       .select(col("id").as("src"), col("id"), lit(0).as("dist"),
         lit(1L).as("sigma"))
       .transform(Checkpoints(_))
-    var frontier = labeled
-    for (r <- 1 to rounds) {
+    Rounds.fold((init, init), rounds) { case ((labeled, frontier), r) =>
       val next = e.join(frontier.select(col("id").as("a"), col("src"),
           col("sigma")), "a")
         .groupBy(col("src"), col("b").as("id"))
@@ -74,10 +74,8 @@ object Centrality {
       // accumulated set is only anti-joined/scanned, so re-copying all
       // rows into a fresh checkpoint every round bought nothing
       // (guide §1.2 — don't compute things you throw away)
-      labeled = labeled.unionByName(next)
-      frontier = next
-    }
-    labeled
+      (labeled.unionByName(next), next)
+    }._1
   }
 
   /** The full Brandes build: the forward table plus the backward
@@ -123,9 +121,9 @@ object Centrality {
     // reproduces the old init-with-zeros ∪ union-accumulation exactly
     // (a node has ONE dist per src, so only the adjacent level's rows
     // could ever match).
-    var prevDelta: Option[DataFrame] = None
-    var acc: Option[DataFrame] = None
-    for (r <- (rounds - 1) to 0 by -1) {
+    val (_, levels) = Rounds.accumulate(Option.empty[DataFrame], rounds) {
+        (prevDelta, level) =>
+      val r = rounds - level
       val lvlE = dagE.where(col("vdist") === r)
       val withDw = prevDelta match {
         case Some(pd) => lvlE
@@ -156,14 +154,13 @@ object Centrality {
         .select(col("src"), col("id"),
           coalesce(col("delta_u"), lit(0L)).as("delta_u"))
         .transform(Checkpoints(_))
-      prevDelta = Some(lvlDelta)
-      acc = Some(acc.map(_.unionByName(terms)).getOrElse(terms))
+      (Some(lvlDelta), terms)
     }
     // plain union of ALREADY-CHECKPOINTED per-level terms frames — the
     // same r16 lesson as the forward label union: re-copying all ~5 M
     // rows into one more fresh checkpoint bought nothing (the readouts
     // only group/scan the union; guide §1.2)
-    (ds, acc.get)
+    (ds, levels.reduce(_ unionByName _))
   }
 
   /** Node betweenness from a prebuilt [[brandesTerms]] artifact:

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   * is a src-keyed equi-join frontier×edges (shuffle O(Σ deg(frontier)),
   * never the whole graph), followed by a single hash-aggregate argmin
   * `min(struct(h, dst))` per walk (no window sort), checkpointed per
-  * step with fresh statistics. Every step's frame stays in the output
-  * union, so this loop is not a [[graft.Rounds]] loop: the call's
-  * scope releases only the edge checkpoint. Walk count scales with the
-  * seed set, independent of |V|.
+  * step with fresh statistics. The steps are a [[graft.Rounds]] loop
+  * whose state carries the output union, so every step's frame stays
+  * while the union reads it; the call's scope releases only the edge
+  * checkpoint. Walk count scales with the seed set, independent of
+  * |V|.
   */
 object RandomWalk {
 
@@ -41,21 +42,19 @@ object RandomWalk {
       steps: Int = 4): DataFrame = Checkpoints.scoped {
     val e = Checkpoints(
       pairs.select(col("a").as("src"), col("b").as("dst")))
-    var cur = seeds.select(col("id").as("walk_id"), col("id").as("node"))
-    var out = cur.select(col("walk_id"), lit(0).cast("int").as("step"),
-      col("node"))
-    for (t <- 1 to steps) {
-      cur = Checkpoints(cur
+    def at(cur: DataFrame, t: Int) = cur.select(col("walk_id"),
+      lit(t).cast("int").as("step"), col("node"))
+    val start = seeds.select(col("id").as("walk_id"), col("id").as("node"))
+    Rounds.fold((start, at(start, 0)), steps) { case ((cur, out), t) =>
+      val next = Checkpoints(cur
         .join(e, col("node") === col("src"))
         .select(col("walk_id"), col("dst"),
           md5(concat_ws(":", col("walk_id"), lit(t), col("dst"))).as("h"))
         .groupBy(col("walk_id"))
         .agg(min(struct(col("h"), col("dst"))).as("m"))
         .select(col("walk_id"), col("m.dst").as("node")))
-      out = out.unionByName(cur.select(col("walk_id"),
-        lit(t).cast("int").as("step"), col("node")))
-    }
-    out
+      (next, out.unionByName(at(next, t)))
+    }._2
   }
 
   /** Unrolled DuckDB CTE chain re-deriving [[walks]] exactly: expects

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,12 +37,14 @@ import org.apache.spark.sql.functions._
   * fixture): pair counting is a hash aggregate with map-side combine
   * over symbol-pair keys, the argmax is an O(|pairs|) total-order
   * `limit(1)` (no window), and the merge application is a pure map
-  * under a broadcast 1-row join. Each round materializes via eager
-  * `localCheckpoint` — the same flat-plan discipline as the CC loop;
-  * at warehouse scale those slots become checkpoint tables. Rounds
-  * are inherently sequential (each merge depends on the last — the
-  * algorithm, not the engine), so `nMerges` bounds wall-clock as
-  * nMerges × (seconds-per-bounded-aggregate).
+  * under a broadcast 1-row join. The merges run as one
+  * [[graft.Rounds]] loop whose state is the word table: each round
+  * checkpoints its winner and the re-segmented words, and the words it
+  * replaces are released as the round ends, while every winner stays
+  * for the merge-table union. At warehouse scale those slots become
+  * checkpoint tables. Rounds are inherently sequential (each merge
+  * depends on the last — the algorithm, not the engine), so `nMerges`
+  * bounds wall-clock as nMerges × (seconds-per-bounded-aggregate).
   *
   * The merge TABLE is the artifact (rank-ordered, exactly what a
   * tokenizer ships); [[bpeVocab]] exposes the post-merge word
@@ -77,34 +79,9 @@ object Bpe {
     *         _2: (word, freq, sym) — the vocabulary after all merges,
     *         `sym` space-joined with the trailing `</w>` marker
     */
-  def bpeState(docs: DataFrame, nMerges: Int): (DataFrame, DataFrame) = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var words = TextOps.spread(docs)
-      .where(col("text").isNotNull && length(trim(col("text"))) > 0)
-      .select(explode(TextOps.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .withColumn("sym", concat(lit(" "), concat_ws(" ", expr(
-          "transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
-        lit(" </w> ")))
-      .transform(Checkpoints(_))
-    var merges: DataFrame = null
-    (1 to nMerges).foreach { r =>
-      val best = pairsOf(words)
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(1)
-        .select(lit(r).cast("int").as("rank"),
-          col("lhs"), col("rhs"), col("cnt"))
-        .transform(Checkpoints(_))
-      merges = if (merges == null) best else merges.unionByName(best)
-      words = words.crossJoin(
-          broadcast(best.select(col("lhs"), col("rhs"))))
-        .withColumn("sym", expr("replace(sym, " +
-          "' ' || lhs || ' ' || rhs || ' ', ' ' || lhs || rhs || ' ')"))
-        .drop("lhs", "rhs")
-        .transform(Checkpoints(_))
-    }
-    (merges, words.select(col("word"), col("freq"),
-      trim(col("sym")).as("sym")))
-  }
+  def bpeState(docs: DataFrame, nMerges: Int): (DataFrame, DataFrame) =
+    mergeLoop(docs, nMerges)(words => pairsOf(words)
+      .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(1))
 
   /** The trained merge table — see [[bpeState]]. */
   def bpeTrain(docs: DataFrame, nMerges: Int = 8): DataFrame =
@@ -136,9 +113,31 @@ object Bpe {
     *         _2: (word, freq, sym) post-merge segmentations
     */
   def wordPieceState(docs: DataFrame,
-      nMerges: Int): (DataFrame, DataFrame) = {
+      nMerges: Int): (DataFrame, DataFrame) =
+    mergeLoop(docs, nMerges) { words =>
+      val syms = words
+        .select(col("freq"),
+          explode(split(trim(col("sym")), " ")).as("s"))
+        .groupBy(col("s")).agg(sum(col("freq")).as("c"))
+      pairsOf(words)
+        .join(syms.select(col("s").as("lhs"), col("c").as("cl")), "lhs")
+        .join(syms.select(col("s").as("rhs"), col("c").as("cr")), "rhs")
+        .withColumn("score_fp",
+          floor((log(col("cnt")) - log(col("cl")) - log(col("cr")))
+            * 1e6).cast("long"))
+        .orderBy(col("score_fp").desc, col("lhs"), col("rhs")).limit(1)
+        .select(col("lhs"), col("rhs"), col("cnt"), col("score_fp"))
+    }
+
+  /** The merge loop both trainers share: `nMerges` rounds over the
+    * word table, each picking the one-row `winner` (lhs, rhs, cnt, …)
+    * of the current segmentations, ranking it by round and fusing it
+    * into every word. The merge table is the union of every round's
+    * winner. */
+  private def mergeLoop(docs: DataFrame, nMerges: Int)(
+      winner: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var words = TextOps.spread(docs)
+    val init = TextOps.spread(docs)
       .where(col("text").isNotNull && length(trim(col("text"))) > 0)
       .select(explode(TextOps.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -146,32 +145,18 @@ object Bpe {
           "transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
         lit(" </w> ")))
       .transform(Checkpoints(_))
-    var merges: DataFrame = null
-    (1 to nMerges).foreach { r =>
-      val syms = words
-        .select(col("freq"),
-          explode(split(trim(col("sym")), " ")).as("s"))
-        .groupBy(col("s")).agg(sum(col("freq")).as("c"))
-      val best = pairsOf(words)
-        .join(syms.select(col("s").as("lhs"), col("c").as("cl")), "lhs")
-        .join(syms.select(col("s").as("rhs"), col("c").as("cr")), "rhs")
-        .withColumn("score_fp",
-          floor((log(col("cnt")) - log(col("cl")) - log(col("cr")))
-            * 1e6).cast("long"))
-        .orderBy(col("score_fp").desc, col("lhs"), col("rhs")).limit(1)
-        .select(lit(r).cast("int").as("rank"),
-          col("lhs"), col("rhs"), col("cnt"), col("score_fp"))
+    val (words, merges) = Rounds.accumulate(init, nMerges) { (words, r) =>
+      val best = winner(words)
+        .select(lit(r).cast("int").as("rank"), col("*"))
         .transform(Checkpoints(_))
-      merges = if (merges == null) best else merges.unionByName(best)
-      words = words.crossJoin(
-          broadcast(best.select(col("lhs"), col("rhs"))))
+      (words.crossJoin(broadcast(best.select(col("lhs"), col("rhs"))))
         .withColumn("sym", expr("replace(sym, " +
           "' ' || lhs || ' ' || rhs || ' ', ' ' || lhs || rhs || ' ')"))
         .drop("lhs", "rhs")
-        .transform(Checkpoints(_))
+        .transform(Checkpoints(_)), best)
     }
-    (merges, words.select(col("word"), col("freq"),
-      trim(col("sym")).as("sym")))
+    (merges.reduce(_ unionByName _),
+      words.select(col("word"), col("freq"), trim(col("sym")).as("sym")))
   }
 
   /** ENCODE with a trained merge table (the inference side): apply

@@ -983,16 +983,6 @@ object Corpus {
         explode(sequence(lit(1), col("n_copies"))).as("copy"))
   }
 
-  /** Benchmark decontamination: flag corpus documents sharing any
-    * n-token shingle with a held-out benchmark set (here: every
-    * `benchEvery`-th doc_id, standing in for an eval suite). Returns
-    * one row per contaminated document with the count of contaminated
-    * shingles and the smallest matching benchmark doc.
-    *
-    * The benchmark shingle index is broadcast — eval suites are tiny
-    * relative to a pre-training corpus — so the corpus side stays a
-    * narrow scan + broadcast-hash semi-join at any scale.
-    */
   /** The END-TO-END corpus preparation pipeline — the composition a
     * pre-training data job actually runs, demonstrating that the
     * stage operators compose without recomputation:
@@ -1178,6 +1168,16 @@ object Corpus {
           coalesce(col("n_contaminated"), lit(0)) === 0).as("admitted"))
   }
 
+  /** Benchmark decontamination: flag corpus documents sharing any
+    * n-token shingle with a held-out benchmark set (here: every
+    * `benchEvery`-th doc_id, standing in for an eval suite). Returns
+    * one row per contaminated document with the count of contaminated
+    * shingles and the smallest matching benchmark doc.
+    *
+    * The benchmark shingle index is broadcast — eval suites are tiny
+    * relative to a pre-training corpus — so the corpus side stays a
+    * narrow scan + broadcast-hash semi-join at any scale.
+    */
   def decontaminate(docs: DataFrame, benchEvery: Int = 50, n: Int = 8): DataFrame =
     decontaminate(docs.filter(col("doc_id") % benchEvery =!= 0),
       docs.filter(col("doc_id") % benchEvery === 0), n)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -305,7 +305,8 @@ object Retrieval {
     * query), so shingle sets, the ≤ k²-per-query pair similarities,
     * and the k greedy rounds are all metadata-sized next to the
     * retrieval; each round is one bounded groupBy + two bounded
-    * joins, checkpointed (iterative-operator discipline).
+    * joins, checkpointed in a [[graft.Rounds]] loop whose state
+    * carries every round's picks (iterative-operator discipline).
     *
     * @param ranked (query_id, rank, doc_id, score, …) top-k list
     * @param docs   (doc_id, text) for the shingle diversity signal
@@ -350,9 +351,7 @@ object Retrieval {
         expr("(10000 * coalesce(ni, 0)) div (na + nb - coalesce(ni, 0))")
           .as("sim"))
       .transform(Checkpoints(_))
-    var state = cand.withColumn("ms", lit(0L))
-    var out: DataFrame = null
-    for (t <- 1 to k) {
+    Rounds.accumulate(cand.withColumn("ms", lit(0L)), k) { (state, t) =>
       val pick = state
         .withColumn("mmr", lit(7L) * col("rel") - lit(3L) * col("ms"))
         .groupBy(col("query_id"))
@@ -363,15 +362,13 @@ object Retrieval {
       val picked = pick.select(col("query_id"),
         lit(t).cast("int").as("pick_rank"), col("pd").as("doc_id"),
         col("pmmr").as("mmr_fp"))
-      out = if (out == null) picked else out.unionByName(picked)
-      state = state.join(pick, "query_id")
+      (state.join(pick, "query_id")
         .where(col("doc_id") =!= col("pd"))
         .join(sims, Seq("query_id", "doc_id", "pd"), "left_outer")
         .select(col("query_id"), col("doc_id"), col("rel"),
           greatest(col("ms"), coalesce(col("sim"), lit(0L))).as("ms"))
-        .transform(Checkpoints(_))
-    }
-    out
+        .transform(Checkpoints(_)), picked)
+    }._2.reduce(_ unionByName _)
   }
 
   /** Reciprocal-rank fusion (Cormack et al.) of a sparse and a dense

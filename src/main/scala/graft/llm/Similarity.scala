@@ -783,11 +783,6 @@ object Similarity {
       .select(col("va"), col("vb"), col("cos"))
   }
 
-  /** Bucketed ANN: exact cosine, but only among candidates sharing an
-    * LSH bucket in at least one of the hash tables. Same output
-    * contract as [[bruteForceTopK]]; recall < 1 by construction
-    * (measured in ScalaTest against the brute force).
-    */
   /** Multi-probe LSH ANN: [[lshTopK]]'s index, but each query ALSO
     * probes every bucket at Hamming distance 1 from its own (all
     * `bitsPerTable` single-bit flips, per table) — the Lv et al.
@@ -829,6 +824,11 @@ object Similarity {
         col("cos"))
   }
 
+  /** Bucketed ANN: exact cosine, but only among candidates sharing an
+    * LSH bucket in at least one of the hash tables. Same output
+    * contract as [[bruteForceTopK]]; recall < 1 by construction
+    * (measured in ScalaTest against the brute force).
+    */
   def lshTopK(embeddings: DataFrame, queryPred: Column,
       k: Int = 5, dim: Int = defaultDim): DataFrame = {
     val e = embeddings.select(col("vec_id"),

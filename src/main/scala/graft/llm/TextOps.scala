@@ -288,10 +288,6 @@ object TextOps {
   private def occurrenceCount(w: Column, words: Seq[String]): Column =
     words.map(s => size(w) - size(array_remove(w, s))).reduce(_ + _)
 
-  /** Quality score: length saturation × (1 − stopword ratio), plus the
-    * component ratios. The shape of the reference-free quality filters
-    * used in pretraining-data pipelines (length/punct/stopword ratios).
-    */
   /** The scalar `quality` expression of [[qualityScore]] on its own —
     * so operators gating ON quality (e.g.
     * [[graft.llm.Corpus.qualityGate]]) can compute it inline in one
@@ -305,6 +301,10 @@ object TextOps {
       (lit(1.0) - stopCount.cast("double") / size(w)), 4)
   }
 
+  /** Quality score: length saturation × (1 − stopword ratio), plus the
+    * component ratios. The shape of the reference-free quality filters
+    * used in pretraining-data pipelines (length/punct/stopword ratios).
+    */
   def qualityScore(docs: DataFrame): DataFrame = {
     val w = tokens(col("text"))
     val stopCount = occurrenceCount(w, stopwords)
@@ -604,26 +604,6 @@ object TextOps {
         round(col("slp") / col("n_trigrams"), 4).as("avg_logp_kn3"))
   }
 
-  /** Per-language top-k n-grams by corpus OCCURRENCE count (document
-    * frequency carried alongside) — the boilerplate-mining pass that
-    * feeds the viral caps ([[Dedup.winnowedPairs]]' `maxDf`,
-    * [[Dedup.paragraphDedup]]'s `viralDf`) with actual data instead of
-    * guessed constants. Raw sliding grams (occurrences, not the
-    * per-doc distinct sets dedup uses) — frequency mining wants
-    * repeats counted.
-    *
-    * Scale shape: the (lang, gram) count is one hash aggregate with
-    * map-side combine. The top-k does NOT sort each language's whole
-    * distinct-gram set in one task: aggregated rows first keep a LOCAL
-    * top-k per (shuffle partition × lang) — sound, because a gram in
-    * the global top-k is necessarily in the top-k of whatever
-    * partition holds its (complete) count row — and only the ≤
-    * k·partitions survivors per language pay the exact global
-    * row_number. Same answer as the naive global window, bounded task
-    * memory at any corpus size.
-    *
-    * @return (lang, rank, gram, cnt, df), rank 1..k by (cnt desc, gram)
-    */
   /** Distinct-n diversity (Li, Galley, Brockett, Gao & Dolan 2016):
     * the unique-n-gram ratio over the corpus for n = 1..`maxN` — the
     * standard repetitiveness/diversity readout for a training-data
@@ -769,6 +749,26 @@ object TextOps {
       .select(col("n_terms"), col("top_cnt"), col("zipf_slope"))
   }
 
+  /** Per-language top-k n-grams by corpus OCCURRENCE count (document
+    * frequency carried alongside) — the boilerplate-mining pass that
+    * feeds the viral caps ([[Dedup.winnowedPairs]]' `maxDf`,
+    * [[Dedup.paragraphDedup]]'s `viralDf`) with actual data instead of
+    * guessed constants. Raw sliding grams (occurrences, not the
+    * per-doc distinct sets dedup uses) — frequency mining wants
+    * repeats counted.
+    *
+    * Scale shape: the (lang, gram) count is one hash aggregate with
+    * map-side combine. The top-k does NOT sort each language's whole
+    * distinct-gram set in one task: aggregated rows first keep a LOCAL
+    * top-k per (shuffle partition × lang) — sound, because a gram in
+    * the global top-k is necessarily in the top-k of whatever
+    * partition holds its (complete) count row — and only the ≤
+    * k·partitions survivors per language pay the exact global
+    * row_number. Same answer as the naive global window, bounded task
+    * memory at any corpus size.
+    *
+    * @return (lang, rank, gram, cnt, df), rank 1..k by (cnt desc, gram)
+    */
   def topNgrams(docs: DataFrame, n: Int = 3, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = spread(docs.where(col("text").isNotNull))

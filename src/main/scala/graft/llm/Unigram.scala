@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -52,10 +52,12 @@ import org.apache.spark.sql.functions._
   * one map-side-combined struct-min groupBy — NEVER the exponential
   * segmentation enumeration (that lives only in the oracle, where the
   * fixture's 31-word vocabulary keeps it trivial). Rounds are
-  * inherently sequential (EM), each materialized with an eager
-  * checkpoint — the [[Bpe]] / CC flat-plan discipline. Words longer
-  * than `maxWordLen` are excluded from training up front (documented;
-  * at web scale they are URL/hash debris a pipeline drops anyway).
+  * inherently sequential (EM): a [[graft.Rounds]] loop whose state is
+  * the vocabulary, each round's counts checkpointed and its E-step
+  * scratch released as the round ends — the [[Bpe]] / CC flat-plan
+  * discipline. Words longer than `maxWordLen` are excluded from
+  * training up front (documented; at web scale they are URL/hash
+  * debris a pipeline drops anyway).
   */
 object Unigram {
 
@@ -217,9 +219,6 @@ object Unigram {
         .select(col("piece"), lit(1L).as("cnt")))
   }
 
-  /** Full training run: (pruned vocabulary with EM counts, final
-    * segmentations). See object doc for the algorithm and contract.
-    */
   /** Seed + EM + prune, stopping at the pruned vocabulary (the final
     * Viterbi pass is eager via its checkpoints — callers that only
     * need the vocab must not pay it). Also returns the word table for
@@ -235,17 +234,17 @@ object Unigram {
     val seed = subs.where(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece")).limit(seedSize)
       .unionByName(subs.where(length(col("piece")) === 1))
-    var vocab = seed
-    (1 to emIters).foreach { _ =>
-      val segs = viterbi(words, scored(vocab), maxPieceLen, maxWordLen)
-      vocab = Checkpoints(mStep(segs, chars))
-    }
+    val vocab = Rounds.fold(seed, emIters)((vocab, _) => Checkpoints(mStep(
+      viterbi(words, scored(vocab), maxPieceLen, maxWordLen), chars)))
     val pruned = vocab.where(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece")).limit(vocabSize)
       .unionByName(vocab.where(length(col("piece")) === 1))
     (pruned, words)
   }
 
+  /** Full training run: (pruned vocabulary with EM counts, final
+    * segmentations). See object doc for the algorithm and contract.
+    */
   def train(docs: DataFrame, maxPieceLen: Int = 4, seedSize: Int = 60,
       emIters: Int = 2, vocabSize: Int = 40, maxWordLen: Int = 16)
       : (DataFrame, DataFrame) = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,11 @@ import org.apache.spark.sql.functions._
   * factor frame plus one grouped sum — the standard distributed-ALS
   * shuffle (ratings partitioned by the solve side's key), with the
   * two global scalars (G, max) attached by broadcast. No driver-side
-  * math, no collect, iterations bounded by `iters`.
+  * math, no collect, iterations bounded by `iters`. The alternation is
+  * a [[graft.Rounds]] loop over the state (u, v) from the uniform seed
+  * of both sides (ALS solves u from v first, so the user seed is never
+  * read): each round's two checkpointed factor frames replace the
+  * previous pair, which is released as the round ends.
   */
 object ImplicitMf {
 
@@ -62,12 +66,12 @@ object ImplicitMf {
     val r = ratings.select(col("u"), col("i"),
         (lit(1L) + lit(alpha) * col("cnt")).cast("decimal(38,0)").as("c"))
       .transform(Checkpoints(_))
-    var v = r.select(col("i").as("id")).distinct()
+    def seed(side: String) = r.select(col(side).as("id")).distinct()
       .select(col("id"), expr(s"cast($scaleFp as decimal(38,0))").as("f"))
-    var u: DataFrame = null
-    for (_ <- 1 to iters) {
-      u = halfStep(r, v, solveUsers = true)
-      v = halfStep(r, u, solveUsers = false)
+    val (u, v) = Rounds.fold((seed("u"), seed("i")), iters) {
+      case ((_, v), _) =>
+        val u = halfStep(r, v, solveUsers = true)
+        (u, halfStep(r, u, solveUsers = false))
     }
     u.select(lit("user").as("kind"), col("id"),
         col("f").cast("long").as("f"))
@@ -144,15 +148,15 @@ object ImplicitMf {
     val r = ratings.select(col("u"), col("i"),
         (lit(1L) + lit(alpha) * col("cnt")).cast("decimal(38,0)").as("c"))
       .transform(Checkpoints(_))
-    var v = r.select(col("i").as("id")).distinct()
+    def seed(side: String) = r.select(col(side).as("id")).distinct()
       .select(col("id"),
         expr(s"cast($scaleFp as decimal(38,0))").as("f1"),
         expr(s"cast(($scaleFp div 8) * (1 + id % 7) as decimal(38,0))")
           .as("f2"))
-    var u: DataFrame = null
-    for (_ <- 1 to iters) {
-      u = halfStep2(r, v, solveUsers = true)
-      v = halfStep2(r, u, solveUsers = false)
+    val (u, v) = Rounds.fold((seed("u"), seed("i")), iters) {
+      case ((_, v), _) =>
+        val u = halfStep2(r, v, solveUsers = true)
+        (u, halfStep2(r, u, solveUsers = false))
     }
     def out(df: DataFrame, kind: String) =
       df.select(lit(kind).as("kind"), col("id"),

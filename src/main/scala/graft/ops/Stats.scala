@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Checkpoints
+import graft.{Checkpoints, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -679,26 +679,24 @@ object Stats {
     // re-substitutes every φ reference, growing the expression tree
     // ~3^k — measured ~6 s of pure driver analysis/codegen at k = 5.
     // Leveling keeps every tree a few nodes; the k−1 extra jobs run
-    // on one local row.
+    // on one local row. Round r adds level k = r + 1: level k − 1's
+    // lower coefficients over its materialized φ_{k−1,k−1}, then φ_{k,k}.
     def pcol(k: Int, j: Int): Column = col(s"p_${k}_$j")
-    var cur = wide.withColumn("p_1_1", col("r1"))
-      .transform(Checkpoints(_))
-    for (k <- 2 to maxLag) {
+    val last = Rounds.iterate(wide.withColumn("p_1_1", col("r1")),
+        maxLag - 1) { (prev, r) =>
+      val k = r + 1
+      val cur = if (k == 2) prev else prev.select(col("*") +:
+        (1 until k - 1).map(j => (pcol(k - 2, j) - pcol(k - 1, k - 1) *
+          pcol(k - 2, k - 1 - j)).as(s"p_${k - 1}_$j")): _*)
       val num = col(s"r$k") -
         (1 until k).map(j => pcol(k - 1, j) * col(s"r${k - j}"))
           .reduce(_ + _)
       val den = lit(1.0) -
         (1 until k).map(j => pcol(k - 1, j) * col(s"r$j"))
           .reduce(_ + _)
-      cur = cur
-        .withColumn(s"p_${k}_$k", when(den =!= 0.0, num / den))
-        .transform(Checkpoints(_))
-      if (k < maxLag)
-        cur = cur.select(col("*") +:
-          (1 until k).map(j => (pcol(k - 1, j) -
-            pcol(k, k) * pcol(k - 1, k - j)).as(s"p_${k}_$j")): _*)
-    }
-    cur.select(explode(array((1 to maxLag).map(k =>
+      cur.withColumn(s"p_${k}_$k", when(den =!= 0.0, num / den))
+    }(Rounds.fixed)
+    last.select(explode(array((1 to maxLag).map(k =>
         struct(lit(k).as("lag"), r6(pcol(k, k)).as("pacf"))): _*))
         .as("e"))
       .select(col("e.lag"), col("e.pacf"))
@@ -1694,10 +1692,14 @@ object Stats {
     * Determinism: bins and counts are exact ([[calibration]]'s
     * contract); violation tests are exact integer CROSS-MULTIPLES
     * (pos_l·n_r > pos_r·n_l — no rate division until the edge); the
-    * engine merges the LEFTMOST violator per round for bins−1 fixed
-    * rounds (enough to reach the unique fixed point from ≤ bins
+    * engine merges the LEFTMOST violator per round for at most
+    * bins−1 rounds (enough to reach the unique fixed point from ≤ bins
     * blocks), and the oracle unrolls the same rule, so every
-    * intermediate state — not just the unique answer — matches.
+    * intermediate state — not just the unique answer — matches. Each
+    * round merges exactly one block pair, so a round without a
+    * violation is an identity: the [[graft.Rounds]] loop stops once a
+    * round's observed block count holds, where the oracle's remaining
+    * rounds change nothing.
     *
     * Scale shape: one map-side-combined groupBy to ≤ bins rows;
     * every PAV round is a self-join + 1-row broadcast + regroup on
@@ -1719,16 +1721,20 @@ object Stats {
       // documented metadata-sized window exception
       .withColumn("rk", row_number()
         .over(Window.orderBy(col("bin"))).cast("long"))
+      // the first round's blocks: one per present bin
+      .select(col("bin"), col("n"), col("n_pos"), col("rk"),
+        col("rk").as("lo"), col("rk").as("hi"), col("n_pos").as("pos"),
+        col("n").as("bn"))
       .transform(Checkpoints(_)) // feeds the rounds AND the final join
-    var st = per.select(col("rk").as("lo"), col("rk").as("hi"),
-      col("n_pos").as("pos"), col("n").as("bn"))
-    for (_ <- 1 until bins) {
+    // a round without a violation is an identity (its row count holds),
+    // and so is every round after it
+    val st = Rounds.iterate(per, bins - 1) { (st, _) =>
       val vp = broadcast(st.as("l")
         .join(st.as("r"), col("l.hi") + 1 === col("r.lo"))
         .where(col("l.pos") * col("r.bn") > col("r.pos") * col("l.bn"))
         .agg(min(struct(col("l.lo").as("vlo"), col("r.lo").as("rlo")))
           .as("v")))
-      st = st.crossJoin(vp)
+      st.crossJoin(vp)
         .select(when(col("lo") === col("v.vlo") ||
             col("lo") === col("v.rlo"), col("v.vlo"))
           .otherwise(col("lo")).as("g"),
@@ -1736,9 +1742,10 @@ object Stats {
         .groupBy(col("g"))
         .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
           sum(col("pos")).as("pos"), sum(col("bn")).as("bn"))
-        .transform(Checkpoints(_))
-    }
-    per.join(st, col("rk") >= col("lo") && col("rk") <= col("hi"))
+    }(Rounds.until(count(lit(1)))((prev, n) => prev.contains(n)))
+    per.select(col("bin"), col("n"), col("n_pos"), col("rk"))
+      .join(st.select(col("lo"), col("hi"), col("pos"), col("bn")),
+        col("rk") >= col("lo") && col("rk") <= col("hi"))
       .select(col("bin").cast("int").as("bin"), col("n"), col("n_pos"),
         r6(col("pos").cast("double") / col("bn")).as("iso_p"))
   }

@@ -1585,13 +1585,6 @@ object LlmPack extends QueryPack {
   private val defaultCuts =
     Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)
 
-  /** Shared oracle CTEs: the exact winnowing selection + stop-fp cap +
-    * fingerprint pair join at the registered defaults (k=4, w=5,
-    * maxDf=64) — q113 emits `wp` directly, q122 joins it with `sp`.
-    * Same md5-high-32 gram hashes, same (hash, −pos) struct-min over
-    * the same w-row frame (struct_pack comparison = Spark struct
-    * comparison, the aroon oracle's trick), full windows only.
-    */
   /** CDC chunk derivation (tok → positions → boundary rule → prior-cut
     * cumsum → ordered chunk digests in `ch`) — shared by q179 (df
     * decoration) and q182 (day-2 novelty). */
@@ -1709,12 +1702,6 @@ object LlmPack extends QueryPack {
   private val dupSpanSelfCtes = dupSpanCtesFor(
     "a.doc_id < b.doc_id OR (a.doc_id = b.doc_id AND a.i < b.i)")
 
-  /** q132/q249 shared oracle: the count-min grid and the minima
-    * re-derived exactly — same 4 row salts, same md5-high-16 mod 64
-    * buckets, same per-cell sums, same (cnt desc, gram) top-20 total
-    * order. q249's day-2 merge shares it verbatim (per-cell sums
-    * commute, so merged state == one-pass state).
-    */
   /** q389's plan-time class list (the welchT explicit-groups
     * discipline — labels outside it are filtered both engines). */
   private val nbClasses = Seq("de", "en", "es", "fr", "zh")
@@ -1764,6 +1751,12 @@ object LlmPack extends QueryPack {
       .stripMargin
   }
 
+  /** q132/q249 shared oracle: the count-min grid and the minima
+    * re-derived exactly — same 4 row salts, same md5-high-16 mod 64
+    * buckets, same per-cell sums, same (cnt desc, gram) top-20 total
+    * order. q249's day-2 merge shares it verbatim (per-cell sums
+    * commute, so merged state == one-pass state).
+    */
   private lazy val cmsOracle: String = {
     val b = OracleSql.md5High16(
       "md5(CAST(j AS VARCHAR) || ':' || gram)")
@@ -1787,14 +1780,6 @@ object LlmPack extends QueryPack {
        |GROUP BY 1, 2""".stripMargin
   }
 
-  /** q244/q245 shared derivation: the noisy synthetic image family +
-    * the aHash chain replayed arithmetically — md5-nibble channels,
-    * clamped sparse noise, integer grayscale, the (i·16//8, j·12//8)
-    * grid, exact 64·g ≥ Σg bits. `f` = (doc_id, ahash bit string);
-    * MATERIALIZED when the consumer references it twice (q245's self
-    * join). NB: interpolated into outer stripMargin'd strings — no
-    * line may start with '|' (the '||' concat stays at line ends).
-    */
   /** The synthetic-image decode chain (channels, noise, grayscale)
     * shared by the aHash and pHash oracles — ends at `gr(doc_id, x,
     * y, g)`. */
@@ -1823,6 +1808,14 @@ object LlmPack extends QueryPack {
        |gr AS (SELECT doc_id, x, y, (p0 + p1 + p2) // 3 AS g FROM nz)"""
       .stripMargin
 
+  /** q244/q245 shared derivation: the noisy synthetic image family +
+    * the aHash chain replayed arithmetically — md5-nibble channels,
+    * clamped sparse noise, integer grayscale, the (i·16//8, j·12//8)
+    * grid, exact 64·g ≥ Σg bits. `f` = (doc_id, ahash bit string);
+    * MATERIALIZED when the consumer references it twice (q245's self
+    * join). NB: interpolated into outer stripMargin'd strings — no
+    * line may start with '|' (the '||' concat stays at line ends).
+    */
   private def imageAHashCtes(materializeF: Boolean): String = {
     val mat = if (materializeF) " MATERIALIZED" else ""
     s"""$imageGrayCtes,
@@ -1907,6 +1900,13 @@ object LlmPack extends QueryPack {
        |  FROM dfs GROUP BY 1)""".stripMargin
   }
 
+  /** Shared oracle CTEs: the exact winnowing selection + stop-fp cap +
+    * fingerprint pair join at the registered defaults (k=4, w=5,
+    * maxDf=64) — q113 emits `wp` directly, q122 joins it with `sp`.
+    * Same md5-high-32 gram hashes, same (hash, −pos) struct-min over
+    * the same w-row frame (struct_pack comparison = Spark struct
+    * comparison, the aroon oracle's trick), full windows only.
+    */
   private val winnowPairCtes =
     s"""tok AS (
        |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -1947,9 +1947,6 @@ object LlmPack extends QueryPack {
       .stripMargin
   }.mkString("\nUNION ALL\n")
 
-  /** Exact brute-force ANN oracle, shared by q68 (native kernel) and
-    * q107 (HOF fold + KernelRewrite): both must produce this answer.
-    */
   /** The brute cosine CTE block, parameterized on the query-side
     * predicate so q68/q107 (vec_id < 10) and the RRF fusion
     * (vec_id % 101 = 0) share one derivation; ends in `dense`
@@ -1967,6 +1964,9 @@ object LlmPack extends QueryPack {
        |  SELECT *, row_number() OVER (PARTITION BY qid
        |    ORDER BY cos DESC, neighbor_id) AS rank FROM p)""".stripMargin
 
+  /** Exact brute-force ANN oracle, shared by q68 (native kernel) and
+    * q107 (HOF fold + KernelRewrite): both must produce this answer.
+    */
   private val annCosineOracle: String =
     s"""WITH ${annCosineCtes("qv.vec_id < 10")}
        |SELECT qid, CAST(rank AS INTEGER) AS rank, neighbor_id, cos

@@ -28,10 +28,6 @@ private[queries] object OracleSql {
   val simhashCols: String = simhashColsN(Dedup.simhashBits)
   val simhashConcat: String = simhashConcatN(Dedup.simhashBits)
 
-  /** First 16 bits of an md5 hex column as an integer — the
-    * deterministic uniform used by stratified sampling and shard
-    * assignment ([[graft.llm.Corpus.hash16]]'s oracle form).
-    */
   /** Uniform fraction in [0, 1) from the first 12 nibbles of an md5
     * hex column — the [[graft.functions.BottomKByHash.kmvDistinct]]
     * value. Every nibble term and the 48-bit total are < 2^53, so the
@@ -74,6 +70,10 @@ private[queries] object OracleSql {
     s"CAST(($terms) AS BIGINT)"
   }
 
+  /** First 16 bits of an md5 hex column as an integer — the
+    * deterministic uniform used by stratified sampling and shard
+    * assignment ([[graft.llm.Corpus.hash16]]'s oracle form).
+    */
   def md5High16(hexCol: String): String =
     s"""(strpos('0123456789abcdef', substr($hexCol, 1, 1)) - 1) * 4096
        |  + (strpos('0123456789abcdef', substr($hexCol, 2, 1)) - 1) * 256

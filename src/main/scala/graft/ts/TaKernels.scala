@@ -141,24 +141,6 @@ object TaKernels {
     Array(l, b, f)
   }
 
-  /** Holt–Winters additive triple exponential smoothing — [[holt]]
-    * plus a period-m seasonal state, the classic forecaster for a
-    * series with weekly rhythm (m = 7 on daily bars). Textbook
-    * two-season init (needs n ≥ 2m, else all-NaN): level = mean of
-    * season 1, trend = (mean of season 2 − mean of season 1)/m,
-    * initial seasonals = first-season deviations from that level.
-    * Then for t ≥ m (0-based):
-    * {{{
-    *   l_t = α(x_t − s_{t−m}) + (1−α)(l_{t−1} + b_{t−1})
-    *   b_t = β(l_t − l_{t−1}) + (1−β) b_{t−1}
-    *   s_t = γ(x_t − l_t) + (1−γ) s_{t−m}
-    *   f_t = l_t + b_t + s_{t+1−m}     // one-step-ahead forecast
-    * }}}
-    * Expression shapes mirror the oracle's recursive CTE (which
-    * carries the trailing m seasonals as a LIST) op-for-op, so the
-    * doubles are bit-identical before the rounded float edge.
-    * @return Array(level, trend, seasonal, forecast)
-    */
   /** Local-level Kalman filter (Harvey 1989 §2) with fixed process/
     * observation variances — the optimal-recursive smoother the EMA
     * family approximates with a CONSTANT gain: here the gain adapts,
@@ -241,6 +223,24 @@ object TaKernels {
   val kamaFastSlowDiff: Double = 2.0 / 3 - 2.0 / 31
   val kamaSlow: Double = 2.0 / 31
 
+  /** Holt–Winters additive triple exponential smoothing — [[holt]]
+    * plus a period-m seasonal state, the classic forecaster for a
+    * series with weekly rhythm (m = 7 on daily bars). Textbook
+    * two-season init (needs n ≥ 2m, else all-NaN): level = mean of
+    * season 1, trend = (mean of season 2 − mean of season 1)/m,
+    * initial seasonals = first-season deviations from that level.
+    * Then for t ≥ m (0-based):
+    * {{{
+    *   l_t = α(x_t − s_{t−m}) + (1−α)(l_{t−1} + b_{t−1})
+    *   b_t = β(l_t − l_{t−1}) + (1−β) b_{t−1}
+    *   s_t = γ(x_t − l_t) + (1−γ) s_{t−m}
+    *   f_t = l_t + b_t + s_{t+1−m}     // one-step-ahead forecast
+    * }}}
+    * Expression shapes mirror the oracle's recursive CTE (which
+    * carries the trailing m seasonals as a LIST) op-for-op, so the
+    * doubles are bit-identical before the rounded float edge.
+    * @return Array(level, trend, seasonal, forecast)
+    */
   def holtWinters(closes: Array[Double], m: Int = 7, alpha: Double = 0.2,
       beta: Double = 0.1, gamma: Double = 0.3): Array[Array[Double]] = {
     val n = closes.length

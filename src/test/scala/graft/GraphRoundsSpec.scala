@@ -1,7 +1,8 @@
 package graft
 
 import graft.graph._
-import graft.llm.Pca
+import graft.llm.{Bpe, Pca, Retrieval, Unigram}
+import graft.ops.{ImplicitMf, Stats}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -110,12 +111,48 @@ class GraphRoundsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
+  /** A corpus whose words keep adjacent pairs for several merges. */
+  private lazy val docs = {
+    import spark.implicits._
+    (1 to 12).map(i => (i.toLong,
+      Seq("lower", "newest", "widest", "low", "hello", "world")
+        .take(2 + i % 5).mkString(" "))).toDF("doc_id", "text")
+  }
+
+  /** (u, i, cnt) implicit-feedback counts. */
+  private lazy val ratings = {
+    import spark.implicits._
+    (for (u <- 1L to 6L; i <- 10L to 14L if (u + i) % 3 != 0)
+      yield (u, i, 1L + (u * i) % 4)).toDF("u", "i", "cnt")
+  }
+
+  /** (score, label) rows whose positive rate FALLS with the score bin,
+    * so every PAV round up to bins − 1 merges a violating pair. */
+  private def falling(bins: Int) = {
+    import spark.implicits._
+    (0 until bins).flatMap(b => (0 until bins).map(j =>
+      ((b + 0.5) / bins, j >= b))).toDF("score", "label")
+  }
+
+  /** One frame reading both frames of a pair result. */
+  private def both(ab: (DataFrame, DataFrame)): DataFrame = {
+    def first(df: DataFrame) =
+      df.select(col(df.columns.head).cast("string").as("v"))
+    first(ab._1).unionByName(first(ab._2))
+  }
+
   test("a round loop holds no checkpoint but what its result reads, " +
       "no GC") {
     import spark.implicits._
     val weighted = directed.withColumn("w", col("src") % 3 + 1)
     val seeds = Seq(1L, 2L).toDF("id")
-    // every operator on Rounds
+    val ranked = Seq((100L, 1, 1L, 10.0), (100L, 2, 2L, 9.9),
+        (100L, 3, 3L, 9.7), (200L, 1, 4L, 3.0), (200L, 2, 5L, 1.0))
+      .toDF("query_id", "rank", "doc_id", "score")
+    val series = (1 to 40).map(i => (i, (i * 7 % 11).toDouble))
+      .toDF("k", "v")
+    // every operator on Rounds; an entry point that opens no scope of
+    // its own runs in one here, as a registry entry's would
     val ported: Seq[(String, () => DataFrame)] = Seq(
       "PageRank.run" -> (() => PageRank.run(ids(graph), directed, 3)),
       "PageRank.runWeighted" -> (() =>
@@ -134,7 +171,30 @@ class GraphRoundsSpec extends AnyFunSuite {
       "Truss.kTruss" -> (() => Truss.kTruss(graph, k = 3, rounds = 2)),
       "Louvain.oneLevel" -> (() => Louvain.oneLevel(graph, 3)),
       "Louvain.twoLevel" -> (() => Louvain.twoLevel(graph, 3, 3)),
-      "Pca.loadings" -> (() => Pca.loadings(emb, dim = 4, iters = 3)))
+      "Pca.loadings" -> (() => Pca.loadings(emb, dim = 4, iters = 3)),
+      "Anf.neighborhood" -> (() => Anf.neighborhood(ids(graph),
+        graph.select(col("a"), col("b")), 3)),
+      "RandomWalk.walks" -> (() => RandomWalk.walks(graph, seeds, 3)),
+      "Centrality.distSigma" -> (() => Checkpoints.scoped(
+        Centrality.distSigma(graph, seeds, 3))),
+      "Centrality.brandesTerms" -> (() => Checkpoints.scoped(
+        both(Centrality.brandesTerms(graph, seeds, 3)))),
+      "ImplicitMf.run" -> (() => Checkpoints.scoped(
+        ImplicitMf.run(ratings, iters = 3))),
+      "ImplicitMf.run2" -> (() => Checkpoints.scoped(
+        ImplicitMf.run2(ratings, iters = 3))),
+      "Bpe.bpeState" -> (() => Checkpoints.scoped(
+        both(Bpe.bpeState(docs, 3)))),
+      "Bpe.wordPieceState" -> (() => Checkpoints.scoped(
+        both(Bpe.wordPieceState(docs, 3)))),
+      "Unigram.train" -> (() => Checkpoints.scoped(
+        both(Unigram.train(docs, emIters = 3)))),
+      "Retrieval.mmrRerank" -> (() => Checkpoints.scoped(
+        Retrieval.mmrRerank(ranked, docs, k = 3))),
+      "Stats.pacf" -> (() => Checkpoints.scoped(
+        Stats.pacf(series, "k", "v", 4))),
+      "Stats.isotonicCalibration" -> (() => Checkpoints.scoped(
+        Stats.isotonicCalibration(falling(4), "score", "label", 4))))
     val sc = spark.sparkContext
     def stored = sc.getRDDStorageInfo.map(_.id).toSet
     val held = ported.flatMap { case (name, run) =>
@@ -148,6 +208,41 @@ class GraphRoundsSpec extends AnyFunSuite {
       else Some(s"$name holds ${added.size}, reads ${leaves.size}")
     }
     assert(held.isEmpty, held.mkString("; "))
+  }
+
+  test("a ported loop's peak storage grows with its rounds only by the " +
+      "round frames its result reads") {
+    def reads(dfs: Seq[DataFrame]): Int = dfs.flatMap(
+      _.queryExecution.logical.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }).toSet.size
+    // (peak RDDs stored during a run at `rounds`, checkpoints its
+    // result reads); the scope frees the run's frames afterwards
+    def run(rounds: Int)(f: Int => Seq[DataFrame]): (Int, Int) =
+      Checkpoints.scoped {
+        var read = 0
+        val peak = TestSpark.peakStoredDuring { read = reads(f(rounds)) }
+        (peak, read)
+      }
+    val loops: Seq[(String, Int => Seq[DataFrame])] = Seq(
+      "ImplicitMf.run" -> (r => Seq(ImplicitMf.run(ratings, iters = r))),
+      "Bpe.bpeState" -> { r =>
+        val (merges, words) = Bpe.bpeState(docs, r)
+        Seq(merges, words)
+      },
+      "Unigram.train" -> { r =>
+        val (vocab, segs) = Unigram.train(docs, emIters = r)
+        Seq(vocab, segs)
+      },
+      "Stats.isotonicCalibration" -> (r => Seq(Stats.isotonicCalibration(
+        falling(r + 1), "score", "label", bins = r + 1))))
+    val grown = loops.flatMap { case (name, f) =>
+      val (peak2, read2) = run(2)(f)
+      val (peak4, read4) = run(4)(f)
+      info(s"$name: peak $peak2 -> $peak4, reads $read2 -> $read4")
+      if (peak4 - peak2 <= read4 - read2) None
+      else Some(s"$name: peak $peak2 -> $peak4, reads $read2 -> $read4")
+    }
+    assert(grown.isEmpty, grown.mkString("; "))
   }
 
   /** Spark jobs of each of rounds 2..4 of `run(rounds)`. */

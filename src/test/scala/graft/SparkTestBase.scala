@@ -1,7 +1,10 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -41,6 +44,44 @@ object TestSpark {
           .getOrElse(throw new AssertionError(
             "marker job never reached the listener")))
         .takeWhile(_ != "test-spark-jobs-marker").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The most RDDs that `f` holds in storage at one time, counting only
+    * the RDDs it stores: block updates add an RDD, unpersists drop it,
+    * listener-read up to a marker job, which the listener bus delivers
+    * after every earlier event. */
+  def peakStoredDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "test-spark-storage-marker"
+    val reached = new CountDownLatch(1)
+    val peak = new AtomicInteger(0)
+    val listener = new SparkListener {
+      // touched only on the listener bus thread
+      private val stored = collection.mutable.Set.empty[Int]
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(id, _) if e.blockUpdatedInfo.storageLevel.isValid =>
+            stored += id
+            peak.accumulateAndGet(stored.size, _ max _)
+          case _ =>
+        }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        stored -= e.rddId
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == marker))
+          reached.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(reached.await(60, TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      peak.get
     } finally sc.removeSparkListener(listener)
   }
 
