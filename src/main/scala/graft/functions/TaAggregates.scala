@@ -2,9 +2,9 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, GraftSqlShims}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.{Column, GraftSqlShims, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
@@ -69,32 +69,65 @@ abstract class RunningAggBase[S]
   protected def updateValue(state: S, v: Double): S
 }
 
-/** Mutable EMA state: warm-up count, seed accumulator / running EMA. */
+/** Mutable smoothing state: warm-up count, seed accumulator / running
+  * average. */
 final class EmaState(var count: Long, var acc: Double,
   var seeded: Boolean = false)
 
 object Ema {
+  /** Which SMA-seeded exponential average [[Ema]] evaluates: its SQL
+    * name and its smoothing factor α for a period n. */
+  sealed abstract class Kind(val prettyName: String) extends Serializable {
+    def alpha(n: Int): Double
+  }
+  /** `ema`: α = 2/(n+1). */
+  case object Standard extends Kind("ema") {
+    def alpha(n: Int): Double = 2.0 / (n + 1)
+  }
+  /** `wilder_ma`: Wilder's smoothing, α = 1/n. */
+  case object Wilder extends Kind("wilder_ma") {
+    def alpha(n: Int): Double = 1.0 / n
+  }
+
   /** Serialized-state shape for seeding/emitState. */
   val stateType: StructType = StructType(Seq(
     StructField("count", LongType), StructField("acc", DoubleType)))
   def nullSeed: Expression = Literal.create(null, stateType)
+
+  /** One non-NULL input of the recurrence: the first n values sum into
+    * the seed, the n-th turns the sum into their mean, and every later
+    * value smooths as `α·v + (1 − α)·acc`. The one copy of the step:
+    * the aggregate and [[graft.stream.IndicatorStream]] both run it. */
+  def step(s: EmaState, v: Double, n: Int, alpha: Double): Unit = {
+    s.count += 1
+    if (s.count < n) s.acc += v
+    else if (s.count == n) { s.acc += v; s.acc = s.acc / n }
+    else s.acc = alpha * v + (1 - alpha) * s.acc
+  }
+
+  /** The average is defined (it is `acc`) once the seed has filled. */
+  def defined(s: EmaState, n: Int): Boolean = s.count >= n
 }
 
-/** `ema(value, n)` — SMA-seeded exponential moving average,
-  * α = 2/(n+1). NULL until n non-NULL values have arrived.
-  * With `emitState` the aggregate evaluates to its internal
-  * (count, acc) struct instead of the EMA value — the snapshot a
-  * later run passes back as `seed` to continue exactly.
+/** `ema(value, n)` / `wilder_ma(value, n)` — SMA-seeded exponential
+  * moving average with α from `kind` ([[Ema.Standard]] 2/(n+1),
+  * [[Ema.Wilder]] 1/n). NULL until n non-NULL values have arrived;
+  * NULL inputs are skipped, so smoothing a derived series that only
+  * becomes defined mid-stream (the MACD line, the DX line of ADX)
+  * seeds on its first n defined values. With `emitState` the aggregate
+  * evaluates to its internal (count, acc) struct instead of the
+  * average — the snapshot a later run passes back as `seed` to
+  * continue exactly.
   */
-case class Ema(child: Expression, n: Int,
+case class Ema(child: Expression, n: Int, kind: Ema.Kind = Ema.Standard,
     seed: Expression = Ema.nullSeed, emitState: Boolean = false,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends RunningAggBase[EmaState] {
 
-  override def prettyName: String = "ema"
+  override def prettyName: String = kind.prettyName
   override def dataType: DataType =
     if (emitState) Ema.stateType else DoubleType
-  private val alpha = 2.0 / (n + 1)
+  private val alpha = kind.alpha(n)
 
   override def createAggregationBuffer(): EmaState = new EmaState(0L, 0.0)
 
@@ -110,16 +143,13 @@ case class Ema(child: Expression, n: Int,
   }
 
   override protected def updateValue(s: EmaState, v: Double): EmaState = {
-    s.count += 1
-    if (s.count < n) s.acc += v
-    else if (s.count == n) { s.acc += v; s.acc = s.acc / n }
-    else s.acc = alpha * v + (1 - alpha) * s.acc
+    Ema.step(s, v, n, alpha)
     s
   }
 
   override def eval(s: EmaState): Any =
     if (emitState) new GenericInternalRow(Array[Any](s.count, s.acc))
-    else if (s.count >= n) s.acc else null
+    else if (Ema.defined(s, n)) s.acc else null
 
   override def serialize(s: EmaState): Array[Byte] = {
     val b = ByteBuffer.allocate(17)
@@ -141,75 +171,6 @@ case class Ema(child: Expression, n: Int,
       l: Expression, r: Expression): Ema = copy(child = l, seed = r)
 }
 
-object WilderMa {
-  /** Serialized-state shape for seeding/emitState (same as Ema's). */
-  val stateType: StructType = Ema.stateType
-  def nullSeed: Expression = Literal.create(null, stateType)
-}
-
-/** `wilder_ma(value, n)` — Wilder's smoothed moving average: the first
-  * n non-NULL values seed a simple average, then
-  * `a = (1/n)·v + (1 − 1/n)·a` (an SMA-seeded EMA with α = 1/n).
-  * NULL until the seed fills; NULL inputs are skipped, so smoothing a
-  * derived series that only becomes defined mid-stream (e.g. the DX
-  * line of ADX) seeds on its first n defined values. Backs ATR and the
-  * ADX chain ([[graft.mart.Trend]]); state plumbing mirrors [[Ema]].
-  */
-case class WilderMa(child: Expression, n: Int,
-    seed: Expression = WilderMa.nullSeed, emitState: Boolean = false,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends RunningAggBase[EmaState] {
-
-  override def prettyName: String = "wilder_ma"
-  override def dataType: DataType =
-    if (emitState) WilderMa.stateType else DoubleType
-  private val alpha = 1.0 / n
-
-  override def createAggregationBuffer(): EmaState = new EmaState(0L, 0.0)
-
-  override protected def seedOnce(s: EmaState, input: InternalRow): EmaState = {
-    if (!s.seeded) {
-      s.seeded = true
-      seed.eval(input) match {
-        case null => ()
-        case r: InternalRow => s.count = r.getLong(0); s.acc = r.getDouble(1)
-      }
-    }
-    s
-  }
-
-  override protected def updateValue(s: EmaState, v: Double): EmaState = {
-    s.count += 1
-    if (s.count < n) s.acc += v
-    else if (s.count == n) { s.acc += v; s.acc = s.acc / n }
-    else s.acc = alpha * v + (1 - alpha) * s.acc
-    s
-  }
-
-  override def eval(s: EmaState): Any =
-    if (emitState) new GenericInternalRow(Array[Any](s.count, s.acc))
-    else if (s.count >= n) s.acc else null
-
-  override def serialize(s: EmaState): Array[Byte] = {
-    val b = ByteBuffer.allocate(17)
-    b.put(if (s.seeded) 1.toByte else 0.toByte)
-      .putLong(s.count).putDouble(s.acc)
-    b.array()
-  }
-  override def deserialize(bytes: Array[Byte]): EmaState = {
-    val b = ByteBuffer.wrap(bytes)
-    val seeded = b.get() == 1.toByte
-    new EmaState(b.getLong(), b.getDouble(), seeded)
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): WilderMa =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WilderMa =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): WilderMa = copy(child = l, seed = r)
-}
-
 /** Mutable RSI state: rows seen, previous close, Wilder averages. */
 final class RsiState(var count: Long, var prev: Double,
     var sumGain: Double, var sumLoss: Double,
@@ -223,6 +184,37 @@ object WilderRsi {
     StructField("sum_gain", DoubleType), StructField("sum_loss", DoubleType),
     StructField("avg_gain", DoubleType), StructField("avg_loss", DoubleType)))
   def nullSeed: Expression = Literal.create(null, stateType)
+
+  /** One non-NULL close: from the second close on, its gain and loss
+    * against the previous close sum into the seed for the first n
+    * deltas (the n-th turns the sums into averages), then smooth as
+    * `avg = (avg·(n−1) + cur)/n`. The one copy of the step: the
+    * aggregate and [[graft.stream.IndicatorStream]] both run it. */
+  def step(s: RsiState, v: Double, n: Int): Unit = {
+    if (s.count >= 1) {
+      val d = v - s.prev
+      val g = if (d > 0) d else 0.0
+      val l = if (d < 0) -d else 0.0
+      val deltaIdx = s.count // 1-based index of THIS delta
+      if (deltaIdx <= n) {
+        s.sumGain += g; s.sumLoss += l
+        if (deltaIdx == n) { s.avgGain = s.sumGain / n; s.avgLoss = s.sumLoss / n }
+      } else {
+        s.avgGain = (s.avgGain * (n - 1) + g) / n
+        s.avgLoss = (s.avgLoss * (n - 1) + l) / n
+      }
+    }
+    s.prev = v
+    s.count += 1
+  }
+
+  /** RSI is defined once n deltas have arrived. */
+  def defined(s: RsiState, n: Int): Boolean = s.count > n
+
+  /** The RSI of the Wilder averages; 100 when there is no loss. */
+  def value(s: RsiState): Double =
+    if (s.avgLoss == 0.0) 100.0
+    else 100.0 - 100.0 / (1 + s.avgGain / s.avgLoss)
 }
 
 /** `wilder_rsi(close, n)` — RSI with Wilder smoothing: the first n
@@ -258,21 +250,7 @@ case class WilderRsi(child: Expression, n: Int,
   }
 
   override protected def updateValue(s: RsiState, v: Double): RsiState = {
-    if (s.count >= 1) {
-      val d = v - s.prev
-      val g = if (d > 0) d else 0.0
-      val l = if (d < 0) -d else 0.0
-      val deltaIdx = s.count // 1-based index of THIS delta
-      if (deltaIdx <= n) {
-        s.sumGain += g; s.sumLoss += l
-        if (deltaIdx == n) { s.avgGain = s.sumGain / n; s.avgLoss = s.sumLoss / n }
-      } else {
-        s.avgGain = (s.avgGain * (n - 1) + g) / n
-        s.avgLoss = (s.avgLoss * (n - 1) + l) / n
-      }
-    }
-    s.prev = v
-    s.count += 1
+    WilderRsi.step(s, v, n)
     s
   }
 
@@ -280,10 +258,8 @@ case class WilderRsi(child: Expression, n: Int,
     if (emitState)
       new GenericInternalRow(Array[Any](s.count, s.prev, s.sumGain,
         s.sumLoss, s.avgGain, s.avgLoss))
-    else if (s.count > n) {
-      if (s.avgLoss == 0.0) 100.0
-      else 100.0 - 100.0 / (1 + s.avgGain / s.avgLoss)
-    } else null
+    else if (WilderRsi.defined(s, n)) WilderRsi.value(s)
+    else null
 
   override def serialize(s: RsiState): Array[Byte] = {
     val b = ByteBuffer.allocate(49)
@@ -310,10 +286,63 @@ case class WilderRsi(child: Expression, n: Int,
 /** Column-API and SQL surface for the native indicator aggregates. */
 object TaFunctions {
 
-  private def intArg(e: Expression, fn: String): Int = e match {
+  /** One SQL function of the engine: its name, its catalog entry, and
+    * its builder over the call's argument expressions. */
+  final case class SqlFunction(name: String, info: ExpressionInfo,
+      build: Seq[Expression] => Expression)
+
+  /** The engine's SQL surface, one row per function: [[register]] puts
+    * it in a session's registry and [[GraftExtensions]] injects it. */
+  val sqlFunctions: Seq[SqlFunction] = {
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+      SqlFunction(name, new ExpressionInfo(cls.getName, name), build)
+    Seq(
+      fn("ema", classOf[Ema])(es =>
+        Ema(asDouble(es.head), intLit(es(1), "ema"))),
+      fn("wilder_ma", classOf[Ema])(es =>
+        Ema(asDouble(es.head), intLit(es(1), "wilder_ma"), Ema.Wilder)),
+      fn("wilder_rsi", classOf[WilderRsi])(es =>
+        WilderRsi(asDouble(es.head), intLit(es(1), "wilder_rsi"))),
+      fn("dot_product", classOf[DotProduct])(es => DotProduct(es.head, es(1))),
+      fn("word_shingles", classOf[WordShingles])(es =>
+        WordShingles(es.head, intLit(es(1), "word_shingles"))),
+      fn("minhash_sig", classOf[MinHashSig])(es =>
+        MinHashSig(es.head, intLit(es(1), "minhash_sig"))),
+      fn("minhash_sig_md5", classOf[MinHashSigMd5])(es =>
+        MinHashSigMd5(es.head, intLit(es(1), "minhash_sig_md5"))),
+      fn("sorted_hashes", classOf[SortedHashes])(es => SortedHashes(es.head)),
+      fn("sorted_intersect_count", classOf[SortedIntersectCount])(es =>
+        SortedIntersectCount(es.head, es(1))),
+      fn("sq_diff_sum", classOf[SqDiffSum])(es => SqDiffSum(es.head, es(1))),
+      fn("simhash32", classOf[SimHashFp])(es => SimHash32(es.head)),
+      fn("simhash64", classOf[SimHashFp])(es => SimHashFp(es.head, 64)),
+      fn("sorted_run_stats", classOf[SortedRunStats])(es =>
+        SortedRunStats(es.head)),
+      fn("rolling_fp", classOf[RollingFp])(es => RollingFp(es.head)),
+      fn("nfc_normalize", classOf[NfcNormalize])(es => NfcNormalize(es.head)),
+      fn("quantize_i8", classOf[QuantizeI8])(es => QuantizeI8(es.head)),
+      fn("quantized_dot", classOf[QuantizedDot])(es =>
+        QuantizedDot(es.head, es(1))),
+      SqlFunction("bottom_k_sketch",
+        new ExpressionInfo(classOf[BottomKByHash].getName, null,
+          "bottom_k_sketch",
+          "bottom_k_sketch(value, key, k) - deterministic k-row uniform " +
+            "sample of value, selected by md5(key) order (mergeable; " +
+            "map-side partials). The row key MUST be unique per row: " +
+            "duplicate keys collapse to one sample slot (min value), " +
+            "biasing the sample relative to a rank-based formulation.",
+          // "" not null: the 5-arg ctor forwards extended into an
+          // assert-guarded arguments slot (AssertionError under -ea)
+          ""),
+        es => BottomKByHash(asDouble(es.head), es(1),
+          intLit(es(2), "bottom_k_sketch")).toAggregateExpression()))
+  }
+
+  /** A period or size argument: an integer literal. */
+  private def intLit(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
-      s"$fn period must be an integer literal, got $other")
+      s"$fn needs an integer literal, got $other")
   }
 
   // Unconditional: the child may still be unresolved here, and
@@ -348,7 +377,7 @@ object TaFunctions {
     */
   def wilderMa(c: Column, n: Int): Column =
     GraftSqlShims.column(
-      WilderMa(asDouble(GraftSqlShims.expression(c)), n)
+      Ema(asDouble(GraftSqlShims.expression(c)), n, Ema.Wilder)
         .toAggregateExpression())
 
   /** `wilder_rsi(c, n)` as a Column; apply `.over(running frame)`. */
@@ -372,140 +401,27 @@ object TaFunctions {
           .getOrElse(WilderRsi.nullSeed),
         emitState = true).toAggregateExpression())
 
-  /** Register `ema` / `wilder_rsi` in a session's function registry so
-    * `spark.sql("... ema(close, 5) OVER (...)")` resolves.
+  /** Register every function of [[sqlFunctions]] in a session's
+    * function registry so `spark.sql("... ema(close, 5) OVER (...)")`
+    * resolves.
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = {
     val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("ema",
-      es => Ema(Cast(es.head, DoubleType), intArg(es(1), "ema")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("wilder_ma",
-      es => WilderMa(Cast(es.head, DoubleType), intArg(es(1), "wilder_ma")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("wilder_rsi",
-      es => WilderRsi(Cast(es.head, DoubleType), intArg(es(1), "wilder_rsi")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("dot_product",
-      es => DotProduct(es.head, es(1)), "scala_udf")
-    r.createOrReplaceTempFunction("word_shingles",
-      es => WordShingles(es.head, intArg(es(1), "word_shingles")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es.head, intArg(es(1), "minhash_sig")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("minhash_sig_md5",
-      es => MinHashSigMd5(es.head, intArg(es(1), "minhash_sig_md5")),
-      "scala_udf")
-    r.createOrReplaceTempFunction("sorted_hashes",
-      es => SortedHashes(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("sorted_intersect_count",
-      es => SortedIntersectCount(es.head, es(1)), "scala_udf")
-    r.createOrReplaceTempFunction("sq_diff_sum",
-      es => SqDiffSum(es.head, es(1)), "scala_udf")
-    r.createOrReplaceTempFunction("simhash32",
-      es => SimHash32(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("simhash64",
-      es => SimHashFp(es.head, 64), "scala_udf")
-    r.createOrReplaceTempFunction("sorted_run_stats",
-      es => SortedRunStats(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("rolling_fp",
-      es => RollingFp(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("quantize_i8",
-      es => QuantizeI8(es.head), "scala_udf")
-    r.createOrReplaceTempFunction("quantized_dot",
-      es => QuantizedDot(es.head, es(1)), "scala_udf")
-    r.createOrReplaceTempFunction("bottom_k_sketch",
-      es => BottomKByHash(Cast(es.head, DoubleType), es(1),
-        intArg(es(2), "bottom_k_sketch")).toAggregateExpression(),
-      "scala_udf")
+    sqlFunctions.foreach(f =>
+      r.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
   }
 }
 
 /** `SparkSessionExtensions` hook: start Spark with
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` to get
-  * the indicator functions in every session's SQL surface.
+  * [[TaFunctions.sqlFunctions]] in every session's SQL surface, plus the
+  * HOF-to-kernel rewrite (see [[KernelRewrite]]'s vector-column
+  * contract), which [[TaFunctions.register]] does not install.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // HOF-to-kernel rewrite (see KernelRewrite's vector-column contract)
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => KernelRewrite)
-    def info(name: String) =
-      new ExpressionInfo(classOf[Ema].getName, name)
-    ext.injectFunction((FunctionIdentifier("ema"), info("ema"),
-      (es: Seq[Expression]) => Ema(Cast(es.head, DoubleType), es(1) match {
-        case Literal(v: Int, _) => v
-        case o => throw new IllegalArgumentException(s"bad period: $o")
-      })))
-    ext.injectFunction((FunctionIdentifier("wilder_rsi"), info("wilder_rsi"),
-      (es: Seq[Expression]) => WilderRsi(Cast(es.head, DoubleType), es(1) match {
-        case Literal(v: Int, _) => v
-        case o => throw new IllegalArgumentException(s"bad period: $o")
-      })))
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (es: Seq[Expression]) => DotProduct(es.head, es(1))))
-    def litInt(e: Expression, fn: String): Int = e match {
-      case Literal(v: Int, _) => v
-      case o => throw new IllegalArgumentException(s"$fn needs int literal, got $o")
-    }
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (es: Seq[Expression]) => WordShingles(es.head, litInt(es(1), "word_shingles"))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (es: Seq[Expression]) => MinHashSig(es.head, litInt(es(1), "minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig_md5"),
-      new ExpressionInfo(classOf[MinHashSigMd5].getName, "minhash_sig_md5"),
-      (es: Seq[Expression]) =>
-        MinHashSigMd5(es.head, litInt(es(1), "minhash_sig_md5"))))
-    ext.injectFunction((FunctionIdentifier("sorted_hashes"),
-      new ExpressionInfo(classOf[SortedHashes].getName, "sorted_hashes"),
-      (es: Seq[Expression]) => SortedHashes(es.head)))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      (es: Seq[Expression]) => SortedIntersectCount(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("sq_diff_sum"),
-      new ExpressionInfo(classOf[SqDiffSum].getName, "sq_diff_sum"),
-      (es: Seq[Expression]) => SqDiffSum(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHashFp].getName, "simhash32"),
-      (es: Seq[Expression]) => SimHash32(es.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHashFp].getName, "simhash64"),
-      (es: Seq[Expression]) => SimHashFp(es.head, 64)))
-    ext.injectFunction((FunctionIdentifier("sorted_run_stats"),
-      new ExpressionInfo(classOf[SortedRunStats].getName, "sorted_run_stats"),
-      (es: Seq[Expression]) => SortedRunStats(es.head)))
-    ext.injectFunction((FunctionIdentifier("rolling_fp"),
-      new ExpressionInfo(classOf[RollingFp].getName, "rolling_fp"),
-      (es: Seq[Expression]) => RollingFp(es.head)))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "quantize_i8"),
-      (es: Seq[Expression]) => QuantizeI8(es.head)))
-    ext.injectFunction((FunctionIdentifier("quantized_dot"),
-      new ExpressionInfo(classOf[QuantizedDot].getName, "quantized_dot"),
-      (es: Seq[Expression]) => QuantizedDot(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("bottom_k_sketch"),
-      new ExpressionInfo(classOf[BottomKByHash].getName, null,
-        "bottom_k_sketch",
-        "bottom_k_sketch(value, key, k) - deterministic k-row uniform " +
-          "sample of value, selected by md5(key) order (mergeable; " +
-          "map-side partials). The row key MUST be unique per row: " +
-          "duplicate keys collapse to one sample slot (min value), " +
-          "biasing the sample relative to a rank-based formulation.",
-        // "" not null: the 5-arg ctor forwards extended into an
-        // assert-guarded arguments slot (AssertionError under -ea)
-        ""),
-      (es: Seq[Expression]) => BottomKByHash(Cast(es.head, DoubleType),
-        es(1), litInt(es(2), "bottom_k_sketch")).toAggregateExpression()))
+    TaFunctions.sqlFunctions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
   }
 }

@@ -306,7 +306,9 @@ object Retrieval {
     * and the k greedy rounds are all metadata-sized next to the
     * retrieval; each round is one bounded groupBy + two bounded
     * joins, checkpointed in a [[graft.Rounds]] loop whose state
-    * carries every round's picks (iterative-operator discipline).
+    * carries every round's picks (iterative-operator discipline);
+    * the state after the k-th pick is never read, so it is never
+    * materialized.
     *
     * @param ranked (query_id, rank, doc_id, score, …) top-k list
     * @param docs   (doc_id, text) for the shingle diversity signal
@@ -367,7 +369,8 @@ object Retrieval {
         .join(sims, Seq("query_id", "doc_id", "pd"), "left_outer")
         .select(col("query_id"), col("doc_id"), col("rel"),
           greatest(col("ms"), coalesce(col("sim"), lit(0L))).as("ms"))
-        .transform(Checkpoints(_)), picked)
+        // no pick reads the state after the last one: left unmaterialized
+        .transform(next => if (t < k) Checkpoints(next) else next), picked)
     }._2.reduce(_ unionByName _)
   }
 

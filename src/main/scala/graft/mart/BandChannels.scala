@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * .py:29-54); these are the two channel systems its Bollinger users
   * ask for next, and together they exercise the mart's two recurrence
   * tiers in one frame: Donchian is pure bounded-frame max/min, Keltner
-  * composes the native SMA-seeded EMA ([[graft.functions.Ema]]) with
-  * the Wilder ATR ([[graft.functions.WilderMa]]) — both running
-  * aggregates on the shared (id, tkey) sort.
+  * composes the native SMA-seeded EMA with the Wilder ATR — both the
+  * one [[graft.functions.Ema]] running aggregate (α = 2/(n+1) and 1/n)
+  * on the shared (id, tkey) sort.
   *
   * Definitions (per symbol, bars ordered by time; Donchian 1970,
   * Keltner as popularized by Chester 1980s):
@@ -40,19 +40,8 @@ object BandChannels {
     */
   def indicators(bars: DataFrame, donN: Int = 20, emaN: Int = 20,
       atrN: Int = 10, mult: Double = 2.0,
-      carry: Seq[String] = Nil,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
-    val scaled = bars
-      .withColumn("hs", col("high") * nm)
-      .withColumn("ls", col("low") * nm)
-      .withColumn("cs", col("close") * nm)
-      .withColumn("tp", (col("high") * nm + col("low") * nm +
-        col("close") * nm) / lit(3.0))
+      carry: Seq[String] = Nil): DataFrame = {
+    val scaled = MartConfig.crypto.scaledPrices(bars)
 
     val w = Window.partitionBy(col("id")).orderBy(col("tkey"))
     def frame(k: Int) = w.rowsBetween(-(k - 1), 0)

@@ -40,19 +40,8 @@ object Channels {
     * CCI from bar n of each symbol's history).
     */
   def indicators(bars: DataFrame, n: Int = 14, cciN: Int = 20,
-      carry: Seq[String] = Nil,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
-    val scaled = bars
-      .withColumn("hs", col("high") * nm)
-      .withColumn("ls", col("low") * nm)
-      .withColumn("cs", col("close") * nm)
-      .withColumn("tp", (col("high") * nm + col("low") * nm +
-        col("close") * nm) / lit(3.0))
+      carry: Seq[String] = Nil): DataFrame = {
+    val scaled = MartConfig.crypto.scaledPrices(bars)
       .withColumn("day", expr("tkey div 86400"))
 
     val w = Window.partitionBy(col("id")).orderBy(col("tkey"))

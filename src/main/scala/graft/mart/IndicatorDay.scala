@@ -51,12 +51,10 @@ import org.apache.spark.sql.functions._
   */
 object IndicatorDay {
 
-  /** Fixture role of the reference's `exceptional_symbol = ["SHIB_USDT"]`
-    * (D_Create_crypto_ind_day_001.py:46-49): symbol 7 takes the ×1000
-    * small-value scaling path.
-    */
-  val exceptionalIds: Seq[Long] = Seq(7L)
-  val nMultiple: Double = 1000.0
+  /** The crypto scaling path ([[MartConfig.crypto]]): the symbols that
+    * take it and their multiplier. */
+  val exceptionalIds: Seq[Long] = MartConfig.crypto.exceptionalIds
+  val nMultiple: Double = MartConfig.crypto.nMultiple
 
   /** Stock-indicator columns in reference DDL order (indicator part). */
   val indicatorCols: Seq[String] = Seq(
@@ -86,21 +84,17 @@ object IndicatorDay {
     "_ema12_st", "_ema26_st", "_sig9_st", "_rsi_st")
 
   /** Full indicator frame over bars (id, tkey, open, high, low, close,
-    * volume) + any carry columns. Output: carry ++ (id, tkey, open,
-    * high, low, close, volume, n_multiple) ++ [[indicatorCols]], all
-    * indicator values Double (no edge coercion yet — [[apply]] does
-    * that), warm-up rows NULL.
+    * volume) + any carry columns, prices scaled by `cfg`'s
+    * `n_multiple`. Output: carry ++ (id, tkey, open, high, low, close,
+    * volume, n_multiple) ++ [[indicatorCols]], all indicator values
+    * Double (no edge coercion yet — [[apply]] does that), warm-up rows
+    * NULL.
     */
   def indicators(bars: DataFrame, carry: Seq[String] = Nil,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple,
+      cfg: MartConfig = MartConfig.crypto,
       resume: Boolean = false): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
     val scaled = bars
-      .withColumn("n_multiple", nm)
+      .withColumn("n_multiple", cfg.nMultipleCol)
       .withColumn("os", col("open") * col("n_multiple"))
       .withColumn("hs", col("high") * col("n_multiple"))
       .withColumn("ls", col("low") * col("n_multiple"))
@@ -268,8 +262,7 @@ object IndicatorDay {
         col("open"), col("high"), col("low"), col("close"),
         col(cfg.volumeCol).as("volume"))
       .withColumn("tkey", col("t"))
-    applyEdge(indicators(bars, carry = Seq("t"),
-        exceptionalIds = cfg.exceptionalIds, nMultiple = cfg.nMultiple))
+    applyEdge(indicators(bars, carry = Seq("t"), cfg = cfg))
       .select(lit(cfg.market).as("market") +: indicatorOutputCols: _*)
   }
 
@@ -287,14 +280,9 @@ object IndicatorDay {
     * One (id, tkey) window sort + one id-keyed max_by — same scale
     * shape as the mart itself.
     */
-  def stateSnapshot(bars: DataFrame,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
-    val scaled = bars.withColumn("cs", col("close") * nm)
+  def stateSnapshot(bars: DataFrame): DataFrame = {
+    val scaled =
+      bars.withColumn("cs", col("close") * MartConfig.crypto.nMultipleCol)
     val w = Window.partitionBy(col("id")).orderBy(col("tkey"))
     val run = w.rowsBetween(Window.unboundedPreceding, 0)
     val s1 = scaled.select(col("id"), col("tkey"),
@@ -341,13 +329,9 @@ object IndicatorDay {
     * warehouse scale.
     */
   def incrementalFrom(bars: DataFrame, liveFrom: Column,
-      carry: Seq[String] = Nil, tailBars: Int = 77,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame =
-    incrementalFrom(bars,
-      stateSnapshot(bars.where(col("tkey") < liveFrom),
-        exceptionalIds, nMultiple),
-      liveFrom, carry, tailBars, exceptionalIds, nMultiple)
+      carry: Seq[String] = Nil, tailBars: Int = 77): DataFrame =
+    incrementalFrom(bars, stateSnapshot(bars.where(col("tkey") < liveFrom)),
+      liveFrom, carry, tailBars)
 
   /** [[incrementalFrom]] over a PRECOMPUTED [[stateSnapshot]] frame —
     * the production form: each refresh persists its snapshot (plain
@@ -357,8 +341,7 @@ object IndicatorDay {
     * IndicatorDaySpec.
     */
   def incrementalFrom(bars: DataFrame, state: DataFrame, liveFrom: Column,
-      carry: Seq[String], tailBars: Int,
-      exceptionalIds: Seq[Long], nMultiple: Double): DataFrame = {
+      carry: Seq[String], tailBars: Int): DataFrame = {
     // 77 = senkou-B's 26-bar displacement over a 52-bar midpoint frame
     // + the current row — the deepest positional reach of any frame
     // aggregate. A shorter tail would silently compute WRONG (non-NULL)
@@ -380,8 +363,7 @@ object IndicatorDay {
       .withColumn("_rn_off",
         coalesce(greatest(col("rn0") - tailBars, lit(0L)), lit(0L)))
       .drop("rn0")
-    indicators(joined, carry = carry :+ "_live", exceptionalIds,
-      nMultiple, resume = true)
+    indicators(joined, carry = carry :+ "_live", resume = true)
   }
 
   /** Hourly-mart incremental refresh (the q32-family frame), emitting

@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one `Window.partitionBy(id).orderBy(tkey)` sort carries
   * the lags, all three first-level Wilder smoothings (native
-  * [[graft.functions.WilderMa]] running aggregates), and the
+  * [[graft.functions.Ema]] running aggregates of kind
+  * [[graft.functions.Ema.Wilder]]), and the
   * second-level ADX smoothing — the NULL-skip seed rule means DX's
   * n-row warm-up NULLs don't perturb the ADX seed. ONE shuffle total,
   * no joins, no per-symbol driver loop; per-task memory is O(1) per
@@ -48,17 +49,8 @@ object Trend {
     * plus_di, minus_di, dx, adx), values Double, warm-up rows NULL.
     */
   def indicators(bars: DataFrame, n: Int = 14,
-      carry: Seq[String] = Nil,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
-    val scaled = bars
-      .withColumn("hs", col("high") * nm)
-      .withColumn("ls", col("low") * nm)
-      .withColumn("cs", col("close") * nm)
+      carry: Seq[String] = Nil): DataFrame = {
+    val scaled = MartConfig.crypto.scaledPrices(bars)
 
     val w = Window.partitionBy(col("id")).orderBy(col("tkey"))
     val run = w.rowsBetween(Window.unboundedPreceding, 0)

@@ -40,14 +40,9 @@ object Trix {
     * with the family's scaled closes.
     */
   def indicators(bars: DataFrame, n: Int = 15,
-      carry: Seq[String] = Nil,
-      exceptionalIds: Seq[Long] = IndicatorDay.exceptionalIds,
-      nMultiple: Double = IndicatorDay.nMultiple): DataFrame = {
-    val nm =
-      if (exceptionalIds.isEmpty) lit(1.0)
-      else when(col("id").isin(exceptionalIds: _*), lit(nMultiple))
-        .otherwise(lit(1.0))
-    val scaled = bars.withColumn("cs", col("close") * nm)
+      carry: Seq[String] = Nil): DataFrame = {
+    val scaled =
+      bars.withColumn("cs", col("close") * MartConfig.crypto.nMultipleCol)
 
     val w = Window.partitionBy(col("id")).orderBy(col("tkey"))
     val run = w.rowsBetween(Window.unboundedPreceding, 0)

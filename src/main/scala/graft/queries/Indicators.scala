@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.mart.{BandChannels, Channels, Flow, IndicatorDay, Trend, Trix}
+import graft.mart.{BandChannels, Channels, Flow, IndicatorDay, MartConfig, Trend, Trix}
 import graft.ts.{Bars, Recursive}
 import org.apache.spark.sql.functions.{col, lit, when}
 
@@ -181,7 +181,7 @@ object Indicators extends QueryPack {
     * first n rows of `src`): `src` must be dense in rn per id starting
     * at `start`, so the seed row sits at rn = start + n − 1 and the
     * recursion steps rn by 1 — the exact recurrence
-    * [[graft.functions.WilderMa]] evaluates.
+    * [[graft.functions.Ema]] evaluates for `wilder_ma`.
     */
   private def wilderCte(name: String, src: String, valCol: String,
       start: Int, n: Int): String =
@@ -420,7 +420,6 @@ object Indicators extends QueryPack {
     // directly with NO scaling path (the reference's five forex-shaped
     // templates). Proves the six ~200-line clones collapse to config.
     "q91_multi_asset" -> ((s, d) => {
-      import graft.mart.MartConfig
       val bars = Bars.hourly(t("events")(s, d))
       val cryptoSrc = bars.withColumnRenamed("volume", "amount")
       MartConfig.all.map { cfg =>
@@ -700,9 +699,8 @@ object Indicators extends QueryPack {
     // (graft.functions), so this keeps the distributed-kernel
     // formulation independently oracle-verified.
     "q42_recursive_kernel" -> ((s, d) => {
-      val scaledClose = (col("close") *
-        when(col("id").isin(IndicatorDay.exceptionalIds: _*),
-          lit(IndicatorDay.nMultiple)).otherwise(lit(1.0))).as("close")
+      val scaledClose =
+        (col("close") * MartConfig.crypto.nMultipleCol).as("close")
       val bars = Bars.hourly(t("events")(s, d))
         .select(col("id"), col("t").as("tkey"), scaledClose)
       val rec = Recursive.withTa(bars)

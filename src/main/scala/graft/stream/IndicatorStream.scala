@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.functions.{Ema, EmaState, RsiState, WilderRsi}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,14 +11,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference computes these only in nightly batch
   * (D_Create_crypto_ind_day_001.py); the streaming engine brings them
-  * online with the SAME recurrences in the SAME operation order as the
-  * batch kernels ([[graft.functions.Ema]]/[[graft.functions.WilderRsi]]
-  * and [[graft.ts.TaKernels]]), so the online values are bit-identical
-  * to a batch recompute over the bars seen so far — pinned in
-  * StreamingSpec across multiple micro-batches. The state carried per
-  * symbol is exactly the [[graft.mart.IndicatorDay.stateSnapshot]]
-  * recursion state (seven small structs + OBV), so a stream can hand
-  * off to the batch incremental refresh and vice versa.
+  * online by running the batch aggregates' own recurrences
+  * ([[graft.functions.Ema.step]], [[graft.functions.WilderRsi.step]]
+  * and the RSI formula [[graft.functions.WilderRsi.value]]) on the
+  * aggregates' own state buffers, so the online values are
+  * bit-identical to a batch recompute over the bars seen so far —
+  * pinned in StreamingSpec across multiple micro-batches. The state
+  * carried per symbol is exactly the
+  * [[graft.mart.IndicatorDay.stateSnapshot]] recursion state (seven
+  * small structs + OBV), so a stream can hand off to the batch
+  * incremental refresh and vice versa.
   *
   * Scale shape: state is O(symbols) × ~200 bytes, the stream shuffles
   * once on the symbol key, and each micro-batch does O(new bars) work —
@@ -45,69 +48,62 @@ object IndicatorStream {
   private val zeroState = IndState(zeroEma, zeroEma, zeroEma, zeroEma,
     zeroEma, zeroEma, RsiS(0L, 0.0, 0.0, 0.0, 0.0, 0.0), 0.0, 0L, 0.0)
 
-  /** SMA-seeded EMA step — the exact operation order of
-    * [[graft.functions.Ema]].updateValue, so online == batch holds
-    * bit-for-bit, not just approximately.
+  private def when(cond: Boolean)(v: => Double): Option[Double] =
+    if (cond) Some(v) else None
+
+  /** One symbol's recursion state while its bars are folded in: the
+    * batch aggregates' buffers, stepped by their recurrences. Built
+    * from the stored [[IndState]] once per group and micro-batch, and
+    * stored back as one with [[state]].
     */
-  private def emaUp(s: EmaS, v: Double, n: Int): EmaS = {
-    val c = s.count + 1
-    if (c < n) EmaS(c, s.acc + v)
-    else if (c == n) EmaS(c, (s.acc + v) / n)
-    else {
-      val a = 2.0 / (n + 1)
-      EmaS(c, a * v + (1 - a) * s.acc)
+  private final class Core(st: IndState) {
+    private def buf(e: EmaS) = new EmaState(e.count, e.acc)
+    private val e5 = buf(st.e5)
+    private val e10 = buf(st.e10)
+    private val e30 = buf(st.e30)
+    private val e12 = buf(st.e12)
+    private val e26 = buf(st.e26)
+    private val s9 = buf(st.s9)
+    private val rsi = new RsiState(st.rsi.count, st.rsi.prev,
+      st.rsi.sumGain, st.rsi.sumLoss, st.rsi.avgGain, st.rsi.avgLoss)
+    private var obv = st.obv
+    /** Bars folded in so far, this one included. */
+    var n: Long = st.n
+    private var prevClose = st.prevClose
+
+    private def smooth(e: EmaState, v: Double, p: Int): Unit =
+      Ema.step(e, v, p, Ema.Standard.alpha(p))
+    private def value(e: EmaState, p: Int): Option[Double] =
+      when(Ema.defined(e, p))(e.acc)
+
+    def push(b: BarIn): IndOut = {
+      val v = b.close
+      smooth(e5, v, 5)
+      smooth(e10, v, 10)
+      smooth(e30, v, 30)
+      smooth(e12, v, 12)
+      smooth(e26, v, 26)
+      val macd = for { f <- value(e12, 12); s <- value(e26, 26) } yield f - s
+      macd.foreach(smooth(s9, _, 9))
+      WilderRsi.step(rsi, v, 14)
+      obv =
+        if (n == 0L) 0.0
+        else if (v > prevClose) obv + b.volume
+        else if (v < prevClose) obv - b.volume
+        else obv
+      n += 1
+      prevClose = v
+      IndOut(b.id, b.t, value(e5, 5), value(e10, 10), value(e30, 30),
+        macd, value(s9, 9),
+        when(WilderRsi.defined(rsi, 14))(WilderRsi.value(rsi)), obv)
     }
-  }
-  private def emaVal(s: EmaS, n: Int): Option[Double] =
-    if (s.count >= n) Some(s.acc) else None
 
-  /** Wilder-RSI step — exact port of
-    * [[graft.functions.WilderRsi]].updateValue.
-    */
-  private def rsiUp(s: RsiS, v: Double, n: Int): RsiS = {
-    if (s.count >= 1) {
-      val d = v - s.prev
-      val g = if (d > 0) d else 0.0
-      val l = if (d < 0) -d else 0.0
-      val deltaIdx = s.count
-      if (deltaIdx <= n) {
-        val sg = s.sumGain + g
-        val sl = s.sumLoss + l
-        if (deltaIdx == n)
-          RsiS(s.count + 1, v, sg, sl, sg / n, sl / n)
-        else RsiS(s.count + 1, v, sg, sl, s.avgGain, s.avgLoss)
-      } else RsiS(s.count + 1, v, s.sumGain, s.sumLoss,
-        (s.avgGain * (n - 1) + g) / n, (s.avgLoss * (n - 1) + l) / n)
-    } else RsiS(s.count + 1, v, s.sumGain, s.sumLoss, s.avgGain, s.avgLoss)
-  }
-  private def rsiVal(s: RsiS, n: Int): Option[Double] =
-    if (s.count > n) Some(
-      if (s.avgLoss == 0.0) 100.0
-      else 100.0 - 100.0 / (1 + s.avgGain / s.avgLoss))
-    else None
-
-  private def step(st: IndState, b: BarIn): (IndState, IndOut) = {
-    val v = b.close
-    val e5 = emaUp(st.e5, v, 5)
-    val e10 = emaUp(st.e10, v, 10)
-    val e30 = emaUp(st.e30, v, 30)
-    val e12 = emaUp(st.e12, v, 12)
-    val e26 = emaUp(st.e26, v, 26)
-    val macd = for {
-      f <- emaVal(e12, 12)
-      s <- emaVal(e26, 26)
-    } yield f - s
-    val s9 = macd.map(m => emaUp(st.s9, m, 9)).getOrElse(st.s9)
-    val rsi = rsiUp(st.rsi, v, 14)
-    val obv =
-      if (st.n == 0L) 0.0
-      else if (v > st.prevClose) st.obv + b.volume
-      else if (v < st.prevClose) st.obv - b.volume
-      else st.obv
-    val next = IndState(e5, e10, e30, e12, e26, s9, rsi, obv,
-      st.n + 1, v)
-    (next, IndOut(b.id, b.t, emaVal(e5, 5), emaVal(e10, 10),
-      emaVal(e30, 30), macd, emaVal(s9, 9), rsiVal(rsi, 14), obv))
+    def state: IndState = {
+      def snap(e: EmaState) = EmaS(e.count, e.acc)
+      IndState(snap(e5), snap(e10), snap(e30), snap(e12), snap(e26),
+        snap(s9), RsiS(rsi.count, rsi.prev, rsi.sumGain, rsi.sumLoss,
+          rsi.avgGain, rsi.avgLoss), obv, n, prevClose)
+    }
   }
 
   /** One indicator row per incoming bar, keyed state per symbol. */
@@ -117,13 +113,9 @@ object IndicatorStream {
       .flatMapGroupsWithState[IndState, IndOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: Long, rows: Iterator[BarIn], state: GroupState[IndState]) =>
-          var st = state.getOption.getOrElse(zeroState)
-          val out = rows.toSeq.sortBy(_.t).map { b =>
-            val (next, o) = step(st, b)
-            st = next
-            o
-          }
-          state.update(st)
+          val core = new Core(state.getOption.getOrElse(zeroState))
+          val out = rows.toSeq.sortBy(_.t).map(core.push)
+          state.update(core.state)
           out.iterator
       }
   }
@@ -193,14 +185,15 @@ object IndicatorStream {
   private def mid(bars: Seq[RingBar]): Double =
     (bars.map(_.h).max + bars.map(_.l).min) / 2
 
-  private def fullStep(st: FullState, b: FullBarIn): (FullState, FullOut) = {
-    val (core, rec) = step(st.core,
-      BarIn(b.id, b.t, b.close, b.volume))
+  /** One bar of the full mart: `core` steps in place; the returned
+    * state carries the new rings (its `core` is stored from `core` once
+    * the micro-batch's bars are in). */
+  private def fullStep(core: Core, st: FullState,
+      b: FullBarIn): (FullState, FullOut) = {
+    val rec = core.push(BarIn(b.id, b.t, b.close, b.volume))
     val ring = (st.ring :+ RingBar(b.high, b.low, b.close)).takeRight(maxRing)
     val rn = core.n // absolute bar count AFTER this bar
     def last(n: Int): Seq[RingBar] = ring.takeRight(n)
-    def when(cond: Boolean)(v: => Double): Option[Double] =
-      if (cond) Some(v) else None
 
     val closes = ring.map(_.c)
     val sma5 = when(rn >= 5)(frameAvg(closes.takeRight(5)))
@@ -247,7 +240,7 @@ object IndicatorStream {
     val aroonUp = aroon(aroonWin.map(_.h), _.max)
     val aroonDown = aroon(aroonWin.map(_.l), _.min)
 
-    val next = FullState(core, ring, rawRing, kRing)
+    val next = FullState(st.core, ring, rawRing, kRing)
     (next, FullOut(b.id, b.t,
       sma5, sma10, sma30, rec.ema5, rec.ema10, rec.ema30,
       rec.macd, rec.macd_single, rec.rsi,
@@ -285,12 +278,13 @@ object IndicatorStream {
         (_: Long, rows: Iterator[FullBarIn], state: GroupState[FullState]) =>
           var st = state.getOption.getOrElse(
             FullState(zeroState, Nil, Nil, Nil))
+          val core = new Core(st.core)
           val out = rows.toSeq.sortBy(_.t).map { b =>
-            val (next, o) = fullStep(st, b)
+            val (next, o) = fullStep(core, st, b)
             st = next
             o
           }
-          state.update(st)
+          state.update(st.copy(core = core.state))
           out.iterator
       }
   }

@@ -135,6 +135,68 @@ class DotProductSpec extends AnyFunSuite {
     }
   }
 
+  /** One SQL call per function of [[graft.functions.TaFunctions.sqlFunctions]],
+    * over `fn_in` (id, x, v: array<double>, toks: array<string>,
+    * s: string, hs: array<bigint>). */
+  private val sqlCalls: Map[String, String] = {
+    val run = "OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    Map(
+      "ema" -> s"ema(x, 3) $run",
+      "wilder_ma" -> s"wilder_ma(x, 3) $run",
+      "wilder_rsi" -> s"wilder_rsi(x, 3) $run",
+      "dot_product" -> "dot_product(v, v)",
+      "word_shingles" -> "word_shingles(toks, 2)",
+      "minhash_sig" -> "minhash_sig(toks, 4)",
+      "minhash_sig_md5" -> "minhash_sig_md5(toks, 4)",
+      "sorted_hashes" -> "sorted_hashes(toks)",
+      "sorted_intersect_count" -> "sorted_intersect_count(hs, hs)",
+      "sq_diff_sum" -> "sq_diff_sum(v, v)",
+      "simhash32" -> "simhash32(toks)",
+      "simhash64" -> "simhash64(toks)",
+      "sorted_run_stats" -> "sorted_run_stats(hs)",
+      "rolling_fp" -> "rolling_fp(toks)",
+      "nfc_normalize" -> "nfc_normalize(s)",
+      "quantize_i8" -> "quantize_i8(v)",
+      "quantized_dot" -> "quantized_dot(quantize_i8(v), quantize_i8(v))",
+      "bottom_k_sketch" -> "bottom_k_sketch(x, id, 2)")
+  }
+
+  test("every function of the shared table resolves via register and via GraftExtensions") {
+    import org.apache.spark.sql.SparkSession
+    val names = graft.functions.TaFunctions.sqlFunctions.map(_.name)
+    assert(names.distinct.size == names.size)
+    assert(names.toSet == sqlCalls.keySet)
+    def resolveAll(s: SparkSession, how: String): Unit = {
+      import s.implicits._
+      Seq((1L, 2.0, Array(1.0, -2.0), Array("a", "b", "c"), "x", Array(1L, 3L)))
+        .toDF("id", "x", "v", "toks", "s", "hs").createOrReplaceTempView("fn_in")
+      names.foreach { name =>
+        val q = s"SELECT ${sqlCalls(name)} FROM fn_in"
+        try s.sql(q).queryExecution.assertAnalyzed()
+        catch { case e: org.apache.spark.sql.AnalysisException =>
+          fail(s"$name does not resolve via $how: ${e.getMessage}")
+        }
+      }
+    }
+    val base = spark
+    graft.functions.TaFunctions.register(base)
+    resolveAll(base, "register")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val ext = SparkSession.builder()
+        .master("local[2]")
+        .config("spark.sql.shuffle.partitions", "2")
+        .withExtensions(new graft.functions.GraftExtensions())
+        .getOrCreate()
+      assert(ext ne base)
+      resolveAll(ext, "GraftExtensions")
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("interpreted eval agrees with codegen") {
     // force the interpreted path via an expression position codegen
     // cannot reach uniformly: eval through a literal-driven projection

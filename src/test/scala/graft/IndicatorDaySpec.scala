@@ -185,8 +185,7 @@ class IndicatorDaySpec extends AnyFunSuite {
     snap.write.mode("overwrite").parquet(dir)
     val loaded = spark.read.parquet(dir)
     val viaDisk = IndicatorDay.incrementalFrom(bars, loaded, lit(fromT),
-        carry = Seq("t"), tailBars = 77,
-        IndicatorDay.exceptionalIds, IndicatorDay.nMultiple)
+        carry = Seq("t"), tailBars = 77)
       .where(col("_live"))
     val derived = IndicatorDay.incrementalFrom(bars, lit(fromT),
         carry = Seq("t"))

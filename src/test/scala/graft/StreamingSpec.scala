@@ -544,8 +544,7 @@ class StreamingSpec extends AnyFunSuite {
         col(s"$g.rsi").as("rsi_st"))
     val bars = Bars.hourly(events).withColumn("tkey", col("t"))
     val viaStream = IndicatorDay.incrementalFrom(bars, handedOff,
-        lit(fromT), carry = Seq("t"), tailBars = 77,
-        IndicatorDay.exceptionalIds, IndicatorDay.nMultiple)
+        lit(fromT), carry = Seq("t"), tailBars = 77)
       .where(col("_live"))
     val derived = IndicatorDay.incrementalFrom(bars, lit(fromT),
         carry = Seq("t"))

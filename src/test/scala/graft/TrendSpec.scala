@@ -6,8 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ATR/ADX trend chain ([[Trend]]) and the generic Wilder smoothing
-  * aggregate it rides on ([[graft.functions.WilderMa]]).
+/** ATR/ADX trend chain ([[Trend]]) and the Wilder smoothing it rides
+  * on (`wilder_ma`: [[graft.functions.Ema]] of kind
+  * [[graft.functions.Ema.Wilder]]).
   */
 class TrendSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
