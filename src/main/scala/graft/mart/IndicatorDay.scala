@@ -51,11 +51,6 @@ import org.apache.spark.sql.functions._
   */
 object IndicatorDay {
 
-  /** The crypto scaling path ([[MartConfig.crypto]]): the symbols that
-    * take it and their multiplier. */
-  val exceptionalIds: Seq[Long] = MartConfig.crypto.exceptionalIds
-  val nMultiple: Double = MartConfig.crypto.nMultiple
-
   /** Stock-indicator columns in reference DDL order (indicator part). */
   val indicatorCols: Seq[String] = Seq(
     "macd", "macd_single", "rsi",

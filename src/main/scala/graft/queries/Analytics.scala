@@ -31,11 +31,23 @@ object Analytics extends QueryPack {
     * (a, b, w = co-occurrence count) — one self-join serves both the
     * unweighted graph family (drops w; the groupBy keys are already
     * distinct) and weighted PageRank.
+    *
+    * The projection is hash-partitioned on the join key before the
+    * self-join: a fixture scan is one row group, so one task reads
+    * every row, and a join probed in that scan (a broadcast join's
+    * streamed side) runs the join and the pair aggregate's partial on
+    * one core. Both sides reuse the one exchange, and the probe runs in
+    * every post-shuffle partition. The shuffled hash join is hinted:
+    * where the shuffled side is small, AQE would otherwise broadcast
+    * it, one more job for the same partition-local join. Its build side
+    * is one post-shuffle partition, and no order key is large (at most
+    * 17 lines an order in the fixtures), so skew cannot outgrow it.
     */
-  private val coPurchaseEdgesW = memo("copurchase_edges") { (s, d) =>
+  private[graft] val coPurchaseEdgesW = memo("copurchase_edges") { (s, d) =>
     val li = t("lineitem")(s, d)
       .select(col("l_orderkey"), col("l_partkey"))
-    li.as("a").join(li.as("b"),
+      .repartition(col("l_orderkey"))
+    li.as("a").join(li.as("b").hint("shuffle_hash"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") =!= col("b.l_partkey"))
       .groupBy(col("a.l_partkey").as("a"), col("b.l_partkey").as("b"))

@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnnAdmissionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: greedy over admitted-only state — a doc near a " +
       "REJECTED doc but not near any admitted one is admitted") {

@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DistinctCounterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: register fold is max, any order, duplicates free") {
     val rows = Seq(1 -> 3, 2 -> 5, 1 -> 7, 2 -> 2, 1 -> 7)

@@ -11,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriftMonitorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   // reference: uniform over 4 bins (edges 1, 2, 3)
   private val ref = Seq(0.25, 0.25, 0.25, 0.25)

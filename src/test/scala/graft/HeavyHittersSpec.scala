@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class HeavyHittersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: exact regime (distinct <= m) is an exact count map") {
     val keys = Seq("a", "a", "b", "c", "a", "b")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.mart.IndicatorDay
+import graft.mart.{IndicatorDay, MartConfig}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,14 +61,13 @@ class IndicatorDaySpec extends AnyFunSuite {
     val vals = mart.select(col("id"), col("n_multiple")).distinct()
       .collect().map(r => r.getLong(0) -> r.getFloat(1)).toMap
     vals.foreach { case (id, nm) =>
-      if (IndicatorDay.exceptionalIds.contains(id)) assert(nm == 1000.0f)
+      if (MartConfig.crypto.exceptionalIds.contains(id)) assert(nm == 1000.0f)
       else assert(nm == 1.0f)
     }
   }
 
   test("config-driven multi-asset: crypto mapping == default path; " +
       "forex mapping never scales") {
-    import graft.mart.MartConfig
     val bars = graft.ts.Bars.hourly(events)
     // crypto-style source: volume arrives as `amount` — the configured
     // run must equal the hard-wired hourly path column-for-column
@@ -82,7 +81,7 @@ class IndicatorDaySpec extends AnyFunSuite {
     val forex = IndicatorDay.hourlyConfigured(MartConfig.forex)(bars)
     assert(forex.where(col("n_multiple") =!= 1.0).count() == 0)
     assert(forex.where(col("id")
-      .isin(IndicatorDay.exceptionalIds: _*)).count() > 0)
+      .isin(MartConfig.crypto.exceptionalIds: _*)).count() > 0)
   }
 
   test("zero -> NULL reference edge: first OBV row per symbol is NULL") {
@@ -181,7 +180,7 @@ class IndicatorDaySpec extends AnyFunSuite {
     val fromT = 1705708800L
     val bars = graft.ts.Bars.hourly(events).withColumn("tkey", col("t"))
     val snap = IndicatorDay.stateSnapshot(bars.where(col("tkey") < fromT))
-    val dir = java.nio.file.Files.createTempDirectory("mart-state").toString
+    val dir = TestSpark.tmp("mart-state")
     snap.write.mode("overwrite").parquet(dir)
     val loaded = spark.read.parquet(dir)
     val viaDisk = IndicatorDay.incrementalFrom(bars, loaded, lit(fromT),

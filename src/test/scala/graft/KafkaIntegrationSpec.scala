@@ -29,8 +29,7 @@ class KafkaIntegrationSpec extends AnyFunSuite {
     // unique topic per run: earliest-offset reads must not see a
     // previous run's messages
     val topic = s"graft_it_${System.nanoTime()}"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_kafka_it")
-      .toString
+    val tmp = TestSpark.tmp("graft_kafka_it")
     // produce through the connector's batch write path; key k7 is sent
     // twice so the sink's PK dedup has something to drop
     val msgs = (1 to 20).map(i => (s"k$i", s"""{"id":$i}""")) :+

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PartitionIOSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("partio").toString
+  import TestSpark.tmp
 
   private def mkRows(days: Seq[Int], tag: String) = {
     import spark.implicits._
@@ -21,7 +20,7 @@ class PartitionIOSpec extends AnyFunSuite {
   }
 
   test("reload overwrites only the window partitions; re-run converges") {
-    val path = tmp()
+    val path = tmp("partio")
     // Base load: days 1..20 tagged 'base'.
     PartitionIO.overwritePartitions(
       PartitionIO.withDayPartitions(mkRows(1 to 20, "base"), "dt"),
@@ -45,7 +44,7 @@ class PartitionIOSpec extends AnyFunSuite {
   }
 
   test("hour-grain reload overwrites only the window; re-run converges") {
-    val path = tmp()
+    val path = tmp("partio")
     PartitionIO.overwritePartitions(
       PartitionIO.withHourPartitions(mkHourRows(0 to 19, "base"), "ts"),
       path, Seq("year", "month", "day", "hour"))
@@ -62,7 +61,7 @@ class PartitionIOSpec extends AnyFunSuite {
   }
 
   test("ORC format option: partitioned roundtrip preserves rows and types") {
-    val path = tmp()
+    val path = tmp("partio")
     PartitionIO.overwritePartitions(
       PartitionIO.withDayPartitions(mkRows(1 to 5, "a"), "dt"),
       path, Seq("year", "month", "day"), format = "orc")
@@ -80,7 +79,7 @@ class PartitionIOSpec extends AnyFunSuite {
 
   test("append_new_columns: widens without rewrite, never drops, " +
       "rejects type flips") {
-    val path = tmp()
+    val path = tmp("partio")
     // v1 era: (id, dt, tag, v) over days 1..10
     PartitionIO.appendNewColumns(
       PartitionIO.withDayPartitions(mkRows(1 to 10, "v1"), "dt"),
@@ -112,7 +111,7 @@ class PartitionIOSpec extends AnyFunSuite {
   }
 
   test("overwrite leaves partitions absent from the update untouched") {
-    val path = tmp()
+    val path = tmp("partio")
     PartitionIO.overwritePartitions(
       PartitionIO.withDayPartitions(mkRows(1 to 5, "a"), "dt"),
       path, Seq("year", "month", "day"))

@@ -13,8 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class QuantileSketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: bottom-k fold is order-independent and split folds " +
       "merge to the same sample (the KMV merge law)") {

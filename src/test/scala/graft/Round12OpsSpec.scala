@@ -22,8 +22,7 @@ class Round12OpsSpec extends AnyFunSuite {
       StructField("value", DoubleType)))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_srm")
-      .toString
+    val dir = TestSpark.tmp("graft_r12_srm")
     empty.write.parquet(s"$dir/events.parquet")
     val rows = SparkEntry.queries("q290_srm")(spark, dir).collect()
     assert(rows.length == 1)

@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: gap fold closes on strict gap, carries state across " +
       "calls, counts ties in one session") {

@@ -1,7 +1,11 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+  LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.StreamConverters._
+import scala.util.Using
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.storage.RDDBlockId
@@ -21,6 +25,21 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]()
+  sys.addShutdownHook(tmpDirs.forEach { d =>
+    // children before parents: the walk lists a directory before its
+    // entries
+    Using(Files.walk(d))(_.toScala(List).reverse.foreach(Files.deleteIfExists))
+  })
+
+  /** A new temporary directory, deleted with everything under it when
+    * the test JVM exits. */
+  def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
   }
 
   /** Spark jobs `f` starts: listener-counted up to a marker job, which
@@ -85,10 +104,12 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** The executed plan of every `localCheckpoint` action `f` runs, in
-    * order: listener-collected up to a marker action, which the
-    * listener bus delivers after every earlier query's `onSuccess`. */
-  def checkpointPlansDuring(f: => Unit): Seq[SparkPlan] = {
+  /** The executed plan of every `localCheckpoint` action `f` runs on
+    * `session`, in order: listener-collected up to a marker action,
+    * which the listener bus delivers after every earlier query's
+    * `onSuccess`. */
+  def checkpointPlansDuring(f: => Unit,
+      session: SparkSession = spark): Seq[SparkPlan] = {
     val marker = "test_checkpoint_plans_marker"
     val seen = new LinkedBlockingQueue[Option[SparkPlan]]()
     val listener = new QueryExecutionListener {
@@ -99,14 +120,14 @@ object TestSpark {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
+    session.listenerManager.register(listener)
     try {
       f
-      spark.range(1).toDF(marker).collect()
+      session.range(1).toDF(marker).collect()
       Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
           .getOrElse(throw new AssertionError(
             "marker query never reached the listener")))
         .takeWhile(_.nonEmpty).flatten.toSeq
-    } finally spark.listenerManager.unregister(listener)
+    } finally session.listenerManager.unregister(listener)
   }
 }

@@ -18,8 +18,7 @@ class StreamingSpec extends AnyFunSuite {
       s""""open":"$close","close":"$close","amount":"10.0","quantity":"1.0",""" +
       s""""tradeCount":"3","ts_send":"$ts","startTime":"$ts","closeTime":"$ts"}]}"""
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("candles stream: parse + foreachBatch sink + checkpoint recovery") {
     implicit val sqlCtx = spark.sqlContext
@@ -446,14 +445,13 @@ class StreamingSpec extends AnyFunSuite {
   test("online FULL mart across micro-batches == batch indicators sans chikou") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.mart.IndicatorDay
+    import graft.mart.{IndicatorDay, MartConfig}
     import graft.stream.IndicatorStream
     import graft.stream.IndicatorStream.FullBarIn
     import graft.ts.Bars
 
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val nm = when(col("id").isin(IndicatorDay.exceptionalIds: _*),
-      lit(IndicatorDay.nMultiple)).otherwise(lit(1.0))
+    val nm = MartConfig.crypto.nMultipleCol
     val bars = Bars.hourly(events).select(col("id"), col("t"),
       (col("high") * nm).as("high"), (col("low") * nm).as("low"),
       (col("close") * nm).as("close"), col("volume"))
@@ -492,7 +490,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream state store hands off to the batch incremental refresh") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.mart.IndicatorDay
+    import graft.mart.MartConfig
     import graft.stream.IndicatorStream
     import graft.stream.IndicatorStream.BarIn
     import graft.ts.Bars
@@ -500,9 +498,7 @@ class StreamingSpec extends AnyFunSuite {
     // the stream consumes the prefix (scaled closes, the mart's input
     // convention), persisting per-symbol state in the checkpoint
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val scaled = (col("close") *
-      when(col("id").isin(IndicatorDay.exceptionalIds: _*),
-        lit(IndicatorDay.nMultiple)).otherwise(lit(1.0))).as("close")
+    val scaled = (col("close") * MartConfig.crypto.nMultipleCol).as("close")
     val fromT = 1705708800L
     val prefix = Bars.hourly(events)
       .select(col("id"), col("t"), scaled, col("volume"))
@@ -558,14 +554,13 @@ class StreamingSpec extends AnyFunSuite {
   test("onlineMart state (nested core) also hands off to the batch refresh") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.mart.IndicatorDay
+    import graft.mart.MartConfig
     import graft.stream.IndicatorStream
     import graft.stream.IndicatorStream.FullBarIn
     import graft.ts.Bars
 
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val nm = when(col("id").isin(IndicatorDay.exceptionalIds: _*),
-      lit(IndicatorDay.nMultiple)).otherwise(lit(1.0))
+    val nm = MartConfig.crypto.nMultipleCol
     val fromT = 1705708800L
     val prefix = Bars.hourly(events).select(col("id"), col("t"),
         (col("high") * nm).as("high"), (col("low") * nm).as("low"),
@@ -588,7 +583,7 @@ class StreamingSpec extends AnyFunSuite {
   test("online indicator stream across micro-batches == batch recompute") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.mart.IndicatorDay
+    import graft.mart.MartConfig
     import graft.stream.IndicatorStream
     import graft.stream.IndicatorStream.BarIn
     import graft.functions.TaFunctions
@@ -596,9 +591,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
 
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val scaled = (col("close") *
-      when(col("id").isin(IndicatorDay.exceptionalIds: _*),
-        lit(IndicatorDay.nMultiple)).otherwise(lit(1.0))).as("close")
+    val scaled = (col("close") * MartConfig.crypto.nMultipleCol).as("close")
     val bars = Bars.hourly(events)
       .select(col("id"), col("t"), scaled, col("volume"))
     val all = bars.as[BarIn].collect().sortBy(b => (b.t, b.id))

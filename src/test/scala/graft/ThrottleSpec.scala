@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ThrottleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  import TestSpark.tmp
 
   test("kernel: first passes, in-cooldown suppressed, suppression " +
       "does not reset the clock, prior state carries") {
