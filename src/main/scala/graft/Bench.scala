@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR
@@ -20,7 +21,10 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
   * passes over the whole query list — not back-to-back per query — so
   * a time-localized load burst lands in at most one sample of any
   * query and the median discards it. All raw samples are recorded in
-  * bench_queries.json under "samples".
+  * bench_queries.json under "samples", and beside them, under
+  * "compiles", the number of generated classes Spark compiled during
+  * each sample ("compiles_total": the whole run's count). A sample
+  * that compiles is paying code generation, not only its own work.
   *
   * Wall-time control (r13): queries whose every sample so far ran
   * under SPARK_GRAFT_BENCH_FAST_CUTOFF (default 0.5 s) are not
@@ -73,6 +77,9 @@ object Bench {
     val fastCutoff = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_FAST_CUTOFF", "0.5").toDouble
     val spark = SessionTuning.local(cpus, cpus, "WARN")
+    // JVM-wide, so local-mode executor compilations count too
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles0 = compiles
     // Absorb JVM/codegen/session warm-up outside the measured loop so
     // the alphabetically-first query doesn't carry it (r1: the first
     // query absorbed ~10s of warm-up). The warm-up must include a real
@@ -162,9 +169,10 @@ object Bench {
       else SharedBuilds.all.filter(b => only.contains("b_" + b.name))
     // pass-major sampling: all queries once, then again — see scaladoc.
     // Each sample remembers its PASS and its adjacent micro-probe
-    // reading so it can be normalized per sample.
+    // reading so it can be normalized per sample, and the classes
+    // compiled while it ran.
     val samples =
-      collection.mutable.Map.empty[String, List[(Int, Double, Double)]]
+      collection.mutable.Map.empty[String, List[(Int, Double, Double, Long)]]
         .withDefaultValue(Nil)
     val errors = collection.mutable.Map.empty[String, Int]
       .withDefaultValue(0)
@@ -183,11 +191,12 @@ object Bench {
         // every job to its bench entry
         spark.sparkContext.setJobDescription(s"$bn rep$rep")
         val mp = microProbe()
+        val c0 = compiles
         val t0 = System.nanoTime()
         try Checkpoints.scoped {
           b.force(spark, sfDir)
-          if (rep > 0) samples(bn) =
-            samples(bn) :+ ((rep, (System.nanoTime() - t0) / 1e9, mp))
+          if (rep > 0) samples(bn) = samples(bn) :+
+            ((rep, (System.nanoTime() - t0) / 1e9, mp, compiles - c0))
         } catch {
           case e: Throwable =>
             System.err.println(
@@ -237,6 +246,7 @@ object Bench {
         else {
         spark.sparkContext.setJobDescription(s"$name pass$pass")
         val mp = microProbe()
+        val c0 = compiles
         val t0 = System.nanoTime()
         // the end time is taken inside the scope, so the release of
         // the checkpoints the entry's frame reads is not timed
@@ -246,8 +256,8 @@ object Bench {
           val df = fn(spark, sfDir)
             .select(xxhash64(struct(col("*"))).as("h"))
           df.agg(expr("bit_xor(h)")).collect()
-          samples(name) =
-            samples(name) :+ ((pass, (System.nanoTime() - t0) / 1e9, mp))
+          samples(name) = samples(name) :+
+            ((pass, (System.nanoTime() - t0) / 1e9, mp, compiles - c0))
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED (pass $pass): ${e.getMessage}")
@@ -294,7 +304,7 @@ object Bench {
     // should read before the raw one
     val resultsNorm = measuredNames.map { name =>
       name -> (if (failed.contains(name)) -1.0
-        else median(samples(name).map { case (_, v, m) => normalize(m, v) }))
+        else median(samples(name).map { case (_, v, m, _) => normalize(m, v) }))
     }
     // value_min (r15 #1b): sum of per-query MIN raw samples — the
     // standard noise-floor estimator for warm benchmarks. Bursts only
@@ -365,13 +375,17 @@ object Bench {
     val familiesJson = families.map { case (f, v) =>
       "\"" + f + "\":" + v }.mkString("{", ",", "}")
     val samplesJson = results.map { case (k, _) =>
-      "\"" + k + "\":" + samples(k).map { case (_, v, _) =>
+      "\"" + k + "\":" + samples(k).map { case (_, v, _, _) =>
         math.rint(v * 1000) / 1000 }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val compilesJson = results.map { case (k, _) =>
+      "\"" + k + "\":" + samples(k).map(_._4).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val compilesTotal = compiles - compiles0
     // adjacent micro-probe readings per sample (full artifact only):
     // the per-sample load context a drift audit divides by
     val microsJson = results.map { case (k, _) =>
-      "\"" + k + "\":" + samples(k).map { case (_, _, m) =>
+      "\"" + k + "\":" + samples(k).map { case (_, _, m, _) =>
         math.rint(m * 10000) / 10000 }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // The driver keeps only a ~2000-char tail of the output: r4's
@@ -415,7 +429,7 @@ object Bench {
     // otherwise (local[*]-style experiments must not break the line)
     val cpusJson = cpusN.fold("\"" + cpus + "\"")(_.toString)
     val fullLine =
-      s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qs,"queries_norm":$qsNorm,"samples":$samplesJson,"micros":$microsJson,"n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"fast_cutoff":$fastCutoff,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"families":$familiesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qs,"queries_norm":$qsNorm,"samples":$samplesJson,"compiles":$compilesJson,"compiles_total":$compilesTotal,"micros":$microsJson,"n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"fast_cutoff":$fastCutoff,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"families":$familiesJson,"sf":"$sfDir"}"""
     // only full runs refresh the committed artifact — an args-filtered
     // local iteration must not clobber the full-query record. A
     // LOW-CORE SCALING run (SPARK_GRAFT_CPUS below the machine's core

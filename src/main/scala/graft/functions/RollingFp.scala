@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * `code(t)` = the first 32 bits of md5(t) (big-endian unsigned).
   *
   * Definitionally identical to the higher-order `aggregate` fold it
-  * replaces ([[graft.llm.TextOps.rollingFingerprintHof]], pinned in
-  * GraftFunctionsProps) — HOF lambdas run INTERPRETED and break
+  * replaces (`ReferenceForms.rollingFingerprintHof` in the tests,
+  * pinned in LlmSpec) — HOF lambdas run INTERPRETED and break
   * whole-stage codegen, which made the fold the per-row bottleneck of
   * the fingerprint scan. A NULL element poisons the fold to NULL,
   * matching the aggregate formulation (`acc·31 + NULL` is NULL and

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * the fingerprint bit is the sign of the token-frequency-weighted ±1
   * sum — definitionally identical to the explode → md5 → per-bit
   * aggregate groupBy formulation it replaces
-  * ([[graft.llm.Dedup.simhashViaAgg]], pinned in MinHashSigSpec), but
+  * (`ReferenceForms.simhashViaAgg` in the tests, pinned in
+  * MinHashSigSpec), but
   * with NO shuffle: the explode/groupBy shape exchanges every token row
   * of the corpus, this one digests each token where the document
   * already sits. Duplicate tokens contribute once per occurrence,

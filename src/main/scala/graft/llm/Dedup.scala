@@ -1538,23 +1538,4 @@ object Dedup {
         GraftSqlShims.column(graft.functions.SimHashFp(
           GraftSqlShims.expression(TextOps.tokens(col("text"))), bits))
           .as("simhash"))
-
-  /** The shuffle-based formulation [[simhash]] replaced — kept as the
-    * executable spec the native kernel is pinned against
-    * (MinHashSigSpec).
-    */
-  private[graft] def simhashViaAgg(docs: DataFrame,
-      bits: Int = simhashBits): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(TextOps.tokens(col("text"))).as("tok"))
-      .withColumn("h", md5(col("tok").cast("binary")))
-    val contribs = (0 until bits).map { j =>
-      val nib = conv(substring(col("h"), 1 + j / 4, 1), 16, 10).cast("int")
-      val bit = shiftright(nib, 3 - j % 4).bitwiseAND(lit(1))
-      sum(bit * 2 - 1).as(s"c$j")
-    }
-    toks.groupBy("doc_id").agg(contribs.head, contribs.tail: _*)
-      .select(col("doc_id"), concat((0 until bits).map(j =>
-        when(col(s"c$j") > 0, "1").otherwise("0")): _*).as("simhash"))
-  }
 }

@@ -128,7 +128,8 @@ object TextOps {
     * Scale shape: ZERO shuffles — the per-doc multiset count collapses
     * into the [[gramRunStats]] map kernel, so the corpus-wide
     * (doc, gram)-keyed exchange the aggregate formulation pays
-    * ([[repetitionStatsViaAgg]], kept as the executable spec) never
+    * (`ReferenceForms.repetitionStatsViaAgg` in the tests, the
+    * executable spec LlmSpec pins this against) never
     * happens. Documents shorter than n tokens have no n-grams and are
     * absent from the output (matching the inner-aggregate semantics).
     */
@@ -143,28 +144,6 @@ object TextOps {
           col("rs.n"), 4).as("dup_frac"),
         round(col("rs.max_run").cast("double") / col("rs.n"), 4)
           .as("top_frac"))
-
-  /** The shuffle-based formulation [[repetitionStats]] replaced — the
-    * executable spec the map kernel is pinned against (LlmSpec;
-    * distinctness there is on gram STRINGS, so the pin also rules out
-    * digest-collision drift on the fixtures).
-    */
-  private[graft] def repetitionStatsViaAgg(docs: DataFrame, n: Int = 2): DataFrame = {
-    val grams = spread(docs).select(col("doc_id"),
-      explode(shingleMultiset(tokens(col("text")), n)).as("g"))
-    grams.groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(
-        sum("c").as("n_grams"),
-        count(lit(1)).as("n_distinct"),
-        max("c").as("max_c"))
-      .select(col("doc_id"),
-        col("n_grams").cast("int").as("n_grams"),
-        col("n_distinct").cast("int").as("n_distinct"),
-        round((col("n_grams") - col("n_distinct")).cast("double") /
-          col("n_grams"), 4).as("dup_frac"),
-        round(col("max_c").cast("double") / col("n_grams"), 4)
-          .as("top_frac"))
-  }
 
   /** Gopher-style document quality gate: every rule metric plus a
     * boolean per rule and the final `keep` — the standard pre-training
@@ -1127,18 +1106,4 @@ object TextOps {
         round(f(coalesce(col("ov2"), lit(0L)), col("ta2"), col("tb2")), 4)
           .cast("float").as("rouge2_f"))
   }
-
-  /** The interpreted higher-order `aggregate` fold [[rollingFingerprint]]
-    * replaced — kept as the executable spec the native kernel is pinned
-    * against bit-for-bit (GraftFunctionsProps). HOF lambdas run
-    * interpreted and break whole-stage codegen, which made this the
-    * per-row bottleneck of the q73 fingerprint scan.
-    */
-  private[graft] def rollingFingerprintHof(text: Column): Column =
-    aggregate(
-      tokens(text),
-      lit(0L),
-      (acc, t) => (acc * 31 +
-        conv(substring(md5(t.cast("binary")), 1, 8), 16, 10).cast("long"))
-        % 1000000007L)
 }

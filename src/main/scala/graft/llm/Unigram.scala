@@ -106,11 +106,12 @@ object Unigram {
     * exactly the extension-monotone argument in the object doc (two
     * prefixes at one (word, pos) cover the same characters, so a
     * common suffix never flips the first struct difference), hence
-    * identical output to the per-round frontier form kept below as
-    * [[viterbiRounds]] (equality asserted in LlmSpec). The loop form
-    * paid ~2 jobs × `maxWordLen` rounds of broadcast-join + struct-min
-    * shuffle + checkpoint per call — 3 calls per train made the EM
-    * job-count the build's dominant cost (guide §1.2/§2.1).
+    * identical output to the per-round frontier form it replaced
+    * (`ReferenceForms.viterbiRounds` in the tests, equality asserted in
+    * LlmSpec). The loop form paid ~2 jobs × `maxWordLen` rounds of
+    * broadcast-join + struct-min shuffle + checkpoint per call — 3
+    * calls per train made the EM job-count the build's dominant cost
+    * (guide §1.2/§2.1).
     * @return (word, freq, ns, np, pieces)
     */
   private[graft] def viterbi(words: DataFrame, vocab: DataFrame,
@@ -161,50 +162,6 @@ object Unigram {
       .where(col("b").isNotNull)
       .select(col("word"), col("freq"), col("b.ns").as("ns"),
         col("b.np").as("np"), col("b.pieces").as("pieces"))
-  }
-
-  /** The original per-round frontier Viterbi — kept (test-only) as the
-    * independent formulation LlmSpec asserts [[viterbi]] equal to.
-    */
-  private[graft] def viterbiRounds(words: DataFrame, vocab: DataFrame,
-      maxPieceLen: Int, maxWordLen: Int): DataFrame = {
-    val v = broadcast(Checkpoints(vocab))
-    var state = words.select(col("word"), col("freq"),
-        lit(0).as("pos"), lit(0L).as("ns"), lit(0).as("np"),
-        array().cast("array<string>").as("pieces"))
-      .transform(Checkpoints(_))
-    (1 to maxWordLen).foreach { _ =>
-      val fin = state.where(col("pos") === length(col("word")))
-      val cand = state.where(col("pos") < length(col("word")))
-        .select(col("word"), col("freq"), col("pos"), col("ns"),
-          col("np"), col("pieces"),
-          explode(sequence(lit(1),
-            least(lit(maxPieceLen), length(col("word")) - col("pos"))))
-            .as("l"))
-        .withColumn("piece", col("word").substr(col("pos") + 1, col("l")))
-        .join(v, Seq("piece"))
-        .select(col("word"), col("freq"),
-          (col("pos") + col("l")).as("pos"),
-          (col("ns") - col("score")).as("ns"),
-          (col("np") + 1).as("np"),
-          concat(col("pieces"), array(col("piece"))).as("pieces"))
-      // finished rows re-enter the min: a path completing later at the
-      // same (word, end) must compete with — not sit beside — the one
-      // that completed earlier
-      state = fin.select(col("word"), col("freq"), col("pos"),
-          col("ns"), col("np"), col("pieces"))
-        .unionByName(cand)
-        .groupBy(col("word"), col("pos"))
-        .agg(min(struct(col("ns"), col("np"), col("pieces"),
-          col("freq"))).as("b"))
-        .select(col("word"), col("pos"), col("b.ns").as("ns"),
-          col("b.np").as("np"), col("b.pieces").as("pieces"),
-          col("b.freq").as("freq"))
-        .transform(Checkpoints(_))
-    }
-    state.where(col("pos") === length(col("word")))
-      .select(col("word"), col("freq"), col("ns"), col("np"),
-        col("pieces"))
   }
 
   /** M-step counts over best segmentations + the character floor:

@@ -1,6 +1,7 @@
 package graft
 
-import graft.llm.{Corpus, Dedup, Multimodal, Similarity, TextOps}
+import graft.llm.{Corpus, Dedup, Multimodal, ReferenceForms, Similarity,
+  TextOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -323,7 +324,7 @@ class LlmSpec extends AnyFunSuite {
         .cast("long").as("score"))
     val a = graft.llm.Unigram.viterbi(words, scored, 4, 16)
       .orderBy("word").collect().map(_.toSeq.toList).toList
-    val b = graft.llm.Unigram.viterbiRounds(words, scored, 4, 16)
+    val b = ReferenceForms.viterbiRounds(words, scored, 4, 16)
       .orderBy("word").collect().map(_.toSeq.toList).toList
     assert(a == b, s"viterbi forms diverge:\n$a\nvs\n$b")
     assert(a.nonEmpty && a.size == 10)
@@ -483,7 +484,7 @@ class LlmSpec extends AnyFunSuite {
     val native = docs.select(col("doc_id"),
       TextOps.rollingFingerprint(col("text")).as("h"))
     val hof = docs.select(col("doc_id"),
-      TextOps.rollingFingerprintHof(col("text")).as("h"))
+      ReferenceForms.rollingFingerprintHof(col("text")).as("h"))
     assert(native.exceptAll(hof).isEmpty && hof.exceptAll(native).isEmpty)
   }
 
@@ -509,7 +510,7 @@ class LlmSpec extends AnyFunSuite {
     val ids = Dedup.simhash(df).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(ids == Set(0L))
-    val viaAgg = Dedup.simhashViaAgg(df).select("doc_id")
+    val viaAgg = ReferenceForms.simhashViaAgg(df).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(viaAgg == Set(0L))
   }
@@ -840,7 +841,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("repetition stats: map kernel equals string-keyed aggregate") {
     val a = TextOps.repetitionStats(docs).orderBy("doc_id").collect()
-    val b = TextOps.repetitionStatsViaAgg(docs).orderBy("doc_id").collect()
+    val b = ReferenceForms.repetitionStatsViaAgg(docs).orderBy("doc_id").collect()
     assert(a.toSeq == b.toSeq)
   }
 

@@ -133,7 +133,7 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("SimHash32 == the explode/md5/32-aggregate groupBy formulation") {
-    val old = graft.llm.Dedup.simhashViaAgg(edged.where(col("text").isNotNull))
+    val old = graft.llm.ReferenceForms.simhashViaAgg(edged.where(col("text").isNotNull))
     val neu = graft.llm.Dedup.simhash(edged.where(col("text").isNotNull))
     assert(neu.count() === old.count())
     val diff = old.withColumnRenamed("simhash", "o")
@@ -144,7 +144,7 @@ class MinHashSigSpec extends AnyFunSuite {
 
   test("SimHashFp(64) == the explode/md5/64-aggregate groupBy formulation") {
     val nn = edged.where(col("text").isNotNull)
-    val old = graft.llm.Dedup.simhashViaAgg(nn, bits = 64)
+    val old = graft.llm.ReferenceForms.simhashViaAgg(nn, bits = 64)
     val neu = graft.llm.Dedup.simhash(nn, bits = 64)
     assert(neu.count() === old.count())
     val diff = old.withColumnRenamed("simhash", "o")

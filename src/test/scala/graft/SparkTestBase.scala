@@ -22,6 +22,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        SessionTuning.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
