@@ -425,11 +425,12 @@ object Bench {
     // parsers comparing artifacts across rounds can branch on it
     // instead of inferring from value == value_norm.
     val mref = math.rint(microRef * 10000) / 10000
-    // cpus as a JSON number when numeric (the driver's shape), quoted
+    // cpus as a JSON number when numeric (the driver's shape), a string
     // otherwise (local[*]-style experiments must not break the line)
-    val cpusJson = cpusN.fold("\"" + cpus + "\"")(_.toString)
+    val cpusJson = cpusN.fold(Verify.jsonString(cpus))(_.toString)
+    val sfJson = Verify.jsonString(sfDir)
     val fullLine =
-      s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qs,"queries_norm":$qsNorm,"samples":$samplesJson,"compiles":$compilesJson,"compiles_total":$compilesTotal,"micros":$microsJson,"n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"fast_cutoff":$fastCutoff,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"families":$familiesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qs,"queries_norm":$qsNorm,"samples":$samplesJson,"compiles":$compilesJson,"compiles_total":$compilesTotal,"micros":$microsJson,"n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"fast_cutoff":$fastCutoff,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"families":$familiesJson,"sf":$sfJson}"""
     // only full runs refresh the committed artifact — an args-filtered
     // local iteration must not clobber the full-query record. A
     // LOW-CORE SCALING run (SPARK_GRAFT_CPUS below the machine's core
@@ -447,7 +448,7 @@ object Bench {
     // filtered local iteration: full detail to stdout instead (the
     // committed artifact stays untouched)
     else println(fullLine)
-    println(s"""{"metric":"total_all_queries","value":$total,"unit":"sec","queries":$qsShort,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_all_queries","value":$total,"unit":"sec","queries":$qsShort,"sf":$sfJson}""")
     // HEADLINE value = the NORMALIZED total (r14 verdict #3, per-sample
     // since r16): raw medians are distorted by driver-host contention;
     // the per-sample-normalized number is the one that survives a
@@ -455,7 +456,7 @@ object Bench {
     // r1–r14 artifacts; value_min is the noise-floor companion (sum of
     // per-query min samples) a comparison should prefer when the run
     // was contended.
-    println(s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"n_queries":${results.size},"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qsTop,"queries_min":$qsTopMin,"queries_shown":"slowest20_norm","n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"sf":"$sfDir","queries_file":"$artifactName"}""")
+    println(s"""{"metric":"total","value":$totalNorm,"unit":"sec","value_kind":"norm","value_raw":$total,"value_norm":$totalNorm,"value_min":$valueMin,"n_queries":${results.size},"cpus":$cpusJson,"calib_sec":$calibSec,"calib_per_pass":$calibPerPassJson,"micro_ref":$mref,"queries":$qsTop,"queries_min":$qsTopMin,"queries_shown":"slowest20_norm","n_samples":$nSamples,"fast_single_sample":$nFastSingle,"stable_two_sample":$nStablePair,"failed":$failedJson,"flaky":$flakyJson,"drift_suspect":$driftJson,"shared_builds":$buildsJson,"build_spread":$buildSpreadJson,"sf":$sfJson,"queries_file":"$artifactName"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

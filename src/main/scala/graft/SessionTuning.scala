@@ -2,41 +2,47 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session tuning for every runner main (Bench / Verify /
-  * Explain / ScaleSmoke) — the guide-§9 "reasonable starting
-  * configuration" subset that is justified at BOTH the local bench
-  * scale and the 100 TB production shape, applied in one place so the
-  * bench, the correctness dump and the plan dumps always agree.
+/** The one session setup of the engine: every runner main (Bench,
+  * Verify, Explain), perfbench and the test session build through here,
+  * so the bench, the correctness dump, the plan dumps and the plan gates
+  * of the tests always run under the same configuration. It is the
+  * guide-§9 "reasonable starting configuration" subset that is justified
+  * at both the local bench scale and the 100 TB production shape.
   *
   * What is set and why (spark_optimization_guide.md §3.1, §9):
   *
-  *   - `spark.sql.join.preferSortMergeJoin=false` — lets the static
-  *     planner pick a SHUFFLED HASH join when its size conditions hold
-  *     (one side's per-partition build fits memory). The suite's
-  *     mid-size joins (gram-keyed candidate joins, label joins against
-  *     node frames) otherwise all plan as sort-merge: both sides pay a
-  *     full sort for joins whose smaller side hashes comfortably. The
-  *     planner's own `canBuildLocalHashMap` guard (side <
-  *     autoBroadcastJoinThreshold × shuffle partitions) still applies,
-  *     so giant×giant joins stay sort-merge — this is a preference
-  *     flip, not a force.
-  *   - `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold` —
-  *     AQE's runtime SMJ→SHJ rewrite bound (default 0 = off). Set to
-  *     the advisory partition size so any post-shuffle partition AQE
-  *     would accept as one task can also skip its sort. Env-overridable
-  *     for production sizing (bigger executors → bigger bound).
+  *   - [[SessionTuning.PreferSortMergeJoin]] — lets the static planner
+  *     pick a SHUFFLED HASH join when its size conditions hold (one
+  *     side's per-partition build fits memory).
+  *   - [[SessionTuning.ShuffledHashJoinLocalMapThreshold]] — AQE's
+  *     runtime SMJ→SHJ rewrite bound.
+  *   - [[SessionTuning.CodegenCacheEntries]] — the generated-class
+  *     cache holds a run's working set.
   *
-  * Both settings change ONLY physical join strategy — never results.
-  * They are parameterized (SPARK_GRAFT_PREFER_SMJ /
-  * SPARK_GRAFT_SHJ_THRESHOLD) so the driver's lower-core-count runs
-  * and a production deployment can size them independently; the
-  * defaults below are the measured-best local values AND the guide's
-  * recommended production baseline.
-  *
-  * One more setting is a constant, not a knob: the generated-class
-  * cache holds [[SessionTuning.CodegenCacheEntries]] classes (see there).
+  * The join settings change ONLY physical join strategy — never
+  * results. All three are constants: no runner or deployment in the
+  * repository has needed another value. The one environment variable
+  * read here is the SPARK_GRAFT_EVENTLOG measurement hook.
   */
 object SessionTuning {
+  /** `spark.sql.join.preferSortMergeJoin`. The suite's mid-size joins
+    * (gram-keyed candidate joins, label joins against node frames)
+    * otherwise all plan as sort-merge: both sides pay a full sort for
+    * joins whose smaller side hashes comfortably. The planner's own
+    * `canBuildLocalHashMap` guard (side < autoBroadcastJoinThreshold ×
+    * shuffle partitions) still applies, so giant×giant joins stay
+    * sort-merge — this is a preference flip, not a force. Measured
+    * better than Spark's default `true` on the 12 join-heaviest entries
+    * (OPTIMIZATION_r17.md: 91.5 s against 102.7 s at local[32]) and the
+    * guide's production baseline. */
+  val PreferSortMergeJoin = false
+
+  /** `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`: AQE's
+    * runtime SMJ→SHJ rewrite bound (Spark's default 0 = off). Set to
+    * the advisory partition size, so any post-shuffle partition AQE
+    * would accept as one task can also skip its sort. */
+  val ShuffledHashJoinLocalMapThreshold = "64m"
+
   /** `spark.sql.codegen.cache.maxEntries`: how many compiled
     * whole-stage-codegen classes Spark keeps in its JVM-wide cache.
     * Spark's default of 100 is smaller than any working set of this
@@ -55,10 +61,11 @@ object SessionTuning {
     * classes changes, never a result. */
   val CodegenCacheEntries = 8192
 
-  /** The session every runner main builds: master `local[cpus]`
-    * (`local[*]` accepted), the given shuffle-partition count (`*` =
-    * the host's cores), the shared UTC / no-UI / nanos-as-long / AQE
-    * configs, [[apply]]'s join tuning, and the log level. */
+  /** The session every runner main and the tests build: master
+    * `local[cpus]` (`local[*]` accepted), the given shuffle-partition
+    * count (`*` = the host's cores), the shared UTC / no-UI /
+    * nanos-as-long / AQE configs, [[apply]]'s tuning, and the log
+    * level. */
   def local(cpus: String, shufflePartitions: String,
       logLevel: String): SparkSession = {
     val parts =
@@ -77,15 +84,11 @@ object SessionTuning {
   }
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val preferSmj =
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-    val shjThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
     val tuned = b
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
+      .config("spark.sql.join.preferSortMergeJoin", PreferSortMergeJoin)
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjThreshold)
+        ShuffledHashJoinLocalMapThreshold)
     // measurement hook (guide §1/§7): SPARK_GRAFT_EVENTLOG=<dir>
     // enables the standard Spark event log so a profiling run's
     // per-job/stage timings can be attributed offline; unset (the

@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `s` as a JSON string literal: backslash, quote and every control
+    * char (< 0x20) escaped — a tab or CR in builder-authored SQL, or a
+    * quote in a directory name, would otherwise make the reader's
+    * json.load fail on the whole artifact. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: only dump these queries (local iteration);
@@ -24,20 +38,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Run-metadata stamp (r11 advice): a byte-identical correctness
     // artifact cannot distinguish a genuine re-run from a copy; this
@@ -51,13 +54,14 @@ object Verify {
     } catch { case _: Throwable => "unknown" }
     val meta = Seq(
       "ts_epoch_ms" -> System.currentTimeMillis.toString,
-      "sf_dir" -> q(sfDir),
+      "sf_dir" -> jsonString(sfDir),
       "n_queries" -> SparkEntry.queries.size.toString,
-      "git_head" -> q(head),
-      "jvm" -> q(System.getProperty("java.version")),
-      "host" -> q(java.net.InetAddress.getLocalHost.getHostName))
+      "git_head" -> jsonString(head),
+      "jvm" -> jsonString(System.getProperty("java.version")),
+      "host" -> jsonString(java.net.InetAddress.getLocalHost.getHostName))
     Files.writeString(Paths.get(s"$outDir/run_meta.json"),
-      meta.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}"))
+      meta.map { case (k, v) => s"${jsonString(k)}: $v" }
+        .mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -54,13 +54,16 @@ object BloomFrame {
     * @return (bf_chunk, bf_bits)
     */
   def build(keys: DataFrame, key: Column, m: Long = 1L << 20,
-      d: Int = 4): DataFrame = {
+      d: Int = 4): DataFrame =
+    buildPos(keys, key.isNotNull, pos(key, _, m), m, d)
+
+  private def buildPos(keys: DataFrame, keyPresent: Column,
+      posOf: Int => Column, m: Long, d: Int): DataFrame = {
     require(d > 0, "bloom filter needs d > 0")
     require(m >= 64 && m % 64 == 0,
       "bloom filter width m must be a positive multiple of 64")
-    val ps = (0 until d).map(i => pos(key, i, m))
-    keys.where(key.isNotNull)
-      .select(explode(array(ps: _*)).as("p"))
+    keys.where(keyPresent)
+      .select(explode(array((0 until d).map(posOf): _*)).as("p"))
       .select(shiftright(col("p"), 6).as("bf_chunk"),
         col("p").bitwiseAND(lit(63L)).cast("int").as("bit"))
       .groupBy("bf_chunk")
@@ -99,31 +102,26 @@ object BloomFrame {
   private def posFast(keyCols: Seq[Column], i: Int, m: Long): Column =
     pmod(xxhash64(lit(i) +: keyCols: _*), lit(m))
 
-  /** [[build]] on the fast-hash family (guide §4: keep the hot path on
-    * codegen-native expressions). Same (chunk, bits) grid contract;
-    * rows where ANY key column is NULL are skipped, mirroring the
-    * md5 family's NULL-key rule for the single-column case.
+  /** The `probes` rows whose `probeKey` may be among the `members`
+    * rows' `memberKey` values: a [[build]] / [[mayContain]] pair on the
+    * fast-hash family (guide §4: keep the hot path on codegen-native
+    * expressions), keeping only the rows that probe true. The two key
+    * lists must hash alike (same arity and types). Rows where ANY key
+    * column is NULL are skipped on both sides, mirroring the md5
+    * family's NULL-key rule for the single-column case. No member is
+    * ever dropped; a false positive survives, so this is a gate in
+    * front of an exact join, not a semi-join.
     */
-  def buildFast(keys: DataFrame, keyCols: Seq[Column], m: Long = 1L << 20,
-      d: Int = 4): DataFrame = {
-    require(d > 0, "bloom filter needs d > 0")
-    require(m >= 64 && m % 64 == 0,
-      "bloom filter width m must be a positive multiple of 64")
-    val ps = (0 until d).map(i => posFast(keyCols, i, m))
-    keys.where(keyCols.map(_.isNotNull).reduce(_ && _))
-      .select(explode(array(ps: _*)).as("p"))
-      .select(shiftright(col("p"), 6).as("bf_chunk"),
-        col("p").bitwiseAND(lit(63L)).cast("int").as("bit"))
-      .groupBy("bf_chunk")
-      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("bf_bits"))
+  def pruneFast(probes: DataFrame, probeKey: Seq[Column],
+      members: DataFrame, memberKey: Seq[Column], m: Long,
+      d: Int): DataFrame = {
+    def present(key: Seq[Column]) = key.map(_.isNotNull).reduce(_ && _)
+    val bloom = buildPos(members, present(memberKey),
+      posFast(memberKey, _, m), m, d)
+    mayContainPos(probes, posFast(probeKey, _, m), present(probeKey),
+        bloom, d)
+      .where(col("bf_maybe")).drop("bf_maybe")
   }
-
-  /** [[mayContain]] on the fast-hash family — pair with [[buildFast]]
-    * (same m, d, key column list). */
-  def mayContainFast(probes: DataFrame, keyCols: Seq[Column],
-      bloom: DataFrame, m: Long = 1L << 20, d: Int = 4): DataFrame =
-    mayContainPos(probes, i => posFast(keyCols, i, m),
-      keyCols.map(_.isNotNull).reduce(_ && _), bloom, d)
 
   private def mayContainPos(probes: DataFrame, posOf: Int => Column,
       keyPresent: Column, bloom: DataFrame, d: Int): DataFrame =

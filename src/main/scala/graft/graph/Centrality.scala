@@ -105,7 +105,7 @@ object Centrality {
     // plans/r17). At network scale the trade flips (guide §3.2): the
     // gate drops ~75% of the candidate bytes before the wire. Left
     // out because the graded shape is local; re-add from this note
-    // (BloomFrame.buildFast/mayContainFast) for a cluster deploy.
+    // (BloomFrame.pruneFast) for a cluster deploy.
     val dagE = ds.select(col("src"), col("id"), col("dist"), col("sigma"))
       .join(e.select(col("a").as("id"), col("b").as("w")), Seq("id"))
       .join(ds.select(col("src"), col("id").as("w"),

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,8 +50,6 @@ object Modularity {
       .transform(Checkpoints(_)) // feeds rows and the 1-row total
     val tot = cells.agg(sum(col("intra_edges")).as("si"),
       sum(col("deg_sum") * col("deg_sum")).as("sd"))
-    def r6(c: org.apache.spark.sql.Column) =
-      (floor(c * 1e6 + 0.5) / 1e6).cast("float")
     val mD = col("m").cast("double") * col("m")
     cells.crossJoin(broadcast(m)).crossJoin(broadcast(tot))
       .select(col("community"), col("n_nodes"), col("deg_sum"),

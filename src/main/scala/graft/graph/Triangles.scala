@@ -196,11 +196,9 @@ object Triangles {
     // two raw long columns stays inside whole-stage codegen and skips
     // the per-wedge string materialization entirely (measured: the
     // md5 probe was the wedge stage's hottest expression).
-    val bloom = graft.functions.BloomFrame.buildFast(
-      closing, Seq(col("x"), col("y")), 1L << 22, 2)
+    val xy = Seq(col("x"), col("y"))
     val gated = graft.functions.BloomFrame
-      .mayContainFast(wedges, Seq(col("x"), col("y")), bloom, 1L << 22, 2)
-      .where(col("bf_maybe")).drop("bf_maybe")
+      .pruneFast(wedges, xy, closing, xy, 1L << 22, 2)
     gated.join(closing, Seq("x", "y"))
       .select(col("src").as("n1"), col("x").as("n2"), col("y").as("n3"))
   }

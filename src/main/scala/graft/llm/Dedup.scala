@@ -869,11 +869,8 @@ object Dedup {
     // fast-hash family (guide §4): this gate is transparent — false
     // positives still fail the downstream exact equi-join — so the
     // md5 digest per probe was pure overhead
-    val bloom = graft.functions.BloomFrame.buildFast(
-      t.where(isNewRow), Seq(key), m, d)
-    graft.functions.BloomFrame.mayContainFast(
-        t.where(!isNewRow), Seq(key), bloom, m, d)
-      .where(col("bf_maybe")).drop("bf_maybe")
+    graft.functions.BloomFrame.pruneFast(
+        t.where(!isNewRow), Seq(key), t.where(isNewRow), Seq(key), m, d)
       .unionByName(t.where(isNewRow))
   }
 
@@ -1141,11 +1138,8 @@ object Dedup {
     // no oracle ever sees these bit positions
     val bandKeyCols = Seq(col("band"), col("bits"))
     val newB = bands.where(col("nw"))
-    val bloom = graft.functions.BloomFrame.buildFast(
-      newB, bandKeyCols, m, d)
-    val gatedOld = graft.functions.BloomFrame.mayContainFast(
-        bands.where(!col("nw")), bandKeyCols, bloom, m, d)
-      .where(col("bf_maybe")).drop("bf_maybe")
+    val gatedOld = graft.functions.BloomFrame.pruneFast(
+      bands.where(!col("nw")), bandKeyCols, newB, bandKeyCols, m, d)
     // x is always a NEW band row; y ranges over gated-old ∪ new. A
     // new×old pair appears once (its old end only ever on y); new×new
     // needs the id order to not double-count. First-collision-band

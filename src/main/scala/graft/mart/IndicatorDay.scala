@@ -3,7 +3,7 @@ package graft.mart
 import graft.functions.TaFunctions
 import graft.ts.Bars
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** `crypto_indicator_day` mart — the reference's primary batch product.
@@ -68,6 +68,17 @@ object IndicatorDay {
     */
   private def edge(c: Column): Column = when(c =!= 0.0, c).cast("float")
 
+  /** One bar's OBV step over the scaled close `cs` in window `w`:
+    * +volume on an up close, −volume on a down close, 0 on a flat close
+    * and on the first bar. */
+  private def obvStep(w: WindowSpec): Column = {
+    val prev = lag(col("cs"), 1).over(w)
+    when(prev.isNull, lit(0.0))
+      .when(col("cs") > prev, col("volume"))
+      .when(col("cs") < prev, -col("volume"))
+      .otherwise(lit(0.0))
+  }
+
   /** Resume-mode helper columns `indicators(resume = true)` expects on
     * its input (all joined per id by [[incrementalFrom]]; the state
     * structs come from [[stateSnapshot]], NULL for ids with no
@@ -90,7 +101,6 @@ object IndicatorDay {
       resume: Boolean = false): DataFrame = {
     val scaled = bars
       .withColumn("n_multiple", cfg.nMultipleCol)
-      .withColumn("os", col("open") * col("n_multiple"))
       .withColumn("hs", col("high") * col("n_multiple"))
       .withColumn("ls", col("low") * col("n_multiple"))
       .withColumn("cs", col("close") * col("n_multiple"))
@@ -145,14 +155,8 @@ object IndicatorDay {
       // (window-over-window is not expressible in one projection).
       // Resume: tail rows step 0 (their sum lives in _obv0); the first
       // live row still lags into the tail for its direction.
-      {
-        val step = when(lag(col("cs"), 1).over(w).isNull, lit(0.0))
-          .when(col("cs") > lag(col("cs"), 1).over(w), col("volume"))
-          .when(col("cs") < lag(col("cs"), 1).over(w), -col("volume"))
-          .otherwise(lit(0.0))
-        (if (resume) when(!col("_live"), lit(0.0)).otherwise(step)
-         else step).as("obv_step")
-      },
+      (if (resume) when(!col("_live"), lit(0.0)).otherwise(obvStep(w))
+       else obvStep(w)).as("obv_step"),
       // Raw stochastic %K; 0 when the 14-bar range is flat (the edge
       // coercion turns that 0 into NULL, as the reference's float(x)
       // coercion does).
@@ -282,10 +286,7 @@ object IndicatorDay {
     val run = w.rowsBetween(Window.unboundedPreceding, 0)
     val s1 = scaled.select(col("id"), col("tkey"),
       row_number().over(w).cast("long").as("rn0"),
-      when(lag(col("cs"), 1).over(w).isNull, lit(0.0))
-        .when(col("cs") > lag(col("cs"), 1).over(w), col("volume"))
-        .when(col("cs") < lag(col("cs"), 1).over(w), -col("volume"))
-        .otherwise(lit(0.0)).as("obv_step"),
+      obvStep(w).as("obv_step"),
       TaFunctions.emaState(col("cs"), 5).over(run).as("ema5_st"),
       TaFunctions.emaState(col("cs"), 10).over(run).as("ema10_st"),
       TaFunctions.emaState(col("cs"), 30).over(run).as("ema30_st"),

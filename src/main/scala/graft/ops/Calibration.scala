@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.cents
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,9 +44,6 @@ import org.apache.spark.sql.functions._
   * fact table except the initial aggregate.
   */
 object Calibration {
-
-  private def cents(c: Column): Column =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   /** Reliability bins + isotonic fit over (score, label) rows.
     *

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -542,8 +543,6 @@ object EventAnalytics {
     val mu = col("sg").cast("double") / nD
     val vr = col("sg2").cast("double") / nD - mu * mu
     val sg = when(vr > 0, sqrt(vr)).otherwise(lit(0d))
-    def r6(c: org.apache.spark.sql.Column) =
-      (floor(c * 1e6 + 0.5) / 1e6).cast("float")
     agg.select(col("id"), col("n").cast("int").as("n_gaps"),
       r6(mu).as("mean_gap_s"),
       // all-zero-gap user (>= minGaps events inside one epoch second)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.cents
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +19,6 @@ import org.apache.spark.sql.functions._
   * wrong across engines.
   */
 object Segmentation {
-
-  private def cents(c: Column): Column =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   /** RFM quintile scores per customer (Hughes 1994): recency (days
     * since last order), frequency (order count), monetary (lifetime

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Checkpoints, Rounds}
+import graft.queries.QueryPack.{cents, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -288,13 +289,6 @@ object Stats {
       when(den > 0, r6((col("n_gt") - col("n_lt")).cast("double") / den))
         .as("delta"))
   }
-
-  /** Exact integer cents of a 2-decimal money double — the repo's
-    * exact-moment currency: decimal cast (unambiguous for 2-decimal
-    * sources) then ×100, so every downstream sum/product is integer
-    * arithmetic rather than order-dependent float accumulation. */
-  private def cents(c: Column): Column =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   /** WELCH's two-sample t-test (unequal variances) over a 2-decimal
     * value column: "do groups g1 and g2 draw from the same mean?" —
@@ -1022,9 +1016,6 @@ object Stats {
       dec(col("n") - col("rk1")), dec(col("rk") - col("rk1")), "right")
     full.unionByName(left).unionByName(right)
   }
-
-  private def r6(c: Column): Column =
-    (floor(c * 1e6 + 0.5) / 1e6).cast("float")
 
   /** Poisson(1) CDF thresholds on the 16-bit uniform scale —
     * `thresholds(k) = round(P(X ≤ k) · 2¹⁶)` for k = 0..7 (all

@@ -1,6 +1,7 @@
 package graft.quality
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -235,7 +236,6 @@ object DataQuality {
       .otherwise(c.cast("double"))
     val p = adj(col("c_ref")) / col("nr")
     val q = adj(col("c_cur")) / col("nc")
-    val r6 = (c: Column) => (floor(c * 1e6 + 0.5) / 1e6).cast("float")
     val contrib = cells.crossJoin(broadcast(totals))
       .withColumn("p_ref", r6(p))
       .withColumn("p_cur", r6(q))
@@ -553,11 +553,9 @@ object DataQuality {
           // exact anti-join, so the oracle never sees the positions.
           // Both sides hash the same string cast (child and parent key
           // types may differ per edge; the cast unifies them).
-          val bloom = graft.functions.BloomFrame.buildFast(
+          graft.functions.BloomFrame.pruneFast(
+            p0, Seq(col("pk").cast("string")),
             c, Seq(col("fk").cast("string")), m, dd)
-          graft.functions.BloomFrame.mayContainFast(
-              p0, Seq(col("pk").cast("string")), bloom, m, dd)
-            .where(col("bf_maybe")).drop("bf_maybe")
         case None => p0
       }
       val orphans = c.join(p, col("fk") === col("pk"), "left_anti")

@@ -42,9 +42,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object QuantileSketch {
 
-  /** A windowed sample observation: h = md5 of the row's unique key. */
-  final case class Obs(ws: Long, h: String, v: Double)
-
   /** Kernel output: one window's exact count + value-sorted sample. */
   final case class WindowSample(window_start: Long, n_rows: Long,
       vs: Seq[Double])

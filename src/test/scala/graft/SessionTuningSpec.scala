@@ -2,15 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import graft.load.PartitionIO
 import graft.mart.{CloseStats, IndicatorDay}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one session setup every runner shares ([[SessionTuning]]) and
-  * what it buys: a generated-class cache that holds a run's working set,
-  * so a plan that runs again reuses its compiled classes. */
+/** The one session setup every runner and the tests share
+  * ([[SessionTuning]]) and what it buys: a generated-class cache that
+  * holds a run's working set, so a plan that runs again reuses its
+  * compiled classes. */
 class SessionTuningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -33,27 +35,50 @@ class SessionTuningSpec extends AnyFunSuite {
       "classes of the first round were evicted and compiled again")
   }
 
-  test("src/main builds a session only through SessionTuning") {
-    // `extensionSession` reuses the live context and sets no config
-    val allowed = Set("SessionTuning.scala" -> None,
-      "LlmPack.scala" -> Some("extensionSession"))
+  /** Every session builder call in the sources under `dir` whose
+    * (file, scope) pair `allowed` does not hold. A builder's scope is
+    * the test it sits in, else the last def before it (`None` allows a
+    * whole file). */
+  private def unsanctionedBuilders(dir: String,
+      allowed: Set[(String, Option[String])]): Seq[String] = {
     val builder = """SparkSession\s*\.\s*builder\b""".r
+    val testName = """\btest\(\s*"([^"]*)"""".r
     val defName = """\bdef\s+(\w+)""".r
-    val root = Paths.get("src/main/scala")
+    def last(r: Regex, text: String): Option[String] =
+      r.findAllMatchIn(text).map(_.group(1)).toSeq.lastOption
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), root.toAbsolutePath)
     val sources = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.size > 100, "the scan found no sources")
-    val hits = for {
+    assert(sources.size > 50, s"the scan found no sources in $dir")
+    for {
       p <- sources
       text = new String(Files.readAllBytes(p), "UTF-8")
       m <- builder.findAllMatchIn(text)
-      enclosing = defName.findAllMatchIn(text.take(m.start))
-        .map(_.group(1)).toSeq.lastOption
+      before = text.take(m.start)
+      enclosing = last(testName, before).orElse(last(defName, before))
       file = p.getFileName.toString
       if !allowed(file -> None) && !allowed(file -> enclosing)
-    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}: " +
-      s"SparkSession.builder in ${enclosing.getOrElse("no def")}"
+    } yield s"$p:${before.count(_ == '\n') + 1}: " +
+      s"session builder in ${enclosing.getOrElse("no def")}"
+  }
+
+  test("src/main builds a session only through SessionTuning") {
+    // `extensionSession` reuses the live context and sets no config
+    val hits = unsanctionedBuilders("src/main/scala", Set(
+      "SessionTuning.scala" -> None,
+      "LlmPack.scala" -> Some("extensionSession")))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/test builds a session only through SessionTuning") {
+    // the two extension sessions reuse the live context and set no
+    // config the plans depend on
+    val hits = unsanctionedBuilders("src/test/scala", Set(
+      "DotProductSpec.scala" ->
+        Some("GraftExtensions injects the round-5 functions into a new session"),
+      "DotProductSpec.scala" -> Some("every function of the shared table " +
+        "resolves via register and via GraftExtensions")))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -13,21 +13,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** One shared local session for all Spark-backed suites. */
+/** One shared local session for all Spark-backed suites: the runners'
+  * own [[SessionTuning.local]], so every plan a test pins is the plan a
+  * runner executes. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        SessionTuning.CodegenCacheEntries.toLong)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SessionTuning.local("4", "4", "WARN")
 
   private val tmpDirs = new ConcurrentLinkedQueue[Path]()
   sys.addShutdownHook(tmpDirs.forEach { d =>
