@@ -30,6 +30,13 @@ class BloomFrameSpec extends AnyFunSuite {
     val bloom = BloomFrame.build(ks, col("k"), m = 1L << 14, d = 4)
     val probed = BloomFrame.mayContain(ks, col("k"), bloom, m = 1L << 14, d = 4)
     assert(probed.where(!col("bf_maybe")).count() == 0)
+    // the fast-hash gate on a two-column key keeps every member row and
+    // drops a row with a NULL key column
+    val kn = ks.select(col("k"), length(col("k")).as("n"))
+      .unionByName(ks.limit(1).select(col("k"), lit(null).cast("int").as("n")))
+    val key = Seq(col("k"), col("n"))
+    val kept = BloomFrame.pruneFast(kn, key, kn, key, m = 1L << 14, d = 4)
+    assert(kept.count() == 500 && kept.where(col("n").isNull).count() == 0)
   }
 
   test("absent keys mostly reject at sane sizing; NULL keys always reject") {
