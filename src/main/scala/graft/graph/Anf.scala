@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.{Checkpoints, Rounds}
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -126,8 +127,7 @@ object Anf {
       .agg(min(col("hop")).as("eff_diameter")))
     cum.crossJoin(ed)
       .select(col("hop"), col("n_nodes"), col("anf_c"),
-        (floor(col("anf_c").cast("double") / col("tot")
-          * 1e6 + 0.5) / 1e6).cast("float").as("frac"),
+        r6(col("anf_c").cast("double") / col("tot")).as("frac"),
         col("eff_diameter"))
   }
 

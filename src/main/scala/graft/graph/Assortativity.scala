@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -102,8 +103,7 @@ object Assortativity {
     val num = d("mm") * d("se") - d("sa2")
     val den = d("mm") * d("mm") - d("sa2")
     m.select(col("n_classes"), col("mm").as("m_edges"),
-      when(den > 0, (floor(num / den * 1e6 + 0.5) / 1e6).cast("float"))
-        .as("r_assort"))
+      when(den > 0, r6(num / den)).as("r_assort"))
   }
 
   /** Rich-club coefficient (Zhou & Mondragón 2004; Colizza et al.
@@ -145,8 +145,8 @@ object Assortativity {
     eK.join(nK, "k")
       .select(col("k"), col("n_nodes"), col("m_edges"),
         when(col("n_nodes") > 1,
-          (floor(col("m_edges").cast("double") /
-            (col("n_nodes").cast("double") * (col("n_nodes") - 1))
-            * 1e6 + 0.5) / 1e6).cast("float")).as("phi"))
+          r6(col("m_edges").cast("double") /
+            (col("n_nodes").cast("double") * (col("n_nodes") - 1))))
+          .as("phi"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.{Checkpoints, Rounds}
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -88,8 +89,7 @@ object Bfs {
       .agg(min(col("hop")).as("eff_diameter")))
     cum.crossJoin(ed)
       .select(col("hop"), col("n_first"), col("cum_reached"),
-        (floor(col("cum_reached").cast("double") / col("tot")
-          * 1e6 + 0.5) / 1e6).cast("float").as("frac"),
+        r6(col("cum_reached").cast("double") / col("tot")).as("frac"),
         col("eff_diameter"))
   }
 }

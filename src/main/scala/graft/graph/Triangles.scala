@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -108,8 +109,8 @@ object Triangles {
         expr("n_closed div 3").as("n_triangles"),
         col("n_wedges"),
         when(col("n_wedges") > 0,
-          (floor(col("n_closed").cast("double") / col("n_wedges")
-            * 1e6 + 0.5) / 1e6).cast("float")).as("transitivity"))
+          r6(col("n_closed").cast("double") / col("n_wedges")))
+          .as("transitivity"))
   }
 
   /** Local clustering coefficient: triangles through a node over its

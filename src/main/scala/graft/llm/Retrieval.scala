@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Checkpoints, Rounds}
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -214,14 +215,11 @@ object Retrieval {
           * col("gain")).as("idcg"))
     per.select(col("query_id"), col("n_ret"),
       coalesce(col("sr"), lit(-1)).as("self_rank"),
-      when(col("sr").isNotNull,
-        (floor(lit(1.0) / col("sr") * 1e6 + 0.5) / 1e6))
-        .cast("float").as("rr"),
+      when(col("sr").isNotNull, r6(lit(1.0) / col("sr"))).as("rr"),
       col("dcg"), col("idcg"),
       when(col("idcg") > 0,
-        floor(col("dcg").cast("double") / col("idcg").cast("double")
-          * 1e6 + 0.5) / 1e6)
-        .cast("float").as("ndcg"))
+        r6(col("dcg").cast("double") / col("idcg").cast("double")))
+        .as("ndcg"))
   }
 
   /** Average precision / precision / recall @ k against an
@@ -276,11 +274,10 @@ object Retrieval {
     per.join(broadcast(rCorpus), Seq("query_id"), "left")
       .na.fill(0L, Seq("n_rel_corpus"))
       .select(col("query_id"), col("n_rel_corpus"), col("n_rel_at_k"),
-        (floor(col("n_rel_at_k").cast("double") / k * 1e6 + 0.5) / 1e6)
-          .cast("float").as("p_at_k"),
+        r6(col("n_rel_at_k").cast("double") / k).as("p_at_k"),
         when(col("n_rel_corpus") > 0,
-          floor(col("n_rel_at_k").cast("double") / col("n_rel_corpus")
-            * 1e6 + 0.5) / 1e6).cast("float").as("recall_at_k"),
+          r6(col("n_rel_at_k").cast("double") / col("n_rel_corpus")))
+          .as("recall_at_k"),
         when(col("n_rel_corpus") > 0,
           expr(s"apn div least(n_rel_corpus, $k)").cast("double") / 1e6)
           .cast("float").as("ap_at_k"))
@@ -412,6 +409,6 @@ object Retrieval {
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("rank_sparse").cast("int").as("rank_sparse"),
         col("rank_dense").cast("int").as("rank_dense"),
-        (floor(col("rrf") * 1e6 + 0.5) / 1e6).cast("float").as("rrf"))
+        r6(col("rrf")).as("rrf"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -349,8 +350,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("s6").cast("decimal(38,0)")).as("ss"))
       .select(col("cell"), col("n_vecs"),
-        (floor(col("ss").cast("double") / col("n_vecs") / 1e6
-          * 1e6 + 0.5) / 1e6).cast("float").as("mean_sil"))
+        r6(col("ss").cast("double") / col("n_vecs") / 1e6).as("mean_sil"))
   }
 
   /** Davies–Bouldin index (Davies & Bouldin 1979) over the same
@@ -403,8 +403,8 @@ object Similarity {
       .agg(count(lit(1)).as("n_clusters"),
         sum(col("m6").cast("decimal(38,0)")).as("sm"))
       .select(col("n_clusters"),
-        (floor(col("sm").cast("double") / col("n_clusters") / 1e6
-          * 1e6 + 0.5) / 1e6).cast("float").as("db_index"))
+        r6(col("sm").cast("double") / col("n_clusters") / 1e6)
+          .as("db_index"))
   }
 
   /** Shared per-point a²/b² frame for [[silhouetteFrom]] /

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
@@ -59,9 +60,8 @@ object TextOps {
       .join(cl, "a").join(cr, "b")
       .crossJoin(broadcast(n))
       .select(col("a"), col("b"), col("c").as("n_ab"),
-        (floor(log(col("n").cast("double") * col("c") /
-          (col("cl").cast("double") * col("cr"))) * 1e6 + 0.5) / 1e6)
-          .cast("float").as("pmi"))
+        r6(log(col("n").cast("double") * col("c") /
+          (col("cl").cast("double") * col("cr")))).as("pmi"))
       .orderBy(col("pmi").desc, col("a"), col("b"))
       .limit(k)
   }
@@ -617,9 +617,8 @@ object TextOps {
           countDistinct(col("gram")).as("distinct_ngrams"))
         .select(lit(n).as("n"), col("total_ngrams"),
           col("distinct_ngrams"),
-          (floor(col("distinct_ngrams").cast("double") /
-            col("total_ngrams") * 1e6 + 0.5) / 1e6).cast("float")
-            .as("distinct_ratio"))
+          r6(col("distinct_ngrams").cast("double") /
+            col("total_ngrams")).as("distinct_ratio"))
     }.reduce(_ unionByName _)
   }
 
@@ -646,8 +645,7 @@ object TextOps {
   private def slopeCol: Column = {
     def d(c: String) = col(c).cast("double")
     val den = d("n") * d("sxx") - d("sx") * d("sx")
-    when(den > 0, floor((d("n") * d("sxy") - d("sx") * d("sy")) / den
-      * 1e6 + 0.5) / 1e6)
+    when(den > 0, r6((d("n") * d("sxy") - d("sx") * d("sy")) / den))
   }
 
   /** Heaps'-law vocabulary-growth curve (Heaps 1978; the V = K·nᵝ
@@ -695,7 +693,7 @@ object TextOps {
       .transform(Checkpoints(_)) // feeds the fit AND the output rows
     val beta = broadcast(logLogMoments(pts, col("n_tokens"),
         col("n_distinct"))
-      .select(slopeCol.cast("float").as("heaps_beta")))
+      .select(slopeCol.as("heaps_beta")))
     pts.crossJoin(beta)
       .select(col("chk"), col("cut").as("cut_id"), col("n_tokens"),
         col("n_distinct"), col("heaps_beta"))
@@ -722,7 +720,7 @@ object TextOps {
       .transform(Checkpoints(_)) // feeds the fit AND the summary row
     val m = logLogMoments(top, col("rnk"), col("cnt"))
       .select(col("n").cast("int").as("n_terms"),
-        slopeCol.cast("float").as("zipf_slope"))
+        slopeCol.as("zipf_slope"))
     top.agg(max(when(col("rnk") === 1, col("cnt"))).as("top_cnt"))
       .crossJoin(broadcast(m))
       .select(col("n_terms"), col("top_cnt"), col("zipf_slope"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -81,11 +82,9 @@ object Concentration {
     def d(c: String) = col(c).cast("double")
     val h = when(col("t") > 0, d("q") / (d("t") * d("t")))
     m.select(col("n_groups"),
-      (floor(h * 1e6 + 0.5) / 1e6).cast("float").as("hhi"),
-      when(h > 0, (floor(lit(1.0) / h * 1e6 + 0.5) / 1e6)
-        .cast("float")).as("effective_n"),
-      when(col("t") > 0, (floor(d("mx") / d("t") * 1e6 + 0.5) / 1e6)
-        .cast("float")).as("top_share"))
+      r6(h).as("hhi"),
+      when(h > 0, r6(lit(1.0) / h)).as("effective_n"),
+      when(col("t") > 0, r6(d("mx") / d("t"))).as("top_share"))
   }
 
   /** Theil T inequality index (Theil 1967) — the entropy-based
@@ -119,7 +118,6 @@ object Concentration {
       .groupBy(col("n")) // constant → one map-side group
       .agg(sum(col("t6").cast("decimal(38,0)")).as("st"))
       .select(col("n").as("n_units"),
-        (floor(col("st").cast("double") / col("n") / 1e6 * 1e6 + 0.5)
-          / 1e6).cast("float").as("theil_t"))
+        r6(col("st").cast("double") / col("n") / 1e6).as("theil_t"))
   }
 }

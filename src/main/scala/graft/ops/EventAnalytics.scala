@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
-import graft.queries.QueryPack.r6
+import graft.queries.QueryPack.{cents, r6}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,7 +99,7 @@ object EventAnalytics {
     val rev = ev.where(col("event_type") === "purchase" &&
         col("value").isNotNull)
       .select(col("user_id"), to_date(col("ts")).as("dt"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"))
+        cents(col("value")).as("v"))
       .join(cohort, "user_id")
       .groupBy(col("cohort_day"),
         datediff(col("dt"), col("cohort_day")).as("offset_day"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.cents
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,8 +41,7 @@ object MlLite {
       xScale: Double = 1e-4, iters: Int = 2): DataFrame = {
     require(iters >= 1, "logistic Newton needs at least one step")
     val base = df.where(col(valueCol).isNotNull)
-      .select(((col(valueCol).cast("decimal(18,2)") * 100)
-          .cast("long").cast("double") * lit(xScale)).as("x"),
+      .select((cents(col(valueCol)).cast("double") * lit(xScale)).as("x"),
         when(isPos, 1.0).otherwise(0.0).as("y"))
       .transform(Checkpoints(_)) // every Newton step re-reads the frame
     def solve(stats: DataFrame): DataFrame = {
@@ -104,8 +104,7 @@ object MlLite {
   def decisionStump(df: DataFrame, valueCol: String,
       isPos: Column): DataFrame = {
     val counts = df.where(col(valueCol).isNotNull)
-      .select((col(valueCol).cast("decimal(18,2)") * 100).cast("long")
-          .as("v"),
+      .select(cents(col(valueCol)).as("v"),
         when(isPos, 1L).otherwise(0L).as("y"))
       .groupBy(col("v"))
       .agg(count(lit(1)).as("c"), sum(col("y")).as("p"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Checkpoints
+import graft.queries.QueryPack.cents
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -73,10 +74,8 @@ object RangeJoin {
     */
   def bandRollup(df: DataFrame, valueCol: String,
       chunkWidth: Long = 4096L): DataFrame = {
-    val cents = (col(valueCol).cast("decimal(18,2)") * 100)
-      .cast("long")
     val base = df.where(col(valueCol).isNotNull)
-      .select(cents.as("v"))
+      .select(cents(col(valueCol)).as("v"))
       .transform(Checkpoints(_)) // feeds the band derivation AND the join
     val counts = base.groupBy(col("v")).agg(count(lit(1)).as("c"))
     val bands = decileBands(counts)

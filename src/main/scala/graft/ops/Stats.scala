@@ -538,11 +538,10 @@ object Stats {
       // single-class input (no positives or no negatives) → AUC is
       // undefined — NULL, not an ANSI 0/0 fault
       when(col("n1") > 0 && col("n2") > 0,
-        (floor((col("r1x2") - col("n1").cast("decimal(38,0)")
+        r6((col("r1x2") - col("n1").cast("decimal(38,0)")
             * (col("n1") + 1)).cast("double")
-          / (lit(2d) * col("n1").cast("double") * col("n2").cast("double"))
-          * 1e6 + 0.5) / 1e6)
-          .cast("float")).as("auc"))
+          / (lit(2d) * col("n1").cast("double") * col("n2").cast("double"))))
+        .as("auc"))
   }
 
   /** Per-group simple OLS fit y = a + b·x with r² — the

@@ -493,7 +493,7 @@ object DataQuality {
       col("sad").cast("double") / col("nc") / col("nn") /
         (col("m") - 1)).otherwise(lit(0.0))
     ag.select(qiCols ++ Seq(col("nc").as("n"),
-      (floor(emdRaw * 1e6 + 0.5) / 1e6).cast("float").as("emd"),
+      r6(emdRaw).as("emd"),
       (emdRaw <= t).as("t_ok")): _*)
   }
 

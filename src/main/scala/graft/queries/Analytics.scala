@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Checkpoints
 import graft.SharedBuilds.memo
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -497,7 +498,7 @@ object Analytics extends QueryPack {
           sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
           sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
         .select(col("n").as("n_units"), col("n0"), col("n1"),
-          (floor(chi2 * 1e6 + 0.5) / 1e6).cast("float").as("chi2"),
+          r6(chi2).as("chi2"),
           (chi2 > 3.841459).as("srm_flag"))
     }),
 
@@ -592,9 +593,7 @@ object Analytics extends QueryPack {
           graft.ops.Stats.normTwoSidedP(col("z_u")))
       graft.ops.Stats.bhFdr(fam, "event_type", "p_u", alpha = 0.1)
         .select(col("event_type"), col("n"),
-          (floor(col("z_u") * 1e6 + 0.5) / 1e6).cast("float").as("z"),
-          (floor(col("p_u") * 1e6 + 0.5) / 1e6).cast("float")
-            .as("p_value"),
+          r6(col("z_u")).as("z"), r6(col("p_u")).as("p_value"),
           col("m_tests"), col("rank"), col("p_adj"), col("signif"))
     }),
 
@@ -640,9 +639,7 @@ object Analytics extends QueryPack {
           graft.ops.Stats.normTwoSidedP(col("z_u")))
       graft.ops.Stats.holmAdjust(fam, "event_type", "p_u",
         alpha = 0.05)
-        .select(col("event_type"), col("n"),
-          (floor(col("p_u") * 1e6 + 0.5) / 1e6).cast("float")
-            .as("p_value"),
+        .select(col("event_type"), col("n"), r6(col("p_u")).as("p_value"),
           col("m_tests"), col("rank"), col("p_adj"), col("signif"))
     }),
 

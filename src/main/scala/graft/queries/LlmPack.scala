@@ -3,6 +3,7 @@ package graft.queries
 import graft.Checkpoints
 import graft.SharedBuilds.memo
 import graft.llm.{Dedup, Multimodal, Pca, Retrieval, Similarity, TextOps}
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.functions._
 
 /** LLM training-data pipeline operators over the documents/embeddings
@@ -366,15 +367,13 @@ object LlmPack extends QueryPack {
         .agg(coalesce(sum(col("rn_").cast("decimal(19,0)") *
           col("cn_").cast("decimal(19,0)")),
           lit(0).cast("decimal(38,0)")).as("pen"))
-      def r6f(c: org.apache.spark.sql.Column) =
-        (floor(c * 1e6 + 0.5) / 1e6).cast("float")
       val po = col("na").cast("double") / col("nn")
       val pe = col("pen").cast("double") /
         (col("nn").cast("double") * col("nn").cast("double"))
       val summary = broadcast(tot.crossJoin(agree).crossJoin(pen)
-        .select(col("nn").as("n_total"), r6f(po).as("po"),
-          r6f(pe).as("pe"),
-          when(pe < 1, r6f((po - pe) / (lit(1d) - pe))).as("kappa")))
+        .select(col("nn").as("n_total"), r6(po).as("po"),
+          r6(pe).as("pe"),
+          when(pe < 1, r6((po - pe) / (lit(1d) - pe))).as("kappa")))
       cells.crossJoin(summary)
         .select(col("declared"), col("predicted"), col("n"),
           col("n_total"), col("po"), col("pe"), col("kappa"))

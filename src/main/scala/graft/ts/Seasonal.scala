@@ -1,5 +1,6 @@
 package graft.ts
 
+import graft.queries.QueryPack.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,13 +119,11 @@ object Seasonal {
     def vr(c: String) =
       (d(s"q_$c") / col("n") -
         (d(s"s_$c") / col("n")) * (d(s"s_$c") / col("n"))) / 1e8
-    def r6f(c: org.apache.spark.sql.Column) =
-      (floor(c * 1e6 + 0.5) / 1e6).cast("float")
     val ft = when(vr("trs") > 0,
       greatest(lit(0.0), lit(1.0) - vr("rs") / vr("trs")))
     val fs = when(vr("srs") > 0,
       greatest(lit(0.0), lit(1.0) - vr("rs") / vr("srs")))
-    m.select(col("id"), col("n"), r6f(ft).as("f_trend"),
-      r6f(fs).as("f_seasonal"))
+    m.select(col("id"), col("n"), r6(ft).as("f_trend"),
+      r6(fs).as("f_seasonal"))
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
 import graft.load.PartitionIO
 import graft.mart.{CloseStats, IndicatorDay}
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -37,26 +36,35 @@ class SessionTuningSpec extends AnyFunSuite {
 
   /** Every session builder call in the sources under `dir` whose
     * (file, scope) pair `allowed` does not hold. A builder's scope is
-    * the test it sits in, else the last def before it (`None` allows a
-    * whole file). */
-  private def unsanctionedBuilders(dir: String,
+    * the innermost `test("...")` or def whose braced body is still open
+    * at the builder (`None` allows a whole file). `minSources` guards
+    * against a scan that silently finds nothing. */
+  private def unsanctionedBuilders(dir: String, minSources: Int,
       allowed: Set[(String, Option[String])]): Seq[String] = {
     val builder = """SparkSession\s*\.\s*builder\b""".r
-    val testName = """\btest\(\s*"([^"]*)"""".r
-    val defName = """\bdef\s+(\w+)""".r
-    def last(r: Regex, text: String): Option[String] =
-      r.findAllMatchIn(text).map(_.group(1)).toSeq.lastOption
+    val scope = """\btest\(\s*"([^"]*)"|\bdef\s+(\w+)""".r
+    // whether the first brace block opened after `from` is open at `at`
+    def holds(text: String, from: Int, at: Int): Boolean = {
+      val open = text.indexOf('{', from)
+      var depth = 0
+      open >= 0 && open < at && text.substring(open, at).forall { ch =>
+        if (ch == '{') depth += 1 else if (ch == '}') depth -= 1
+        depth > 0
+      }
+    }
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), root.toAbsolutePath)
     val sources = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.size > 50, s"the scan found no sources in $dir")
+    assert(sources.size > minSources, s"the scan found no sources in $dir")
     for {
       p <- sources
       text = new String(Files.readAllBytes(p), "UTF-8")
       m <- builder.findAllMatchIn(text)
       before = text.take(m.start)
-      enclosing = last(testName, before).orElse(last(defName, before))
+      enclosing = scope.findAllMatchIn(before).toSeq.reverse
+        .find(sc => holds(text, sc.end, m.start))
+        .map(sc => Option(sc.group(1)).getOrElse(sc.group(2)))
       file = p.getFileName.toString
       if !allowed(file -> None) && !allowed(file -> enclosing)
     } yield s"$p:${before.count(_ == '\n') + 1}: " +
@@ -65,7 +73,7 @@ class SessionTuningSpec extends AnyFunSuite {
 
   test("src/main builds a session only through SessionTuning") {
     // `extensionSession` reuses the live context and sets no config
-    val hits = unsanctionedBuilders("src/main/scala", Set(
+    val hits = unsanctionedBuilders("src/main/scala", 100, Set(
       "SessionTuning.scala" -> None,
       "LlmPack.scala" -> Some("extensionSession")))
     assert(hits.isEmpty, hits.mkString("\n"))
@@ -74,7 +82,7 @@ class SessionTuningSpec extends AnyFunSuite {
   test("src/test builds a session only through SessionTuning") {
     // the two extension sessions reuse the live context and set no
     // config the plans depend on
-    val hits = unsanctionedBuilders("src/test/scala", Set(
+    val hits = unsanctionedBuilders("src/test/scala", 50, Set(
       "DotProductSpec.scala" ->
         Some("GraftExtensions injects the round-5 functions into a new session"),
       "DotProductSpec.scala" -> Some("every function of the shared table " +
